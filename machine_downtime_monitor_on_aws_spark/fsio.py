@@ -43,10 +43,6 @@ def _fs_path(spark: SparkSession, path: str):
     return fs, p
 
 
-def hadoop_path(spark: SparkSession, path: str):
-    return _fs_path(spark, path)[1]
-
-
 def exists(spark: SparkSession, path: str) -> bool:
     fs, p = _fs_path(spark, path)
     return bool(fs.exists(p))

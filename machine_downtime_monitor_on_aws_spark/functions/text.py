@@ -87,23 +87,6 @@ def shingles(text: Column, n: int = 5) -> Column:
     return F.when(n_sh >= 1, make).otherwise(F.array(F.trim(text)))
 
 
-def minhash_signature(shingle_col: Column, num_perms: int) -> Column:
-    """MinHash signature as an array of hex-min strings.
-
-    Permutation k is realized as ``md5(k || ':' || shingle)``; the
-    signature element is the lexicographic min over shingles. Plain
-    strings (not parsed ints) keep it engine-portable: md5 hex and
-    string min are universal.
-    """
-    def perm_min(k: int) -> Column:
-        prefix = f"{k}:"
-        return F.array_min(
-            F.transform(shingle_col, lambda s: F.md5(F.concat(F.lit(prefix), s)))
-        )
-
-    return F.array(*[perm_min(k) for k in range(num_perms)])
-
-
 # Character-trigram profiles for the n-gram language-ID variant:
 # high-frequency trigrams (space-padded word boundaries as '_') per
 # language. A production profile is learned from a corpus; the scoring

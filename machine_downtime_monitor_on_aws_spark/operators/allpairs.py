@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
+from ..session import barrier
 
 
 def _allpairs_doc_sets(
@@ -172,14 +173,9 @@ def allpairs_jaccard_join(
     (jaccard_verified_pairs' semi-join + re-shingle) - a whole second
     corpus scan+explode, deleted here; candidate pairs are consumed
     exactly once, so their own barrier is gone too."""
-    from ..streaming.store import _tracked_local_checkpoint
-
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    # tracked, and the id rides the returned frame: an untracked
-    # barrier here leaked one pinned RDD per streaming exact-dedup
-    # epoch (same class as r17 ADVICE #1)
-    doc_sets = _tracked_local_checkpoint(
+    doc_sets = barrier(
         _allpairs_doc_sets(df, id_col, text_col, shingle_n), eager=False
     )
     cands = _prefix_candidates(doc_sets, threshold)
@@ -205,13 +201,11 @@ def allpairs_jaccard_join(
     # the hash - are bit-identical.
     union = F.col("sz_a") + F.col("sz_b") - inter
     jac = inter.cast("double") / union.cast("double")
-    out = (
+    return (
         pab.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("doc_a", "doc_b", "jaccard")
     )
-    out._spark_graft_ckpt_ids = getattr(doc_sets, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 # ---- Persisted shingle-postings index: O(batch) EXACT near-dup
@@ -380,9 +374,7 @@ def incremental_exact_jaccard(
     # referenced by THREE join legs - materialize the shingling once;
     # hoist=False: the batch is small and the fused form keeps the
     # Generate codegen'd (see shingle_postings' A/B numbers)
-    from ..streaming.store import _tracked_local_checkpoint
-
-    bp = _tracked_local_checkpoint(
+    bp = barrier(
         shingle_postings(batch, id_col, text_col, shingle_n, hoist=False),
         eager=False,
     )
@@ -408,7 +400,7 @@ def incremental_exact_jaccard(
     jac = F.col("__i").cast("double") / (
         F.col("__sa") + F.col("__sb") - F.col("__i")
     ).cast("double")
-    out = (
+    return (
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select(
@@ -417,8 +409,6 @@ def incremental_exact_jaccard(
             "jaccard",
         )
     )
-    out._spark_graft_ckpt_ids = getattr(bp, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 # ---- shingle-index maintenance: recover / compact / purge

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import barrier, release_checkpoint
 
 
 def symbolized_words(
@@ -153,15 +154,10 @@ def bpe_train_merges(
     # Materialize the symbol state once per iteration: without the
     # barrier, iteration i's plan re-runs tokenize + symbolize +
     # group + all i-1 merge folds from scratch (quadratic total
-    # work). Tracked checkpoints so the per-iteration blocks are
-    # freed as soon as the next state is materialized, not at
-    # session end. Only the first checkpoint pays the corpus scan;
-    # the rest materialize the vocabulary-sized frequency table.
-    from ..streaming.store import (
-        _tracked_local_checkpoint,
-        release_checkpoint,
-    )
-
+    # work). Each superseded round's barrier is released as soon as
+    # the next state is materialized, not at scope end. Only the first
+    # barrier pays the corpus scan; the rest materialize the
+    # vocabulary-sized frequency table.
     cur = symbol_word_frequencies(df, text_col)
     out: list[dict] = []
     held: DataFrame | None = None
@@ -175,9 +171,9 @@ def bpe_train_merges(
             # (eager cost two jobs per iteration). The previous
             # state's blocks are released only AFTER that collect -
             # this iteration's lazy checkpoint reads them while
-            # materializing, and a truncated-lineage localCheckpoint
-            # cannot be recomputed once unpersisted.
-            cur = _tracked_local_checkpoint(cur, eager=False)
+            # materializing, and a released barrier cannot be
+            # recomputed.
+            cur = barrier(cur, eager=False)
             top = (
                 cur.select(pair_col, F.col("wcnt"))
                 .groupBy("pair")
@@ -208,11 +204,10 @@ def bpe_train_merges(
     finally:
         if held is not None:
             release_checkpoint(held)
-        # if the argmax collect raised, the in-flight lazy checkpoint
-        # `cur` is not yet `held` - release it too or its registered
-        # blocks leak on the exception path (r17 ADVICE #5). After a
-        # clean loop `cur` is a plain .select() with no tracked ids,
-        # so this is a no-op there.
+        # if the argmax collect raised, the in-flight lazy barrier
+        # `cur` is not yet `held` - release it too or it leaks on the
+        # exception path (r17 ADVICE #5). After a clean loop `cur` is
+        # a plain .select(), so this is a no-op there.
         if cur is not None and cur is not held:
             release_checkpoint(cur)
     return out

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import shingles, tokens
+from ..session import barrier, is_barrier_scan, release_checkpoint
 
 # The one band count every default-band call site shares: the band
 # generator (minhash_band_arrays), the first-matching-band filter, and
@@ -304,22 +305,19 @@ def candidate_pairs_exact(
     filtered where they are produced and never move. At 100 TB the
     pair set is orders of magnitude larger than the corpus, so this
     is the difference between shuffling gigabytes and terabytes."""
-    from ..streaming.store import _is_checkpoint_scan, _tracked_local_checkpoint
-
     # Both self-join sides derive from the SAME band table; without a
     # barrier the whole signature pipeline (tokenize + K md5 per
     # shingle) runs once per side - the r17 plan audit found no
     # ReusedExchange because the planner broadcasts one side, so
     # nothing was shared. The (doc_id, __bands) sliver is doc-count
-    # sized - exactly what a lazy barrier should hold. Pinned ids
-    # ride the result (catalog resource contract). Skip the barrier
-    # when the input is ALREADY a checkpoint scan (the streaming
-    # dedup path hands in an eager tracked checkpoint every
+    # sized - exactly what a lazy barrier should hold. Skip the barrier
+    # when the input is ALREADY a barrier scan (the streaming
+    # dedup path hands in an eager barrier every
     # micro-batch): both join sides then read the same persisted
     # RDD, and a second barrier would be pure cost plus a pinned
     # RDD per epoch (r17 ADVICE #1).
-    if not _is_checkpoint_scan(band_arrays):
-        band_arrays = _tracked_local_checkpoint(band_arrays, eager=False)
+    if not is_barrier_scan(band_arrays):
+        band_arrays = barrier(band_arrays, eager=False)
     banded = band_arrays.select(
         "doc_id", "__bands", F.posexplode("__bands").alias("band_id", "band_hash")
     )
@@ -334,14 +332,12 @@ def candidate_pairs_exact(
         lambda k: f"__ba[{k}]",
         lambda k: f"__bb[{k}]",
     )
-    out = (
+    return (
         a.join(b, ["band_id", "band_hash"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(first)
         .select("doc_a", "doc_b")
     )
-    out._spark_graft_ckpt_ids = getattr(band_arrays, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 def candidate_pairs(
@@ -528,17 +524,15 @@ def connected_components(
     # lazy checkpoint lets those branches race to materialize it
     # (measured 20% slower). The checkpointed e feeds the symmetric
     # union from two subtrees, so it materializes once, not twice.
-    e = el.localCheckpoint(eager=True)
-    edges = (
+    e = barrier(el)
+    edges = barrier(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = barrier(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     def hop(lab: DataFrame) -> DataFrame:
         nbr = (
@@ -576,7 +570,7 @@ def connected_components(
             upd = hop(
                 upd if h == 0 else upd.select("node", "component")
             )
-        comp = upd.localCheckpoint(eager=True)
+        comp = barrier(upd)
         changed = comp.filter(F.col("__chg")).count()
         labels = comp.select("node", "component")
         if changed == 0:
@@ -744,13 +738,12 @@ def jaccard_verified_pairs(
     # Lazy checkpoint: candidates are a sliver of the corpus, so the
     # materialized rows are small - same shape as the caller's pairs
     # checkpoint.
-    sh = (
-        df.join(cand_ids, F.col(id_col) == F.col("__cid"), "left_semi")
-        .select(
+    sh = barrier(
+        df.join(cand_ids, F.col(id_col) == F.col("__cid"), "left_semi").select(
             F.col(id_col).alias("__id"),
             F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("__sh"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     pa = pairs.join(sh.withColumnRenamed("__id", "doc_a").withColumnRenamed("__sh", "sh_a"), "doc_a")
     pab = pa.join(sh.withColumnRenamed("__id", "doc_b").withColumnRenamed("__sh", "sh_b"), "doc_b")
@@ -1073,15 +1066,14 @@ def simhash_neardup_pairs(
     # checkpointed projection: both Hamming-verify sides then read
     # precomputed longs from the cache instead of each re-deriving
     # them from the hex string per consumer (r3 verdict item #2).
-    fp = (
-        simhash_md5(df, id_col, text_col, parallelism=parallelism)
-        .selectExpr(
+    fp = barrier(
+        simhash_md5(df, id_col, text_col, parallelism=parallelism).selectExpr(
             "doc_id",
             "simhash",
             "CAST(conv(substring(simhash, 1, 8), 16, 10) AS BIGINT) AS __hi",
             "CAST(conv(substring(simhash, 9, 8), 16, 10) AS BIGINT) AS __lo",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     band_arr = F.array(
         *[
@@ -1270,19 +1262,14 @@ def write_minhash_index(
     batch hashed with drifted params fails loudly instead of silently
     missing every cross-history duplicate (r4 advice)."""
     from ..sources.lake import write_bucketed_table
-    from ..streaming.store import (
-        _is_checkpoint_scan,
-        _tracked_local_checkpoint,
-        release_checkpoint,
-    )
 
     # barrier before the explode (see _minhash_index_rows): the write
     # materializes immediately, so the pinned band table releases
     # here. Only a barrier THIS call created is released - a caller's
     # checkpoint (the streaming path) stays the caller's to free.
     own = None
-    if not _is_checkpoint_scan(band_arrays):
-        band_arrays = own = _tracked_local_checkpoint(band_arrays, eager=False)
+    if not is_barrier_scan(band_arrays):
+        band_arrays = own = barrier(band_arrays, eager=False)
     try:
         write_bucketed_table(
             _minhash_index_rows(band_arrays), table_name, "band_key", num_buckets
@@ -1315,11 +1302,6 @@ def append_to_minhash_index(
     table's stamped metadata first (a drifted batch would poison the
     index with incomparable hashes)."""
     from ..sources.lake import write_bucketed_table
-    from ..streaming.store import (
-        _is_checkpoint_scan,
-        _tracked_local_checkpoint,
-        release_checkpoint,
-    )
 
     _check_index_params(
         band_arrays.sparkSession,
@@ -1331,8 +1313,8 @@ def append_to_minhash_index(
     # barrier before the explode (see _minhash_index_rows); releases
     # only a barrier this call created
     own = None
-    if not _is_checkpoint_scan(band_arrays):
-        band_arrays = own = _tracked_local_checkpoint(band_arrays, eager=False)
+    if not is_barrier_scan(band_arrays):
+        band_arrays = own = barrier(band_arrays, eager=False)
     try:
         write_bucketed_table(
             _minhash_index_rows(band_arrays),
@@ -1568,8 +1550,6 @@ def incremental_candidate_pairs(
     both members stay connected through the rep, so
     connected-component dedup is unchanged. None (default) = exact
     enumeration - the mode oracle-paired queries use."""
-    from ..streaming.store import _is_checkpoint_scan, _tracked_local_checkpoint
-
     _check_index_params(
         spark, table_name, num_perms=num_perms, num_bands=num_bands, shingle_n=shingle_n
     )
@@ -1587,8 +1567,8 @@ def incremental_candidate_pairs(
     # consumer - measured 1.56 -> 3.8 s on the bench's incremental
     # leg. candidate_pairs_exact detects the checkpoint scan below
     # and adds no second barrier.
-    if not _is_checkpoint_scan(new_band_arrays):
-        new_band_arrays = _tracked_local_checkpoint(new_band_arrays, eager=False)
+    if not is_barrier_scan(new_band_arrays):
+        new_band_arrays = barrier(new_band_arrays, eager=False)
     new_banded = new_band_arrays.select(
         "doc_id",
         "__bands",
@@ -1651,13 +1631,7 @@ def incremental_candidate_pairs(
                 F.greatest("doc_a", "doc_b").alias("doc_b"),
             )
         )
-    vs_self = candidate_pairs_exact(new_band_arrays, num_bands)
-    out = vs_history.unionByName(vs_self)
-    # unionByName drops python-level attrs: re-attach vs_self's
-    # tracked barrier id so the streaming caller's release frees it
-    # (r17 ADVICE #1 - one orphaned pinned RDD per micro-batch).
-    out._spark_graft_ckpt_ids = getattr(vs_self, "_spark_graft_ckpt_ids", ())
-    return out
+    return vs_history.unionByName(candidate_pairs_exact(new_band_arrays, num_bands))
 
 
 def simhash64(

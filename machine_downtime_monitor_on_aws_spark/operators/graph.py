@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import barrier, release_checkpoint
+
 _QUANT = 1_000_000_000.0
 
 
@@ -60,10 +62,9 @@ def pagerank_unrolled(
     truncates every round for the same reason). Quantized sums make
     each iteration deterministic, so semantics are unchanged; each
     new eager checkpoint releases the superseded one immediately, so
-    storage holds ONE pinned node-table copy at a time, and only the
-    live (final) checkpoint's RDD id rides the result (together with
-    the three static graph-table barrier ids, r17) as
-    ``_spark_graft_ckpt_ids`` for release_checkpoint. None (default)
+    storage holds ONE pinned node-table copy at a time; the live
+    (final) one and the three static graph-table barriers (r17) stay
+    pinned until the caller's barrier scope exits. None (default)
     keeps the rank table's unrolled plan fully lazy - right for the
     catalog's few-iteration oracle-paired use; the static
     edges/deg/nodes tables are always lazily barriered (r17) so the
@@ -75,8 +76,6 @@ def pagerank_unrolled(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
-    from ..streaming.store import _tracked_local_checkpoint
-
     # Lazy barriers on the three STATIC graph tables (r17, guide
     # §2.4/§5): edges is consumed once per iteration, deg once per
     # iteration + the final join, nodes iters+1 times - without
@@ -84,36 +83,28 @@ def pagerank_unrolled(
     # (edges), the degree aggregation, and the distinct per consumer,
     # so the shuffle count grows with iters^2-ish re-derivations.
     # The nodes.count() below materializes all three in one job.
-    # Values are untouched (a localCheckpoint is a plan barrier, not
-    # a transformation); the pinned RDD ids ride the result for
-    # release_checkpoint.
-    edges = _tracked_local_checkpoint(
+    # Values are untouched (a barrier truncates the plan, not the
+    # data).
+    edges = barrier(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")).union(
             pairs.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
         ),
         eager=False,
     )
-    deg = _tracked_local_checkpoint(
+    deg = barrier(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree")),
         eager=False,
     )
-    nodes = _tracked_local_checkpoint(
+    nodes = barrier(
         edges.select(F.col("src").alias("node")).distinct(), eager=False
-    )
-    static_ckpt_ids = (
-        getattr(edges, "_spark_graft_ckpt_ids", ())
-        + getattr(deg, "_spark_graft_ckpt_ids", ())
-        + getattr(nodes, "_spark_graft_ckpt_ids", ())
     )
     n = nodes.count()
     if n == 0:
-        out = nodes.select(
+        return nodes.select(
             "node",
             F.lit(0).cast("long").alias("degree"),
             F.lit(0.0).alias("pagerank"),
         )
-        out._spark_graft_ckpt_ids = static_ckpt_ids
-        return out
     pr = nodes.withColumn("pr", F.lit(1.0 / float(n)))
     base = (1.0 - damping) / float(n)
     prev_ckpt: DataFrame | None = None
@@ -155,12 +146,7 @@ def pagerank_unrolled(
             .select("node", "pr")
         )
         if checkpoint_every is not None and (it + 1) % checkpoint_every == 0:
-            from ..streaming.store import (
-                _tracked_local_checkpoint,
-                release_checkpoint,
-            )
-
-            pr = _tracked_local_checkpoint(pr, eager=True)
+            pr = barrier(pr, eager=True)
             # each eager checkpoint supersedes the previous one; free
             # its blocks NOW (it has fully materialized into the new
             # one) so storage holds one node-table copy, not
@@ -168,15 +154,6 @@ def pagerank_unrolled(
             if prev_ckpt is not None:
                 release_checkpoint(prev_ckpt)
             prev_ckpt = pr
-    out = pr.join(deg, pr["node"] == deg["src"]).select(
+    return pr.join(deg, pr["node"] == deg["src"]).select(
         "node", "degree", F.col("pr").alias("pagerank")
     )
-    # only the LIVE (final) checkpoint rides the result for the
-    # caller's release_checkpoint (when the last iterations ran past
-    # a boundary, pr is derived FROM prev_ckpt, whose pin must stay)
-    out._spark_graft_ckpt_ids = static_ckpt_ids + (
-        getattr(prev_ckpt, "_spark_graft_ckpt_ids", ())
-        if prev_ckpt is not None
-        else ()
-    )
-    return out

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, l2_norm
+from ..session import barrier, release_checkpoint
 from .topk import top_k_per_group
 
 
@@ -729,10 +730,10 @@ def rebuild_ivf_index(
     cents = centroids if centroids is not None else sampled_centroids(
         corpus, n_centroids
     )
-    # localCheckpoint both: the rebuild reads the path it will replace,
-    # and the swap must not leave a plan re-reading moved directories
-    corpus = corpus.localCheckpoint(eager=True)
-    cents = cents.localCheckpoint(eager=True)
+    # barrier both: the rebuild reads the path it will replace, and
+    # the swap must not leave a plan re-reading moved directories
+    corpus = barrier(corpus)
+    cents = barrier(cents)
     tmp = path.rstrip("/") + "__rebuilding"
     fsio.delete(spark, tmp)
     build_ivf_index(
@@ -745,6 +746,8 @@ def rebuild_ivf_index(
     if not fsio.rename(spark, tmp, path):
         raise OSError(f"rebuild_ivf_index: could not publish {tmp}")
     fsio.delete(spark, old)
+    release_checkpoint(corpus)
+    release_checkpoint(cents)
 
 
 def rebalance_ivf_index_if_needed(
@@ -893,13 +896,11 @@ def purge_from_ivf_corpus(
         )
     else:
         pred = F.col("list_id").isin([r["list_id"] for r in per_part])
-    # localCheckpoint barrier: the rewrite's lineage reads the very
+    # barrier: the rewrite's lineage reads the very
     # path it dynamic-overwrites (the same reason KeyedParquetStore's
     # plan_upsert materializes) - and it holds only the AFFECTED
     # partitions minus the purged rows, not the corpus
-    from ..streaming.store import _tracked_local_checkpoint, release_checkpoint
-
-    remaining = _tracked_local_checkpoint(
+    remaining = barrier(
         corpus.filter(pred).join(
             F.broadcast(pid), corpus["vec_id"] == F.col("__pid"), "left_anti"
         )
@@ -1057,7 +1058,7 @@ def compact_ivfbin_index(spark: SparkSession, path: str) -> None:
         "vec_id", "signq_code", "list_id"
     )
     # the rewrite reads the directory it replaces - pin the rows
-    codes = codes.localCheckpoint(eager=True)
+    codes = barrier(codes)
     tmp = corpus_dir + "__compacting"
     fsio.delete(spark, tmp)
     codes.withColumn("__epoch", F.lit("base")).write.mode(
@@ -1069,6 +1070,7 @@ def compact_ivfbin_index(spark: SparkSession, path: str) -> None:
     if not fsio.rename(spark, tmp, corpus_dir):
         raise OSError(f"compact_ivfbin_index: could not publish {tmp}")
     fsio.delete(spark, old)
+    release_checkpoint(codes)
 
 
 # session-scoped guard verdicts: the three existence probes cost a

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import barrier
+
 D = 0.75  # absolute discount - exactly representable in binary
 
 
@@ -101,13 +103,7 @@ def kn_scores_from_counts(tr: DataFrame, c3t: DataFrame) -> DataFrame:
     Trigrams of ``tr`` absent from ``c3t`` are DROPPED by the inner
     join (scoring the training corpus itself - the catalog shape -
     never hits this; scoring held-out text under a frozen model
-    should smooth unseen events upstream, the standard OOV story).
-
-    The bigram-type barrier's pinned RDD id rides the result as
-    ``_spark_graft_ckpt_ids`` (callers add their own tr/c3t barrier
-    ids and release after consuming)."""
-    from ..streaming.store import _tracked_local_checkpoint
-
+    should smooth unseen events upstream, the standard OOV story)."""
     ctxt = c3t.groupBy("w1", "w2").agg(
         F.sum("c3").alias("c2"),
         F.count(F.lit(1)).alias("nf"),
@@ -121,7 +117,7 @@ def kn_scores_from_counts(tr: DataFrame, c3t: DataFrame) -> DataFrame:
     # former per-statistic re-aggregations of the type table (one
     # groupBy + one countDistinct + one distinct), at one shuffle of
     # the strictly smaller mids table instead of three of tt.
-    mids = _tracked_local_checkpoint(
+    mids = barrier(
         c3t.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("n1mid")),
         eager=False,
     )
@@ -159,7 +155,7 @@ def kn_scores_from_counts(tr: DataFrame, c3t: DataFrame) -> DataFrame:
         .withColumn("p", p3)
     )
     q = F.floor(F.col("p") * F.lit(1e9) + F.lit(0.5)).cast("long")
-    out = scored.groupBy("doc_id").agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_trigrams"),
         (
             F.sum(q).cast("double")
@@ -168,8 +164,6 @@ def kn_scores_from_counts(tr: DataFrame, c3t: DataFrame) -> DataFrame:
         ).alias("mean_kn_prob"),
         F.min("p").alias("min_kn_prob"),
     )
-    out._spark_graft_ckpt_ids = getattr(mids, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 def kn_trigram_doc_scores(d: DataFrame, toks_col) -> DataFrame:
@@ -182,25 +176,15 @@ def kn_trigram_doc_scores(d: DataFrame, toks_col) -> DataFrame:
     table feeds the counts aggregation AND the scoring join, and the
     counts table feeds every derived statistic - without barriers
     Catalyst re-derives the corpus tokenize+explode per consumer.
-    Lazy tracked localCheckpoints on ``tr`` and ``c3t`` (plus the
+    Lazy barriers on ``tr`` and ``c3t`` (plus the
     bigram-type slice inside kn_scores_from_counts) collapse that to
     ONE corpus explode and ONE counts aggregation. Measured at sf0.1
     (matched warm runs): 3.42 s unbarriered -> 2.35 s barriered ->
     1.66 s with all model statistics derived from the vocab-sized
-    counts table (r15). The pinned RDD ids ride the result as
-    ``_spark_graft_ckpt_ids`` (catalog resource contract: long-lived
-    callers release via streaming.store.release_checkpoint)."""
-    from ..streaming.store import _tracked_local_checkpoint
-
-    tr = _tracked_local_checkpoint(trigram_rows(d, toks_col), eager=False)
-    c3t = _tracked_local_checkpoint(
+    counts table (r15)."""
+    tr = barrier(trigram_rows(d, toks_col), eager=False)
+    c3t = barrier(
         tr.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3")),
         eager=False,
     )
-    out = kn_scores_from_counts(tr, c3t)
-    out._spark_graft_ckpt_ids = (
-        getattr(tr, "_spark_graft_ckpt_ids", ())
-        + getattr(c3t, "_spark_graft_ckpt_ids", ())
-        + getattr(out, "_spark_graft_ckpt_ids", ())
-    )
-    return out
+    return kn_scores_from_counts(tr, c3t)

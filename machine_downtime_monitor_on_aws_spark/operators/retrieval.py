@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import token_count, tokens
+from ..session import barrier
 
 _QUANT = 1_000_000_000.0
 
@@ -185,14 +186,12 @@ def tfidf_rank(
     weighted rows, and the weighted rows feed norms + dots); without
     a barrier Catalyst re-derives the corpus explode + aggregation
     per consumer (the r14 plan audit counted the full postings
-    pipeline twice and eight parquet scans). Lazy tracked
-    localCheckpoints on the postings and on the weighted rows (the
+    pipeline twice and eight parquet scans). Lazy barriers on the
+    postings and on the weighted rows (the
     neardup_jaccard_verified pattern - plain .cache() evaluates
     every branch before the first materialization wins) collapse
     that to ONE corpus explode; every leg reads the stored blocks.
-    The pinned RDD ids ride the result as ``_spark_graft_ckpt_ids``
-    (catalog resource contract: long-lived callers release via
-    streaming.store.release_checkpoint after consuming). Measured
+    Measured
     honestly: at sf0.1 this is a WASH (old 1.91/1.49/1.19 s vs new
     1.98/1.53/1.33 s across matched warm runs - the local explode is
     cheap enough that checkpoint writes offset the saved
@@ -206,10 +205,8 @@ def tfidf_rank(
     sharing no term with the query never enter the ranking."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    from ..streaming.store import _tracked_local_checkpoint
-
     spark = df.sparkSession
-    post_all = _tracked_local_checkpoint(
+    post_all = barrier(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(tokens(F.col(text_col))).alias("term"),
@@ -223,7 +220,7 @@ def tfidf_rank(
     idf = (F.col("__n") + F.lit(1)).cast("double") / (
         F.col("__df") + F.lit(1)
     ).cast("double")
-    weighted = _tracked_local_checkpoint(
+    weighted = barrier(
         post_all.join(dfreq, "term")
         .crossJoin(F.broadcast(stats))
         .withColumn("__w", F.col("tf").cast("double") * idf)
@@ -280,13 +277,6 @@ def tfidf_rank(
         top_n
     )
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    out = cut.withColumn("rnk", F.row_number().over(w)).select(
+    return cut.withColumn("rnk", F.row_number().over(w)).select(
         "doc_id", "score", F.col("rnk").cast("int").alias("rnk")
     )
-    # catalog resource contract: the barriers' pinned RDD ids ride
-    # the result so release_checkpoint can free them deterministically
-    out._spark_graft_ckpt_ids = (
-        getattr(post_all, "_spark_graft_ckpt_ids", ())
-        + getattr(weighted, "_spark_graft_ckpt_ids", ())
-    )
-    return out

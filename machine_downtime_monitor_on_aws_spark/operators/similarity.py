@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot, hyperplanes, l2_norm, sign_bucket
+from ..session import barrier, is_barrier_scan
 
 
 def brute_force_topk(
@@ -215,6 +216,11 @@ def lsh_neardup_pairs(
     partitioning is what spreads the quadratic in-bucket scoring
     across cores (a corpus in one input split would otherwise rescore
     every candidate pair in a single task).
+
+    Resource contract: the bucket table - every input row WITH its
+    full vector, plus bucket and norm - sits behind one lazy
+    :func:`~..session.barrier`, so the pin is corpus-sized, not a
+    sliver. It lives until the caller's ``barrier_scope`` exits.
     """
     if num_planes is None:
         num_planes = recommended_num_planes(approx_row_count(df))
@@ -228,12 +234,9 @@ def lsh_neardup_pairs(
     # barrier every vector runs the sign-plane + norm pipeline (all
     # interpreted higher-order folds) up to four times. The pinned
     # rows carry the vectors, which both sides must read anyway for
-    # the exact-cosine verify. Ids ride the result (catalog resource
-    # contract).
-    from ..streaming.store import _is_checkpoint_scan, _tracked_local_checkpoint
-
-    if not _is_checkpoint_scan(b):
-        b = _tracked_local_checkpoint(b, eager=False)
+    # the exact-cosine verify.
+    if not is_barrier_scan(b):
+        b = barrier(b, eager=False)
     if max_bucket_size is not None:
         w = Window.partitionBy("bucket")
         b = b.withColumn("__bn", F.count(F.lit(1)).over(w)).withColumn(
@@ -287,7 +290,6 @@ def lsh_neardup_pairs(
             .select("id_a", "id_b", "cosine_sim")
         )
         out = out.unionByName(star).distinct()
-    out._spark_graft_ckpt_ids = getattr(b, "_spark_graft_ckpt_ids", ())
     return out
 
 

@@ -58,6 +58,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import barrier
 
 
 def token_lcp(a: Column, b: Column) -> Column:
@@ -232,13 +233,13 @@ def exactsubstr_removed(
     Scale shape (r16 verdict next-round #4 - the duplicated test is
     an aggregate + broadcast probe, NOT a bucket window): the suffix
     table is O(corpus tokens) rows of (doc_id, pos, 32-hex bucket) -
-    no extension column at all - barriered ONCE via a tracked
-    localCheckpoint so its two consumers never re-derive it. The
-    per-bucket count is a groupBy aggregate (map-side combine folds
-    every hot gram to one row per map partition before the
-    counts-only shuffle), the >= 2 filter shrinks it to the
-    duplicated-gram sliver, and the sliver joins back over the
-    checkpoint blocks - AQE broadcasts it at runtime when it fits
+    no extension column at all - barriered ONCE so its two consumers
+    never re-derive it. The per-bucket count is a groupBy aggregate
+    (map-side combine folds every hot gram to one row per map
+    partition before the counts-only shuffle), the >= 2 filter
+    shrinks it to the duplicated-gram sliver, and the sliver joins
+    back over the barrier's blocks - AQE broadcasts it at runtime
+    when it fits
     (the probe then keeps the blocks' own uniform partitioning and
     a pathological boilerplate 8-gram at 100 TB never concentrates
     anywhere) and falls back to a skew-SPLITTABLE sort-merge join
@@ -255,13 +256,10 @@ def exactsubstr_removed(
     range merge, one doc_id join of a span-derived sliver, nested
     higher-order token filter): document text shuffles exactly once,
     boilerplate stays O(W) bucket rows per hot gram, no recall
-    valve. Resource contract: the returned frame carries the
-    barrier's ``_spark_graft_ckpt_ids``; long-lived callers release
-    via ``streaming.store.release_checkpoint``."""
-    from ..streaming.store import _tracked_local_checkpoint
+    valve."""
     from .spans import remove_duplicated_spans
 
-    suf = _tracked_local_checkpoint(
+    suf = barrier(
         suffix_rows(
             docs, id_col, text_col, anchor_tokens, ext_tokens=0,
             parallelism=parallelism,
@@ -280,6 +278,4 @@ def exactsubstr_removed(
         F.col("pos").alias("start_b"),
         F.lit(anchor_tokens).cast("long").alias("span_tokens"),
     )
-    out = remove_duplicated_spans(docs, cut, id_col, text_col, anchor_tokens)
-    out._spark_graft_ckpt_ids = getattr(suf, "_spark_graft_ckpt_ids", ())
-    return out
+    return remove_duplicated_spans(docs, cut, id_col, text_col, anchor_tokens)

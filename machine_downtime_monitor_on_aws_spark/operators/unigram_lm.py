@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..functions.vectors import lit_double_array, lit_string_array
+from ..session import barrier
 
 MAX_WLEN = 12
 MAX_PIECE = 3
@@ -234,20 +235,14 @@ def train_unigram_lm(
     distributed segment+count job, one vocab-sized collect."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    from ..streaming.store import _tracked_local_checkpoint
-
     # Two barriers (r17): ``words`` feeds the seed statistics AND
     # every E-step's segmentation (iters+1 consumers) - without a
     # barrier each consumer re-runs the corpus tokenize+groupBy;
     # ``seed`` feeds two driver collects (chars, top-multi). Both
     # tables are vocabulary-sized (Zipf-collapsed words / bounded
-    # substrings), exactly what a barrier should hold. The pinned ids
-    # ride the returned segmentation frame as _spark_graft_ckpt_ids
-    # (catalog resource contract).
-    words = _tracked_local_checkpoint(words, eager=False)
-    seed = _tracked_local_checkpoint(
-        seed_piece_counts(words, max_piece), eager=False
-    )
+    # substrings), exactly what a barrier should hold.
+    words = barrier(words, eager=False)
+    seed = barrier(seed_piece_counts(words, max_piece), eager=False)
     char_rows = [
         (r["piece"], int(r["cnt"]))
         for r in seed.filter(F.length("piece") == 1).collect()
@@ -278,9 +273,6 @@ def train_unigram_lm(
         )
         vocab = probs_from_counts(kept)
         seg = viterbi_segment_words(words, vocab, max_piece)
-    seg._spark_graft_ckpt_ids = getattr(
-        words, "_spark_graft_ckpt_ids", ()
-    ) + getattr(seed, "_spark_graft_ckpt_ids", ())
     return vocab, seg
 
 

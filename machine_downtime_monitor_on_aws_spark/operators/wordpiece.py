@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import barrier, release_checkpoint
 from .bpe import adjacent_pairs, apply_merge
 
 
@@ -152,11 +153,6 @@ def wordpiece_train_merges(
     (without it, iteration i re-runs every earlier fold)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    from ..streaming.store import (
-        _tracked_local_checkpoint,
-        release_checkpoint,
-    )
-
     cur = wp_symbol_word_frequencies(df, text_col)
     out: list[dict] = []
     held: DataFrame | None = None
@@ -171,7 +167,7 @@ def wordpiece_train_merges(
             # state once, so lazy stays right THERE; with two
             # consumers the eager materialization job is the cheaper
             # side of the trade.
-            cur = _tracked_local_checkpoint(cur)
+            cur = barrier(cur)
             if held is not None:
                 release_checkpoint(held)
             held = cur
@@ -203,11 +199,6 @@ def wordpiece_train_merges(
     finally:
         if held is not None:
             release_checkpoint(held)
-        # release the in-flight lazy checkpoint when the collect
-        # raised mid-iteration (r17 ADVICE #5; no-op after a clean
-        # loop - see bpe_train_merges)
-        if cur is not None and cur is not held:
-            release_checkpoint(cur)
     return out
 
 

@@ -9,14 +9,14 @@ oracle side-by-side and hash-compares values, so builders here must:
 - pin the session to UTC (timestamps in parquet are naive-UTC and
   DuckDB reads them TZ-naive).
 
-Resource contract: a few builders (minhash_estimate_qa) take lazy
-localCheckpoint barriers so one hash pipeline feeds several legs;
-the pinned RDD ids ride the returned frame as
-``_spark_graft_ckpt_ids``. Long-lived callers should free them after
-consuming the frame - ``streaming.store.release_checkpoint(df)``
-(deterministic, per-frame) or ``session.unpersist_all_rdds(spark)``
-(the sweep bench.py runs between measurements). Short-lived sessions
-can ignore this; the blocks die with the context.
+Resource contract: some builders take ``session.barrier`` pins so one
+pipeline feeds several legs, and return a lazy frame that reads them.
+A long-lived caller runs the builder AND consumes its frame inside one
+``with session.barrier_scope(spark):`` block; the scope frees every
+pin on exit, leaving ``session.persistent_rdd_ids`` as it found it.
+Without a scope the pins stay until ``session.unpersist_all_rdds``
+(the sweep bench.py runs between measurements) or the end of the
+context.
 """
 
 from __future__ import annotations

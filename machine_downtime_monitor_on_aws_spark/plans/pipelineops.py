@@ -29,7 +29,7 @@ from ..operators.shards import (
     order_key_sql,
     shard_key_sql,
 )
-from ..session import pin_utc
+from ..session import barrier, pin_utc
 from ..tables import load_table
 from .catalog import register
 from .textops import _TOKENS_SQL, _cc_clauses
@@ -891,7 +891,6 @@ def cms_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical cell table and the comparison is hash-exact."""
     from ..functions.text import tokens
     from ..operators.sketch import cms_build, cms_estimate
-    from ..streaming.store import _tracked_local_checkpoint
 
     d = _docs(spark, sf_dir)
     toks = d.select(F.explode(tokens(F.col("text"))).alias("tok"))
@@ -903,7 +902,7 @@ def cms_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build is then vocab-sized work instead of corpus-sized - the
     # shape a real multi-pass pipeline uses when it materializes
     # exact counts anyway.
-    exact = _tracked_local_checkpoint(
+    exact = barrier(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_ct")),
         eager=False,
     )
@@ -912,14 +911,12 @@ def cms_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight_col="exact_ct",
     )
     est = cms_estimate(exact, "tok", cells, _CMS_DEPTH, _CMS_WIDTH, salt="cms")
-    out = (
+    return (
         exact.join(est, "tok")
         .select("tok", "exact_ct", "cms_ct")
         .orderBy(F.desc("cms_ct"), F.asc("tok"))
         .limit(_CMS_TOPN)
     )
-    out._spark_graft_ckpt_ids = getattr(exact, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 _BLOOM_BITS = 2048

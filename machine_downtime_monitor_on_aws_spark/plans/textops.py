@@ -38,7 +38,7 @@ from ..operators.dedup import (
     winnow_fingerprints,
 )
 from ..operators.sampling import sample_hash, sample_hash_sql
-from ..session import pin_utc
+from ..session import barrier, barrier_scope, pin_utc
 from ..tables import load_table
 from .catalog import register
 
@@ -724,11 +724,11 @@ def neardup_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     - the exact set ops never touch non-candidate pairs)."""
     d = _docs(spark, sf_dir)
     # The pairs subtree feeds BOTH the candidate-id semi-join and the
-    # scored join; a lazy localCheckpoint materializes the whole
+    # scored join; a lazy barrier materializes the whole
     # minhash pipeline once instead of twice (measured 2.1s -> 1.45s
     # at sf0.1; plain .cache() did not help - lazy caching still
     # evaluates both branches before the first materialization wins).
-    pairs = _minhash_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    pairs = barrier(_minhash_pairs(spark, sf_dir), eager=False)
     return jaccard_verified_pairs(d, pairs, "doc_id", "text", 0.5, _SHINGLE_N)
 
 
@@ -935,16 +935,6 @@ def _marker_parts() -> tuple[list[str], str, str]:
     langs = sorted(LANG_MARKERS)
     counts = ", ".join(f"{_marker_count_sql(l)} AS c_{l}" for l in langs)
     return langs, counts, _argmax_pred_sql(langs, "c_")
-
-
-def _langid_oracle() -> str:
-    langs, counts, pred = _marker_parts()
-    return f"""
-WITH scored AS (SELECT doc_id, {counts} FROM documents)
-SELECT doc_id, {', '.join('CAST(c_' + l + ' AS INT) AS c_' + l for l in langs)},
-       {pred} AS predicted_lang
-FROM scored
-"""
 
 
 _TRIGRAMS_SQL = (
@@ -1200,22 +1190,15 @@ def minhash_estimate_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     once - engine-exact."""
     d = _docs(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
-    # lazy TRACKED checkpoints (r5 advice): the three barrier frames
-    # pin RDD blocks once materialized, and an untracked
-    # localCheckpoint is releasable only by the blunt
-    # unpersist_all_rdds sweep. Tracking propagates the pinned ids to
-    # the returned frame so any long-lived caller can free them
-    # deterministically with release_checkpoint(result) after
-    # consuming it (see the catalog module contract).
-    from ..streaming.store import _tracked_local_checkpoint
-
-    sig = _tracked_local_checkpoint(
+    # three lazy barriers: the signatures, the candidate pairs and the
+    # candidates' shingle sets each feed two consumers
+    sig = barrier(
         minhash_signatures(
             d, "doc_id", "text", _NUM_PERMS, _SHINGLE_N, parallelism=par
         ),
         eager=False,
     )
-    pairs = _tracked_local_checkpoint(
+    pairs = barrier(
         candidate_pairs_exact(
             band_arrays_from_signatures(sig, _NUM_BANDS, _NUM_PERMS), _NUM_BANDS
         ),
@@ -1229,7 +1212,7 @@ def minhash_estimate_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_docs = d.join(
         cand_ids, F.col("doc_id") == F.col("__cid"), "left_semi"
     )
-    sh = _tracked_local_checkpoint(
+    sh = barrier(
         cand_docs.select(
             "doc_id",
             F.array_distinct(shingles(F.col("text"), _SHINGLE_N)).alias("__sh"),
@@ -1250,20 +1233,12 @@ def minhash_estimate_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = F.size(F.array_intersect("ja", "jb"))
     union = F.size("ja") + F.size("jb") - inter
-    result = out.select(
+    return out.select(
         "doc_a",
         "doc_b",
         (n_agree.cast("double") / F.lit(float(_NUM_PERMS))).alias("sig_estimate"),
         (inter.cast("double") / union.cast("double")).alias("exact_jaccard"),
     )
-    # hand the three barrier frames' pinned ids to the caller:
-    # release_checkpoint(result) frees them after consumption
-    result._spark_graft_ckpt_ids = (
-        getattr(sig, "_spark_graft_ckpt_ids", ())
-        + getattr(pairs, "_spark_graft_ckpt_ids", ())
-        + getattr(sh, "_spark_graft_ckpt_ids", ())
-    )
-    return result
 
 
 @register(
@@ -1732,7 +1707,6 @@ def quality_gate_from_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff window runs over <= 4097 rows per source; cutoffs
     broadcast back - the corpus never shuffles for the gate."""
     from ..operators.qsketch import quantize_score, sketch_quantile_bins
-    from ..streaming.store import _tracked_local_checkpoint
 
     d = _docs(spark, sf_dir)
     t = F.col("text")
@@ -1740,7 +1714,7 @@ def quality_gate_from_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = distinct_token_count(t).cast("double") / n_tok.cast("double")
     # the scored sliver feeds BOTH the histogram and the gate join -
     # barrier it so tokenization runs once (the tfidf/KN lesson)
-    scored = _tracked_local_checkpoint(
+    scored = barrier(
         d.filter(n_tok > 0).select(
             "doc_id", "source", ratio.alias("distinct_ratio")
         ),
@@ -1754,15 +1728,13 @@ def quality_gate_from_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt")
     )
     cuts = sketch_quantile_bins(bins, ["source"], 1, 4)
-    out = (
+    return (
         binned.join(F.broadcast(cuts), "source")
         .filter(F.col("score_bin") >= F.col("cutoff_bin"))
         .select(
             "doc_id", "source", "distinct_ratio", "score_bin", "cutoff_bin"
         )
     )
-    out._spark_graft_ckpt_ids = getattr(scored, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 # blocklist terms the catalog's masking stage scrubs - chosen to be
@@ -2412,9 +2384,6 @@ def kn_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir).select("doc_id", "text"),
         tokens(F.col("text")),
     )
-    # the internal bigram-type barrier's pinned ids ride the frame
-    # (_spark_graft_ckpt_ids) - the kn_trigram_doc_scores caller
-    # contract: long-lived consumers release after collecting
     return kn_scores_from_counts(tr, c3t)
 
 
@@ -2878,15 +2847,13 @@ def unigram_lm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed_multi_cap=_ULM_SEED_CAP, prune_multi_cap=_ULM_PRUNE_CAP,
         max_piece=_ULM_MAXP,
     )
-    out = seg.select(
+    return seg.select(
         F.col("w").alias("word"),
         "freq",
         "best_prob",
         "n_pieces",
         F.array_join("seg", " ").alias("seg_str"),
     )
-    out._spark_graft_ckpt_ids = getattr(seg, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 _SPAN_DEDUP_SQL = f"""
@@ -3030,15 +2997,14 @@ def unigram_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         import uuid
 
         staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        trained, _seg = train_unigram_lm(
-            wf, iters=2,
-            seed_multi_cap=_ULM_SEED_CAP, prune_multi_cap=_ULM_PRUNE_CAP,
-            max_piece=_ULM_MAXP,
-        )
-        save_unigram_vocab(spark, staged, trained, _ULM_MAXP)
-        from ..streaming.store import release_checkpoint
-
-        release_checkpoint(_seg)  # the trainer's words/seed barriers
+        # the trainer's words/seed barriers end with the vocab save
+        with barrier_scope(spark):
+            trained, _seg = train_unigram_lm(
+                wf, iters=2,
+                seed_multi_cap=_ULM_SEED_CAP, prune_multi_cap=_ULM_PRUNE_CAP,
+                max_piece=_ULM_MAXP,
+            )
+            save_unigram_vocab(spark, staged, trained, _ULM_MAXP)
         fsio.publish_dir(spark, staged, path, ok_name="params.json")
     vocab, _params = load_unigram_vocab(spark, path)
     seg = viterbi_segment_words(wf, vocab, _ULM_MAXP)
@@ -3165,8 +3131,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the bigram query's three keyed token-sized exchanges; the
     thresholds are a per-source aggregate (S rows broadcast back);
     no global sort."""
-    from ..streaming.store import _tracked_local_checkpoint
-
     d = _docs(spark, sf_dir).select("doc_id", "source")
     scores = bigram_lm_doc_scores(spark, sf_dir).select(
         "doc_id", F.col("mean_bigram_prob").alias("lm_score")
@@ -3177,14 +3141,14 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluates twice (r17: measured 1.24 s -> see OPTIMIZATION_r17
     # - the doc-sized (doc_id, source, lm_score) sliver is the right
     # thing to materialize, the kn/tfidf barrier lesson).
-    j = _tracked_local_checkpoint(scores.join(d, "doc_id"), eager=False)
+    j = barrier(scores.join(d, "doc_id"), eager=False)
     third = F.lit(1.0) / F.lit(3.0)
     two_thirds = F.lit(2.0) / F.lit(3.0)
     th = j.groupBy("source").agg(
         F.percentile(F.col("lm_score"), third).alias("t1"),
         F.percentile(F.col("lm_score"), two_thirds).alias("t2"),
     )
-    out = j.join(F.broadcast(th), "source").select(
+    return j.join(F.broadcast(th), "source").select(
         "doc_id",
         "source",
         "lm_score",
@@ -3193,8 +3157,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )
-    out._spark_graft_ckpt_ids = getattr(j, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 # ---- DSIR importance weights
@@ -3544,8 +3506,6 @@ def pmi_top_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab-sized - broadcastable), two scalar-aggregate crossJoins
     (1-row broadcast slivers), and a TakeOrdered top-20 - the corpus
     text never shuffles."""
-    from ..streaming.store import _tracked_local_checkpoint
-
     d = _docs(spark, sf_dir)
     toked = d.select("doc_id", tokens(F.col("text")).alias("__toks"))
     # Barriers on BOTH count tables (r17): ``uni`` feeds three
@@ -3554,8 +3514,8 @@ def pmi_top_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derives the corpus tokenize+explode+aggregate per consumer
     # (the r17 plan audit counted five documents scans; the barriered
     # plan runs two). Both tables are vocabulary-sized - exactly what
-    # a lazy localCheckpoint should hold; corpus rows never persist.
-    uni = _tracked_local_checkpoint(
+    # a lazy barrier should hold; corpus rows never persist.
+    uni = barrier(
         toked.select(F.explode("__toks").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c")),
@@ -3570,7 +3530,7 @@ def pmi_top_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.col("__toks"), i + F.lit(1)),
         ),
     )
-    bi_all = _tracked_local_checkpoint(
+    bi_all = barrier(
         big.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("pair_count")),
@@ -3601,13 +3561,9 @@ def pmi_top_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pmi_ratio"),
         )
     )
-    out = scored.orderBy(
+    return scored.orderBy(
         F.col("pmi_ratio").desc(), F.col("bigram").asc()
     ).limit(_PMI_TOPK)
-    out._spark_graft_ckpt_ids = getattr(
-        uni, "_spark_graft_ckpt_ids", ()
-    ) + getattr(bi_all, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 # ---- Exact all-pairs Jaccard join (prefix filtering)

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import hyperplanes
 from ..operators.similarity import brute_force_topk, lsh_neardup_pairs
-from ..session import pin_utc
+from ..session import barrier, barrier_scope, pin_utc
 from ..tables import load_table
 from .catalog import register
 
@@ -158,13 +158,9 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, _NEARDUP_THRESHOLD, _NUM_PLANES, _DIM,
         parallelism=spark.sparkContext.defaultParallelism,
     )
-    out = connected_components(pairs, src="id_a", dst="id_b").select(
+    return connected_components(pairs, src="id_a", dst="id_b").select(
         F.col("doc_id").alias("vec_id"), "component"
     )
-    # CC materialized the pair graph eagerly during construction; ride
-    # the pair barrier's id so release frees it (catalog contract)
-    out._spark_graft_ckpt_ids = getattr(pairs, "_spark_graft_ckpt_ids", ())
-    return out
 
 
 @register(
@@ -1615,16 +1611,7 @@ def neardup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         parallelism=spark.sparkContext.defaultParallelism,
     )
     pr = pagerank_unrolled(pairs, _PR_ITERS)
-    out = pr.select(F.col("node").alias("vec_id"), "degree", "pagerank")
-    # .select() drops python-level attrs; without the re-attach the
-    # three static-table checkpoint pins leak per invocation and
-    # release_checkpoint(result) is a no-op (r17 ADVICE #2 - the
-    # textops discipline). The pair table's own barrier id (r18)
-    # rides along too.
-    out._spark_graft_ckpt_ids = getattr(pr, "_spark_graft_ckpt_ids", ()) + getattr(
-        pairs, "_spark_graft_ckpt_ids", ()
-    )
-    return out
+    return pr.select(F.col("node").alias("vec_id"), "degree", "pagerank")
 
 
 @register("neardup_pagerank_from_store", oracle=_pagerank_oracle(_PR_ITERS))
@@ -1659,26 +1646,16 @@ def neardup_pagerank_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
         e = _emb(spark, sf_dir)
-        from ..streaming.store import release_checkpoint
-
-        built = lsh_neardup_pairs(
-            e, _NEARDUP_THRESHOLD, _NUM_PLANES, _DIM,
-            parallelism=spark.sparkContext.defaultParallelism,
-        )
-        try:
-            built.write.mode("overwrite").parquet(staged)
-        finally:
-            release_checkpoint(built)
+        # the write consumes the pair pipeline's barrier entirely
+        with barrier_scope(spark):
+            lsh_neardup_pairs(
+                e, _NEARDUP_THRESHOLD, _NUM_PLANES, _DIM,
+                parallelism=spark.sparkContext.defaultParallelism,
+            ).write.mode("overwrite").parquet(staged)
         fsio.publish_dir(spark, staged, path, ok_name="_SUCCESS")
     pairs = spark.read.parquet(path)
     pr = pagerank_unrolled(pairs, _PR_ITERS)
-    out = pr.select(F.col("node").alias("vec_id"), "degree", "pagerank")
-    # .select() drops python-level attrs; without the re-attach the
-    # three static-table checkpoint pins leak per invocation and
-    # release_checkpoint(result) is a no-op (r17 ADVICE #2 - the
-    # textops discipline).
-    out._spark_graft_ckpt_ids = getattr(pr, "_spark_graft_ckpt_ids", ())
-    return out
+    return pr.select(F.col("node").alias("vec_id"), "degree", "pagerank")
 
 
 # ---- SemDeDup (operators/similarity.semdedup_flags)
@@ -2053,17 +2030,16 @@ def mmr_diversified_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The greedy walk references cand in every step and sims in every
     # step but the first; one eager materialization of each
     # ~N_QUERIES*N row sliver keeps the composed k-step plan from
-    # re-scanning the store per reference (bench releases the blocks
-    # via unpersist_all_rdds).
-    cand = cand.coalesce(1).localCheckpoint(eager=True)
-    sims = sims.coalesce(1).localCheckpoint(eager=True)
+    # re-scanning the store per reference.
+    cand = barrier(cand.coalesce(1))
+    sims = barrier(sims.coalesce(1))
     return mmr_select(cand, sims, _MMR_K, 0.5)
 
 
 def _mmr_inputs(spark: SparkSession, sf_dir: str):
     """MMR's two store slivers PRE-checkpoint - exposed separately so
     the no-corpus-scan plan assertion reads the real scan plans
-    (r11 ADVICE #3: the query's eager localCheckpoints rewrite the
+    (r11 ADVICE #3: the query's eager barriers rewrite the
     explained plan to Scan ExistingRDD, which would hide a regression
     that reinstated an inline embedding join upstream)."""
     path = _retrieval_shortlist_store(spark, sf_dir)

@@ -15,8 +15,11 @@ down by env vars for local runs:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "machine_downtime_monitor_on_aws_spark") -> SparkSession:
@@ -95,6 +98,112 @@ def persistent_rdd_ids(spark: SparkSession) -> list[int]:
     """Ids of currently-persisted RDDs (leak assertions in tests)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return sorted(int(k) for k in jmap.keys())
+
+
+# The pin list of the innermost open barrier_scope. A ContextVar, not
+# a module global: two streaming queries on one SparkContext run their
+# epochs on different threads, and each must release only its own pins.
+_SCOPE_PINS: ContextVar[list[int] | None] = ContextVar("barrier_scope", default=None)
+
+
+def is_barrier_scan(df: DataFrame) -> bool:
+    """True when the frame's analyzed plan is a bare ``LogicalRDD``
+    scan - a barrier, or any other RDD-backed frame - i.e. there is NO
+    upstream expression pipeline that a multi-consumer barrier would
+    protect from double computation. Lets operators skip a redundant
+    barrier on an input that is already materialized once (the
+    streaming paths take a barrier every micro-batch before fanning
+    out). Conservative on any doubt: False means "add the barrier",
+    which is always safe."""
+    try:
+        return (
+            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LogicalRDD"
+        )
+    except Exception:
+        return False
+
+
+def _pinned_rdd_id(df: DataFrame) -> int | None:
+    # Dataset.localCheckpoint wraps exactly the RDD it persisted in a
+    # LogicalRDD node, so the id is read off the plan. None for a frame
+    # that is not a barrier, or on plan-shape drift in a future Spark:
+    # that pin is left to unpersist_all_rdds rather than risk freeing
+    # the wrong RDD.
+    try:
+        return int(df._jdf.queryExecution().analyzed().rdd().id())
+    except Exception:
+        return None
+
+
+def barrier(df: DataFrame, eager: bool = True) -> DataFrame:
+    """The package's one materialization barrier: ``localCheckpoint``
+    the frame (truncated lineage, blocks pinned on the executors) and
+    register the pinned RDD with the innermost open
+    :func:`barrier_scope`, which releases it on exit. Outside any
+    scope the pin lives until :func:`unpersist_all_rdds` or the end of
+    the context.
+
+    Neither ``DataFrame.unpersist()`` nor dropping the Python reference
+    releases a localCheckpoint's blocks (verified on PySpark 4.1), so
+    a long-lived caller that never releases pins them forever - a
+    streaming query checkpointing per micro-batch would pin RDDs per
+    epoch for the life of the query.
+
+    The pinned id is read off the returned frame's plan, never by
+    diffing the context-global persistent-RDD set: with two concurrent
+    streaming queries on one SparkContext, a diff window can capture
+    the OTHER query's in-flight persist, and releasing it would free a
+    localCheckpoint that cannot be recomputed.
+
+    ``eager=False`` defers materialization to the first action that
+    reads the frame; the RDD is still persisted (and registered) at
+    mark time. Query builders use it to stay lazy (the catalog
+    contract) while sharing one materialization between consumers."""
+    out = df.localCheckpoint(eager=eager)
+    pins = _SCOPE_PINS.get()
+    if pins is not None:
+        rid = _pinned_rdd_id(out)
+        if rid is not None:
+            pins.append(rid)
+    return out
+
+
+def _unpersist(spark: SparkSession, ids) -> None:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in ids:
+        rdd = jmap.get(rid)
+        if rdd is not None:  # released twice, or never registered
+            rdd.unpersist(False)
+
+
+@contextmanager
+def barrier_scope(spark: SparkSession) -> Iterator[None]:
+    """Release every :func:`barrier` pin taken inside the block when it
+    exits, normally or by a raise. Scopes nest; a pin belongs to the
+    innermost one. Consumers own scopes (a streaming epoch, a catalog
+    query and its collect); operators only take barriers and return
+    lazy frames, so every frame read inside the block must be fully
+    consumed before it ends - a released barrier cannot be
+    recomputed."""
+    pins: list[int] = []
+    token = _SCOPE_PINS.set(pins)
+    try:
+        yield
+    finally:
+        _SCOPE_PINS.reset(token)
+        _unpersist(spark, pins)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free a :func:`barrier` frame's pin before its scope ends: the
+    iterative loops drop each superseded round, and the keyed store
+    frees its upsert barriers once written. Call ONLY after every
+    consumer of the frame has executed. No-op for a frame that is not
+    a barrier, or whose pin is already released."""
+    rid = _pinned_rdd_id(df)
+    if rid is not None:
+        _unpersist(df.sparkSession, (rid,))
 
 
 def pin_utc(spark: SparkSession) -> SparkSession:

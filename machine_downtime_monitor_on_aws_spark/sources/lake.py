@@ -378,20 +378,28 @@ def reregister_bucketed_table(spark: SparkSession, table_name: str) -> bool:
     if spec.get("properties"):
         props = " TBLPROPERTIES ({})".format(
             ", ".join(
-                "'{}'='{}'".format(k, v) for k, v in spec["properties"].items()
+                f"{_sql_string(k)}={_sql_string(v)}"
+                for k, v in spec["properties"].items()
             )
         )
     spark.sql(
         f"CREATE TABLE {table_name} ({spec['schema_ddl']}) USING parquet "
-        "CLUSTERED BY ({}) {}INTO {} BUCKETS LOCATION '{}'{}".format(
+        "CLUSTERED BY ({}) {}INTO {} BUCKETS LOCATION {}{}".format(
             ", ".join(f"`{c}`" for c in spec["bucket_cols"]),
             sorted_by,
             int(spec["num_buckets"]),
-            loc,
+            _sql_string(loc),
             props,
         )
     )
     return True
+
+
+def _sql_string(v) -> str:
+    """``v`` as a Spark SQL string literal. Spark escapes with a
+    backslash (a doubled quote would end one literal and start the
+    next), so backslashes go first."""
+    return "'{}'".format(str(v).replace("\\", "\\\\").replace("'", "\\'"))
 
 
 def write_bucketed_table(

@@ -49,6 +49,7 @@ from ..operators.ivf import (
     read_ivf_index_params,
     rebalance_ivf_index_if_needed,
 )
+from ..session import barrier_scope
 from .ingest import _checkpoint_sink_token
 
 _STATS_SCHEMA = "dim int, n long, sum_q long, sumsq_q long"
@@ -152,184 +153,185 @@ def run_incremental_ann_stream(
     fsio.mkdirs(spark, marker_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return  # fully committed epoch replayed after restart
-        e = batch_df.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-        )
-        # NULL / mis-sized vectors: the batch operators fail fast on
-        # them (l2_norm raises - right for offline callers, a silent
-        # skip would bias an index or a statistic), but inside
-        # foreachBatch that raise lands BEFORE the epoch marker, so
-        # every restart replays the same poison batch and fails again
-        # - a wedged loop (the r7 bootstrap lesson). Quarantine them
-        # instead: exactly-once via dynamic overwrite of this epoch's
-        # partition, same discipline as the corpus append itself.
-        ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
-        bad = e.filter(~ok)
-        if bad.limit(1).count() > 0:
-            bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "__epoch"
-            ).json(checkpoint_dir.rstrip("/") + "/ann_rejects")
-        e = e.filter(ok)
-        if not read_ivf_index_params(spark, index_path):
-            # bootstrap: params.json is written LAST by build, so its
-            # absence means no committed skeleton - (re-)run the
-            # deterministic train+build; the batch itself lands via
-            # the idempotent epoch append below, never inside build
-            # (a bootstrap crash window must not double-insert it).
-            # A first batch SMALLER than n_centroids trains with
-            # k = batch size instead of raising (r7 advice: the raise
-            # wedged the loop - the marker never commits, so every
-            # restart replays the same too-small batch and fails
-            # again) and instead of returning (which would silently
-            # DROP the batch: foreachBatch advances the checkpoint
-            # either way). Fewer lists only coarsens pruning; the
-            # rebalance gate retrains to full k as the corpus grows.
-            if bootstrap_centroids is not None:
-                cents = bootstrap_centroids.select("cid", "cv")
-            else:
-                avail = e.limit(n_centroids).count()
-                if avail == 0:
-                    return  # nothing to train on yet
-                from ..operators.kmeans import kmeans_fit_centroids_df
-
-                cents = kmeans_fit_centroids_df(
-                    e, min(n_centroids, avail), dim,
-                    iters=train_iters, init="hash",
-                ).select(F.col("cid"), F.col("cv"))
-            build_ivf_index(
-                e.limit(0), index_path, n_centroids, dim,
-                centroids=cents, epoch_partitioned=True,
+        with barrier_scope(spark):
+            epoch_val = f"{token}-{epoch_id}"
+            marker = f"{marker_dir}/{epoch_val}"
+            if fsio.exists(spark, marker):
+                return  # fully committed epoch replayed after restart
+            e = batch_df.select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
             )
-        append_to_ivf_index(e, index_path, dim, epoch=epoch_val)
-        # cumulative-population snapshot BEFORE the marker: the chain
-        # entry for epoch N is a pure function of (snapshot < N, batch
-        # N), so a crash-replayed epoch rewrites the identical
-        # partition - exactly-once, like the corpus append. Writing it
-        # pre-marker means a committed epoch's mass is never lost from
-        # the chain (post-marker it would vanish on a crash, biasing
-        # every future drift decision).
-        batch_stat_rows: list = []
-        cum_rows = None
-        stats_path = index_path.rstrip("/") + "__popstats"
-        snap_dir = index_path.rstrip("/") + "__popstats_cur"
-        if drift_smd_threshold is not None:
-            from ..operators.drift import embedding_population_stats
+            # NULL / mis-sized vectors: the batch operators fail fast on
+            # them (l2_norm raises - right for offline callers, a silent
+            # skip would bias an index or a statistic), but inside
+            # foreachBatch that raise lands BEFORE the epoch marker, so
+            # every restart replays the same poison batch and fails again
+            # - a wedged loop (the r7 bootstrap lesson). Quarantine them
+            # instead: exactly-once via dynamic overwrite of this epoch's
+            # partition, same discipline as the corpus append itself.
+            ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
+            bad = e.filter(~ok)
+            if bad.limit(1).count() > 0:
+                bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
+                    "overwrite"
+                ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                    "__epoch"
+                ).json(checkpoint_dir.rstrip("/") + "/ann_rejects")
+            e = e.filter(ok)
+            if not read_ivf_index_params(spark, index_path):
+                # bootstrap: params.json is written LAST by build, so its
+                # absence means no committed skeleton - (re-)run the
+                # deterministic train+build; the batch itself lands via
+                # the idempotent epoch append below, never inside build
+                # (a bootstrap crash window must not double-insert it).
+                # A first batch SMALLER than n_centroids trains with
+                # k = batch size instead of raising (r7 advice: the raise
+                # wedged the loop - the marker never commits, so every
+                # restart replays the same too-small batch and fails
+                # again) and instead of returning (which would silently
+                # DROP the batch: foreachBatch advances the checkpoint
+                # either way). Fewer lists only coarsens pruning; the
+                # rebalance gate retrains to full k as the corpus grows.
+                if bootstrap_centroids is not None:
+                    cents = bootstrap_centroids.select("cid", "cv")
+                else:
+                    avail = e.limit(n_centroids).count()
+                    if avail == 0:
+                        return  # nothing to train on yet
+                    from ..operators.kmeans import kmeans_fit_centroids_df
 
-            # e is the quarantine-filtered well-formed subset, so the
-            # operator's fail-fast (which would otherwise kill the
-            # query, contradicting the advisory-gate contract) cannot
-            # fire here (r14 ADVICE). <= dim rows: the bounded-pull
-            # class (centroid fetches).
-            batch_stat_rows = embedding_population_stats(
-                e, "vec", dim
-            ).collect()
-            if batch_stat_rows and fsio.exists(
-                spark, f"{stats_path}/_STORE_OK"
-            ):
-                prev = _latest_snapshot_rows(spark, snap_dir, token, epoch_id)
-                if prev is None:
-                    # fresh chain: the reference IS the population at
-                    # the last (re)train - start accumulating from it
-                    from ..operators.drift import read_population_stats
+                    cents = kmeans_fit_centroids_df(
+                        e, min(n_centroids, avail), dim,
+                        iters=train_iters, init="hash",
+                    ).select(F.col("cid"), F.col("cv"))
+                build_ivf_index(
+                    e.limit(0), index_path, n_centroids, dim,
+                    centroids=cents, epoch_partitioned=True,
+                )
+            append_to_ivf_index(e, index_path, dim, epoch=epoch_val)
+            # cumulative-population snapshot BEFORE the marker: the chain
+            # entry for epoch N is a pure function of (snapshot < N, batch
+            # N), so a crash-replayed epoch rewrites the identical
+            # partition - exactly-once, like the corpus append. Writing it
+            # pre-marker means a committed epoch's mass is never lost from
+            # the chain (post-marker it would vanish on a crash, biasing
+            # every future drift decision).
+            batch_stat_rows: list = []
+            cum_rows = None
+            stats_path = index_path.rstrip("/") + "__popstats"
+            snap_dir = index_path.rstrip("/") + "__popstats_cur"
+            if drift_smd_threshold is not None:
+                from ..operators.drift import embedding_population_stats
 
-                    prev = read_population_stats(spark, stats_path).collect()
-                cum_rows = _add_stats(prev, batch_stat_rows)
-                spark.createDataFrame(cum_rows, _STATS_SCHEMA).withColumn(
-                    "__epoch", F.lit(epoch_val)
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("__epoch").parquet(snap_dir)
-        fsio.write_text_atomic(spark, marker, epoch_val)
-        # prune committed markers older than this epoch (ordering by
-        # the epoch id parsed from the name, never mtime; foreign
-        # lineage tokens are stale by construction)
-        for old in fsio.list_names(spark, marker_dir):
-            if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                continue
-            old_tok, _, old_eid = old.rpartition("-")
-            if old_tok != token or (old_eid.isdigit() and int(old_eid) < epoch_id):
-                fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-        # maintenance AFTER the epoch committed (same placement as the
-        # dedup loop's compaction): the rebuild never races its own
-        # epoch's write, and a crash mid-swap leaves both copies on
-        # disk rather than a half-updated index
-        rebuilt = False
-        if rebalance_max_list_share is not None:
-            rebuilt = rebalance_ivf_index_if_needed(
-                spark, index_path, n_centroids, dim,
-                max_list_share=rebalance_max_list_share,
-            )
-        if drift_smd_threshold is not None:
-            from ..operators.drift import (
-                embedding_drift_stats,
-                embedding_population_stats,
-                population_drifted,
-                read_population_stats,
-                write_population_stats,
-            )
-            from ..operators.ivf import rebuild_ivf_index
+                # e is the quarantine-filtered well-formed subset, so the
+                # operator's fail-fast (which would otherwise kill the
+                # query, contradicting the advisory-gate contract) cannot
+                # fire here (r14 ADVICE). <= dim rows: the bounded-pull
+                # class (centroid fetches).
+                batch_stat_rows = embedding_population_stats(
+                    e, "vec", dim
+                ).collect()
+                if batch_stat_rows and fsio.exists(
+                    spark, f"{stats_path}/_STORE_OK"
+                ):
+                    prev = _latest_snapshot_rows(spark, snap_dir, token, epoch_id)
+                    if prev is None:
+                        # fresh chain: the reference IS the population at
+                        # the last (re)train - start accumulating from it
+                        from ..operators.drift import read_population_stats
 
-            if batch_stat_rows and not fsio.exists(
-                spark, f"{stats_path}/_STORE_OK"
-            ):
-                write_population_stats(
-                    spark,
-                    spark.createDataFrame(batch_stat_rows, _STATS_SCHEMA),
-                    stats_path,
+                        prev = read_population_stats(spark, stats_path).collect()
+                    cum_rows = _add_stats(prev, batch_stat_rows)
+                    spark.createDataFrame(cum_rows, _STATS_SCHEMA).withColumn(
+                        "__epoch", F.lit(epoch_val)
+                    ).write.mode("overwrite").option(
+                        "partitionOverwriteMode", "dynamic"
+                    ).partitionBy("__epoch").parquet(snap_dir)
+            fsio.write_text_atomic(spark, marker, epoch_val)
+            # prune committed markers older than this epoch (ordering by
+            # the epoch id parsed from the name, never mtime; foreign
+            # lineage tokens are stale by construction)
+            for old in fsio.list_names(spark, marker_dir):
+                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
+                    continue
+                old_tok, _, old_eid = old.rpartition("-")
+                if old_tok != token or (old_eid.isdigit() and int(old_eid) < epoch_id):
+                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
+            # maintenance AFTER the epoch committed (same placement as the
+            # dedup loop's compaction): the rebuild never races its own
+            # epoch's write, and a crash mid-swap leaves both copies on
+            # disk rather than a half-updated index
+            rebuilt = False
+            if rebalance_max_list_share is not None:
+                rebuilt = rebalance_ivf_index_if_needed(
+                    spark, index_path, n_centroids, dim,
+                    max_list_share=rebalance_max_list_share,
                 )
-            elif cum_rows is not None and not rebuilt:
-                # gate on the CUMULATIVE served population (reference
-                # + every batch since the last retrain), not on the
-                # lone batch: batch-vs-reference fires on every
-                # post-shift micro-batch forever - after a retrain the
-                # reference is the full MIXED corpus, so each pure-new
-                # batch still reads as drifted and the loop rebuilds
-                # O(corpus) per epoch (r15: caught by the end-to-end
-                # test's epoch-4 centroid luck). The cumulative
-                # population converges to the corpus, so the gate
-                # fires exactly when the SERVED distribution left the
-                # TRAINED-ON one, then settles after the refresh.
-                report = embedding_drift_stats(
-                    read_population_stats(spark, stats_path),
-                    spark.createDataFrame(cum_rows, _STATS_SCHEMA),
-                    smd_threshold=drift_smd_threshold,
+            if drift_smd_threshold is not None:
+                from ..operators.drift import (
+                    embedding_drift_stats,
+                    embedding_population_stats,
+                    population_drifted,
+                    read_population_stats,
+                    write_population_stats,
                 )
-                if population_drifted(report, drift_max_dims):
-                    rebuild_ivf_index(spark, index_path, n_centroids, dim)
-                    rebuilt = True
-            if rebuilt:
-                # either gate retrained: the reference is now the full
-                # corpus the fresh centroids were trained on, and the
-                # cumulative chain resets to it (a crash between the
-                # two leaves a stale over-counting chain -> at worst
-                # one spurious advisory rebuild, then consistent)
-                corpus = spark.read.parquet(f"{index_path}/corpus").select(
-                    "vec_id", "vec"
-                )
-                write_population_stats(
-                    spark,
-                    embedding_population_stats(corpus, "vec", dim),
-                    stats_path,
-                    replace=True,
-                )
-                fsio.delete(spark, snap_dir)
-            elif cum_rows is not None:
-                # chain hygiene: epoch N's snapshot supersedes all
-                # earlier ones (and any foreign-token leftovers)
-                for old in fsio.list_names(spark, snap_dir):
-                    if not old.startswith("__epoch="):
-                        continue
-                    tok, _, eid = old[len("__epoch="):].rpartition("-")
-                    if tok != token or (
-                        eid.isdigit() and int(eid) < epoch_id
-                    ):
-                        fsio.delete(spark, f"{snap_dir}/{old}")
+                from ..operators.ivf import rebuild_ivf_index
+
+                if batch_stat_rows and not fsio.exists(
+                    spark, f"{stats_path}/_STORE_OK"
+                ):
+                    write_population_stats(
+                        spark,
+                        spark.createDataFrame(batch_stat_rows, _STATS_SCHEMA),
+                        stats_path,
+                    )
+                elif cum_rows is not None and not rebuilt:
+                    # gate on the CUMULATIVE served population (reference
+                    # + every batch since the last retrain), not on the
+                    # lone batch: batch-vs-reference fires on every
+                    # post-shift micro-batch forever - after a retrain the
+                    # reference is the full MIXED corpus, so each pure-new
+                    # batch still reads as drifted and the loop rebuilds
+                    # O(corpus) per epoch (r15: caught by the end-to-end
+                    # test's epoch-4 centroid luck). The cumulative
+                    # population converges to the corpus, so the gate
+                    # fires exactly when the SERVED distribution left the
+                    # TRAINED-ON one, then settles after the refresh.
+                    report = embedding_drift_stats(
+                        read_population_stats(spark, stats_path),
+                        spark.createDataFrame(cum_rows, _STATS_SCHEMA),
+                        smd_threshold=drift_smd_threshold,
+                    )
+                    if population_drifted(report, drift_max_dims):
+                        rebuild_ivf_index(spark, index_path, n_centroids, dim)
+                        rebuilt = True
+                if rebuilt:
+                    # either gate retrained: the reference is now the full
+                    # corpus the fresh centroids were trained on, and the
+                    # cumulative chain resets to it (a crash between the
+                    # two leaves a stale over-counting chain -> at worst
+                    # one spurious advisory rebuild, then consistent)
+                    corpus = spark.read.parquet(f"{index_path}/corpus").select(
+                        "vec_id", "vec"
+                    )
+                    write_population_stats(
+                        spark,
+                        embedding_population_stats(corpus, "vec", dim),
+                        stats_path,
+                        replace=True,
+                    )
+                    fsio.delete(spark, snap_dir)
+                elif cum_rows is not None:
+                    # chain hygiene: epoch N's snapshot supersedes all
+                    # earlier ones (and any foreign-token leftovers)
+                    for old in fsio.list_names(spark, snap_dir):
+                        if not old.startswith("__epoch="):
+                            continue
+                        tok, _, eid = old[len("__epoch="):].rpartition("-")
+                        if tok != token or (
+                            eid.isdigit() and int(eid) < epoch_id
+                        ):
+                            fsio.delete(spark, f"{snap_dir}/{old}")
 
     return (
         vec_stream.writeStream.foreachBatch(process_batch)
@@ -383,59 +385,60 @@ def run_incremental_ivfbin_stream(
     fsio.mkdirs(spark, marker_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
-        e = batch_df.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-        )
-        # quarantine before the encode: signq_encode fails loudly on
-        # wrong-dim vectors (right for offline callers), but inside
-        # foreachBatch that raise lands before the marker and every
-        # restart replays the same poison batch - the wedged-loop
-        # failure the ANN loop already designs out.
-        ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
-        bad = e.filter(~ok)
-        if bad.limit(1).count() > 0:
-            bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "__epoch"
-            ).json(checkpoint_dir.rstrip("/") + "/ivfbin_rejects")
-        e = e.filter(ok)
-        if not read_ivf_index_params(spark, index_path):
-            avail = e.limit(max(n_centroids, 1)).count()
-            if avail == 0:
-                return  # nothing to bootstrap from yet
-            if bootstrap_thresholds is not None:
-                thr = list(bootstrap_thresholds)
-            else:
-                thr = signq_fit_thresholds(e, dim)
-            if bootstrap_centroids is not None:
-                cents = bootstrap_centroids.select("cid", "cv")
-            else:
-                from ..operators.kmeans import kmeans_fit_centroids_df
+        with barrier_scope(spark):
+            epoch_val = f"{token}-{epoch_id}"
+            marker = f"{marker_dir}/{epoch_val}"
+            if fsio.exists(spark, marker):
+                return
+            e = batch_df.select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+            )
+            # quarantine before the encode: signq_encode fails loudly on
+            # wrong-dim vectors (right for offline callers), but inside
+            # foreachBatch that raise lands before the marker and every
+            # restart replays the same poison batch - the wedged-loop
+            # failure the ANN loop already designs out.
+            ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
+            bad = e.filter(~ok)
+            if bad.limit(1).count() > 0:
+                bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
+                    "overwrite"
+                ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                    "__epoch"
+                ).json(checkpoint_dir.rstrip("/") + "/ivfbin_rejects")
+            e = e.filter(ok)
+            if not read_ivf_index_params(spark, index_path):
+                avail = e.limit(max(n_centroids, 1)).count()
+                if avail == 0:
+                    return  # nothing to bootstrap from yet
+                if bootstrap_thresholds is not None:
+                    thr = list(bootstrap_thresholds)
+                else:
+                    thr = signq_fit_thresholds(e, dim)
+                if bootstrap_centroids is not None:
+                    cents = bootstrap_centroids.select("cid", "cv")
+                else:
+                    from ..operators.kmeans import kmeans_fit_centroids_df
 
-                cents = kmeans_fit_centroids_df(
-                    e, min(n_centroids, avail), dim,
-                    iters=train_iters, init="hash",
-                ).select("cid", "cv")
-            build_ivfbin_index(
-                e.limit(0), index_path, n_centroids, dim, thr,
-                centroids=cents, epoch_partitioned=True,
-            )
-        append_to_ivfbin_index(e, index_path, dim, epoch=epoch_val)
-        fsio.write_text_atomic(spark, marker, epoch_val)
-        for old in fsio.list_names(spark, marker_dir):
-            if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                continue
-            old_tok, _, old_eid = old.rpartition("-")
-            stale = old_tok != token or (
-                old_eid.isdigit() and int(old_eid) < epoch_id
-            )
-            if stale:
-                fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
+                    cents = kmeans_fit_centroids_df(
+                        e, min(n_centroids, avail), dim,
+                        iters=train_iters, init="hash",
+                    ).select("cid", "cv")
+                build_ivfbin_index(
+                    e.limit(0), index_path, n_centroids, dim, thr,
+                    centroids=cents, epoch_partitioned=True,
+                )
+            append_to_ivfbin_index(e, index_path, dim, epoch=epoch_val)
+            fsio.write_text_atomic(spark, marker, epoch_val)
+            for old in fsio.list_names(spark, marker_dir):
+                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
+                    continue
+                old_tok, _, old_eid = old.rpartition("-")
+                stale = old_tok != token or (
+                    old_eid.isdigit() and int(old_eid) < epoch_id
+                )
+                if stale:
+                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
 
     return (
         vec_stream.writeStream.foreachBatch(process_batch)

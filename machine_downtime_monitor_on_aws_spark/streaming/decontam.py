@@ -40,8 +40,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..functions.text import shingles
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import _tracked_local_checkpoint, release_checkpoint
 
 GRAMS_SCHEMA = "g string, __epoch_id string"
 FLAGS_SCHEMA = "doc_id long, n_new_shared int, __epoch_id string"
@@ -138,10 +138,10 @@ def run_decontamination_stream(
         seen = _read_or_empty(spark, grams_path, GRAMS_SCHEMA).filter(
             F.col("__epoch_id") != F.lit(epoch_val)
         )
-        new_grams = _tracked_local_checkpoint(
-            benchmark_gram_deltas(batch_df, seen, n, text_col=text_col)
-        )
-        try:
+        with barrier_scope(spark):
+            new_grams = barrier(
+                benchmark_gram_deltas(batch_df, seen, n, text_col=text_col)
+            )
             if new_grams.count() > 0:
                 deltas = probe_corpus_index(
                     spark, new_grams, corpus_index_table
@@ -172,8 +172,6 @@ def run_decontamination_stream(
                     fsio.delete(
                         spark, f"{marker_dir}/{old}", recursive=False
                     )
-        finally:
-            release_checkpoint(new_grams)
 
     return (
         benchmark_stream.writeStream.foreachBatch(process_batch)

@@ -48,12 +48,9 @@ from ..operators.dedup import (
     update_components,
     write_minhash_index,
 )
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import (
-    KeyedParquetStore,
-    _tracked_local_checkpoint,
-    release_checkpoint,
-)
+from .store import KeyedParquetStore
 
 
 def _purge_epoch_feed(
@@ -87,12 +84,12 @@ def _purge_epoch_feed(
         return 0
     n_deleted = sum(r["__n"] for r in per_epoch)
     touched = [r["__epoch_id"] for r in per_epoch]
-    remaining = _tracked_local_checkpoint(
-        feed.filter(F.col("__epoch_id").isin(touched)).join(
-            F.broadcast(k), cond, "left_anti"
+    with barrier_scope(spark):
+        remaining = barrier(
+            feed.filter(F.col("__epoch_id").isin(touched)).join(
+                F.broadcast(k), cond, "left_anti"
+            )
         )
-    )
-    try:
         still = {
             r[0] for r in remaining.select("__epoch_id").distinct().collect()
         }
@@ -103,8 +100,6 @@ def _purge_epoch_feed(
             .partitionBy("__epoch_id")
             .parquet(path)
         )
-    finally:
-        release_checkpoint(remaining)
     for e in sorted(emptied):
         fsio.delete(spark, f"{path}/__epoch_id={e}")
     return int(n_deleted)
@@ -356,19 +351,18 @@ def run_incremental_dedup_stream(
         marker = f"{marker_dir}/{epoch_val}"
         if fsio.exists(spark, marker):
             return  # fully committed epoch replayed after restart
-        ba = _tracked_local_checkpoint(
-            minhash_band_arrays(
-                batch_df,
-                id_col,
-                text_col,
-                num_perms,
-                num_bands,
-                shingle_n,
-                parallelism=parallelism,
+        with barrier_scope(spark):
+            ba = barrier(
+                minhash_band_arrays(
+                    batch_df,
+                    id_col,
+                    text_col,
+                    num_perms,
+                    num_bands,
+                    shingle_n,
+                    parallelism=parallelism,
+                )
             )
-        )
-        pairs = None
-        try:
             index_exists = spark.catalog.tableExists(index_table)
             if index_exists:
                 pairs = incremental_candidate_pairs(
@@ -389,7 +383,7 @@ def run_incremental_dedup_stream(
             # downstream feed reader crashes; absent-dir-means-empty
             # is the documented contract instead) and the write then
             # reads the checkpointed rows, not a recomputed plan
-            pairs = _tracked_local_checkpoint(pairs)
+            pairs = barrier(pairs)
             n_pairs = pairs.count()
             if n_pairs > 0:
                 pairs.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
@@ -412,9 +406,7 @@ def run_incremental_dedup_stream(
                 )
                 if lstore.exists(spark):
                     prior = lstore.read(spark)
-                    merged = _tracked_local_checkpoint(
-                        update_components(prior, pairs)
-                    )
+                    merged = barrier(update_components(prior, pairs))
                     changed = (
                         merged.join(
                             prior.withColumnRenamed("component", "__old"),
@@ -427,12 +419,9 @@ def run_incremental_dedup_stream(
                         )
                         .select("doc_id", "component")
                     )
-                    release_checkpoint(lstore.upsert(changed))
-                    release_checkpoint(merged)
+                    lstore.upsert(changed)
                 else:
-                    release_checkpoint(
-                        lstore.upsert(connected_components(pairs))
-                    )
+                    lstore.upsert(connected_components(pairs))
             if chunk_store_path is not None:
                 # chunk leg: content-defined chunks -> first-seen-wins
                 # content-addressed store; NEW chunk contents publish
@@ -461,20 +450,16 @@ def run_incremental_dedup_stream(
                 new_chunks, cmerged = cstore.plan_upsert(
                     canon, keep_existing=True
                 )
-                try:
-                    if (
-                        chunk_feed_path is not None
-                        and new_chunks.limit(1).count() > 0
-                    ):
-                        new_chunks.withColumn(
-                            "__epoch_id", F.lit(epoch_val)
-                        ).write.mode("overwrite").option(
-                            "partitionOverwriteMode", "dynamic"
-                        ).partitionBy("__epoch_id").parquet(chunk_feed_path)
-                    cstore.commit(cmerged)
-                finally:
-                    release_checkpoint(new_chunks)
-                    release_checkpoint(cmerged)
+                if (
+                    chunk_feed_path is not None
+                    and new_chunks.limit(1).count() > 0
+                ):
+                    new_chunks.withColumn(
+                        "__epoch_id", F.lit(epoch_val)
+                    ).write.mode("overwrite").option(
+                        "partitionOverwriteMode", "dynamic"
+                    ).partitionBy("__epoch_id").parquet(chunk_feed_path)
+                cstore.commit(cmerged)
             writer = append_to_minhash_index if index_exists else write_minhash_index
             writer(
                 ba,
@@ -538,10 +523,6 @@ def run_incremental_dedup_stream(
                 compact_minhash_index_if_needed(
                     spark, index_table, compact_max_files_per_bucket
                 )
-        finally:
-            release_checkpoint(ba)
-            if pairs is not None:
-                release_checkpoint(pairs)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)
@@ -624,11 +605,8 @@ def run_exact_dedup_stream(
         marker = f"{marker_dir}/{epoch_val}"
         if fsio.exists(spark, marker):
             return
-        batch = _tracked_local_checkpoint(
-            batch_df.select(F.col(id_col), F.col(text_col))
-        )
-        pairs = None
-        try:
+        with barrier_scope(spark):
+            batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
             index_exists = spark.catalog.tableExists(index_table)
             if index_exists:
                 pairs = incremental_exact_jaccard(
@@ -645,7 +623,7 @@ def run_exact_dedup_stream(
                 pairs = allpairs_jaccard_join(
                     batch, id_col, text_col, threshold, shingle_n
                 )
-            pairs = _tracked_local_checkpoint(pairs)
+            pairs = barrier(pairs)
             if pairs.count() > 0:
                 pairs.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
                     "overwrite"
@@ -693,10 +671,6 @@ def run_exact_dedup_stream(
                     stats["num_buckets"], 1
                 ):
                     compact_shingle_index(spark, index_table)
-        finally:
-            release_checkpoint(batch)
-            if pairs is not None:
-                release_checkpoint(pairs)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)
@@ -781,11 +755,8 @@ def run_span_dedup_stream(
         marker = f"{marker_dir}/{epoch_val}"
         if fsio.exists(spark, marker):
             return
-        batch = _tracked_local_checkpoint(
-            batch_df.select(F.col(id_col), F.col(text_col))
-        )
-        spans = None
-        try:
+        with barrier_scope(spark):
+            batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
             index_exists = spark.catalog.tableExists(index_table)
             if index_exists:
                 spans = incremental_duplicated_spans(
@@ -802,7 +773,7 @@ def run_span_dedup_stream(
                     batch, id_col, text_col, k,
                     min_span_tokens=min_span_tokens,
                 )
-            spans = _tracked_local_checkpoint(spans)
+            spans = barrier(spans)
             if spans.count() > 0:
                 spans.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
                     "overwrite"
@@ -849,10 +820,6 @@ def run_span_dedup_stream(
                     stats["num_buckets"], 1
                 ):
                     compact_kgram_index(spark, index_table)
-        finally:
-            release_checkpoint(batch)
-            if spans is not None:
-                release_checkpoint(spans)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

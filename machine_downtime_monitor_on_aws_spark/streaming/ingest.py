@@ -43,7 +43,8 @@ from ..operators.classify import (
 from ..operators.latest import latest_by_key
 from ..operators.normalize import parse_envelopes
 from ..sources.lake import with_day_partitions
-from .store import KeyedParquetStore, release_checkpoint
+from ..session import barrier_scope, release_checkpoint
+from .store import KeyedParquetStore
 
 ENVELOPE_SCHEMA = "record_id STRING, partition_key STRING, arrival_ts DOUBLE, data STRING"
 
@@ -421,107 +422,113 @@ def run_ingest_stream(
 
         parsed = None
         reportable = None
-        try:
-            batch_df = batch_df.persist()
-            parsed = parse_envelopes(batch_df, list(cfg.formats)).persist()
-            # (c) raw archive first - archives even rejected records
-            # (S12: Firehose taps the stream before the filter Lambda)
-            if sinks.archive_path:
-                batch_df.write.mode("append").json(sinks.archive_path)
+        with barrier_scope(spark):
+            try:
+                batch_df = batch_df.persist()
+                parsed = parse_envelopes(batch_df, list(cfg.formats)).persist()
+                # (c) raw archive first - archives even rejected records
+                # (S12: Firehose taps the stream before the filter Lambda)
+                if sinks.archive_path:
+                    batch_df.write.mode("append").json(sinks.archive_path)
 
-            if sinks.rejects_path:
-                _, rejected = split_rejects(parsed)
-                rejected.drop("messages").write.mode("append").json(sinks.rejects_path)
-
-            messages = explode_messages(
-                parsed, list(cfg.formats), keep_cols=["record_id"]
-            )
-            classified = classify_messages(
-                messages, machine_config_df(batch_df.sparkSession, list(cfg.machines))
-            )
-            reportable = reportable_messages(classified).persist()
-
-            # (a) real-time store: day-partitioned (S8/S9), TTL column;
-            # rows cluster by machine id inside each day so the
-            # reference's key-range reads (S4) skip row groups within
-            # the day file, not just prune partitions. The write is
-            # IDEMPOTENT per epoch (T9): a trailing batch_epoch
-            # partition + dynamic partition overwrite means a retried
-            # epoch (crash after this sink, before the checkpoint
-            # commit or a later sink) REPLACES its own partial output
-            # instead of appending duplicates. Readers still prune on
-            # year/month/day; read_lake drops the bookkeeping column.
-            # (The raw archive above stays plain append = at-least-
-            # once, matching the reference's Firehose tap semantics.)
-            rows = to_real_time_rows(reportable, cfg.retention_hours)
-            day_rows = with_day_partitions(
-                rows.withColumn(
-                    "event_ts", F.timestamp_seconds(F.col("message_timestamp"))
-                ),
-                "event_ts",
-            ).withColumn("batch_epoch", F.lit(f"{sink_token}-{epoch_id}"))
-            day_rows.sortWithinPartitions(
-                "year", "month", "day", "id"
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("year", "month", "day", "batch_epoch").parquet(
-                sinks.realtime_path
-            )
-
-            # (b) latest-status + change-only emission (A1/T3): keyed
-            # upsert store - merge touches ONLY the key-hash buckets
-            # the batch hits (partition-pruned; O(batch), never
-            # O(snapshot)) - and the returned deltas ARE the change
-            # feed.
-            status_msgs = reportable.filter(F.col("msg_type") == "STATUS")
-            latest = latest_by_key(
-                status_msgs, ["machine_id"], "event_epoch", ["status"]
-            ).select("machine_id", "status", F.col("event_epoch").alias("status_epoch"))
-            if sinks.snapshot_path:
-                store = KeyedParquetStore(
-                    sinks.snapshot_path, "machine_id", sinks.snapshot_buckets
-                )
-                # two-phase upsert, feed published BEFORE the store
-                # commit and WRITE-ONCE per epoch (the old
-                # upsert-then-append order silently LOST feed rows
-                # when a crash landed between them). Crash windows:
-                # during the feed write -> partition never surfaced,
-                # retry republishes the full set; between feed and
-                # commit (incl. a PARTIAL commit) -> the published
-                # partition survives untouched - the retry's
-                # recomputed deltas can be a subset once some buckets
-                # committed, which is exactly why it must not rewrite
-                # the feed; after commit -> feed already published,
-                # commit re-converges idempotently.
-                deltas, merged = store.plan_upsert(latest, compare_col="status")
-                epoch_val = f"{sink_token}-{epoch_id}"
-                if sinks.change_feed_path and not _feed_epoch_published(
-                    batch_df.sparkSession, sinks.change_feed_path, epoch_val
-                ):
-                    deltas.withColumn(
-                        "__epoch_id", F.lit(epoch_val)
-                    ).write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("__epoch_id").parquet(sinks.change_feed_path)
-                if sinks.change_feed is not None:
-                    # test-only observability: deltas are one row per
-                    # *changed* machine, driver-safe by construction
-                    delta_rows = [r.asDict() for r in deltas.collect()]
-                    sinks.change_feed.extend(
-                        sorted(delta_rows, key=lambda r: r["machine_id"])
+                if sinks.rejects_path:
+                    _, rejected = split_rejects(parsed)
+                    rejected.drop("messages").write.mode("append").json(
+                        sinks.rejects_path
                     )
-                store.commit(merged)
-                # the two plan_upsert checkpoints are consumed by the
-                # feed write + commit above; release them or a
-                # long-lived query pins two RDDs per epoch forever
-                release_checkpoint(merged)
-                release_checkpoint(deltas)
-        finally:
-            if reportable is not None:
-                reportable.unpersist()
-            if parsed is not None:
-                parsed.unpersist()
-            batch_df.unpersist()
+
+                messages = explode_messages(
+                    parsed, list(cfg.formats), keep_cols=["record_id"]
+                )
+                classified = classify_messages(
+                    messages,
+                    machine_config_df(batch_df.sparkSession, list(cfg.machines)),
+                )
+                reportable = reportable_messages(classified).persist()
+
+                # (a) real-time store: day-partitioned (S8/S9), TTL column;
+                # rows cluster by machine id inside each day so the
+                # reference's key-range reads (S4) skip row groups within
+                # the day file, not just prune partitions. The write is
+                # IDEMPOTENT per epoch (T9): a trailing batch_epoch
+                # partition + dynamic partition overwrite means a retried
+                # epoch (crash after this sink, before the checkpoint
+                # commit or a later sink) REPLACES its own partial output
+                # instead of appending duplicates. Readers still prune on
+                # year/month/day; read_lake drops the bookkeeping column.
+                # (The raw archive above stays plain append = at-least-
+                # once, matching the reference's Firehose tap semantics.)
+                rows = to_real_time_rows(reportable, cfg.retention_hours)
+                day_rows = with_day_partitions(
+                    rows.withColumn(
+                        "event_ts", F.timestamp_seconds(F.col("message_timestamp"))
+                    ),
+                    "event_ts",
+                ).withColumn("batch_epoch", F.lit(f"{sink_token}-{epoch_id}"))
+                day_rows.sortWithinPartitions(
+                    "year", "month", "day", "id"
+                ).write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("year", "month", "day", "batch_epoch").parquet(
+                    sinks.realtime_path
+                )
+
+                # (b) latest-status + change-only emission (A1/T3): keyed
+                # upsert store - merge touches ONLY the key-hash buckets
+                # the batch hits (partition-pruned; O(batch), never
+                # O(snapshot)) - and the returned deltas ARE the change
+                # feed.
+                status_msgs = reportable.filter(F.col("msg_type") == "STATUS")
+                latest = latest_by_key(
+                    status_msgs, ["machine_id"], "event_epoch", ["status"]
+                ).select(
+                    "machine_id", "status", F.col("event_epoch").alias("status_epoch")
+                )
+                if sinks.snapshot_path:
+                    store = KeyedParquetStore(
+                        sinks.snapshot_path, "machine_id", sinks.snapshot_buckets
+                    )
+                    # two-phase upsert, feed published BEFORE the store
+                    # commit and WRITE-ONCE per epoch (the old
+                    # upsert-then-append order silently LOST feed rows
+                    # when a crash landed between them). Crash windows:
+                    # during the feed write -> partition never surfaced,
+                    # retry republishes the full set; between feed and
+                    # commit (incl. a PARTIAL commit) -> the published
+                    # partition survives untouched - the retry's
+                    # recomputed deltas can be a subset once some buckets
+                    # committed, which is exactly why it must not rewrite
+                    # the feed; after commit -> feed already published,
+                    # commit re-converges idempotently.
+                    deltas, merged = store.plan_upsert(latest, compare_col="status")
+                    epoch_val = f"{sink_token}-{epoch_id}"
+                    if sinks.change_feed_path and not _feed_epoch_published(
+                        batch_df.sparkSession, sinks.change_feed_path, epoch_val
+                    ):
+                        deltas.withColumn(
+                            "__epoch_id", F.lit(epoch_val)
+                        ).write.mode("overwrite").option(
+                            "partitionOverwriteMode", "dynamic"
+                        ).partitionBy("__epoch_id").parquet(sinks.change_feed_path)
+                    if sinks.change_feed is not None:
+                        # test-only observability: deltas are one row per
+                        # *changed* machine, driver-safe by construction
+                        delta_rows = [r.asDict() for r in deltas.collect()]
+                        sinks.change_feed.extend(
+                            sorted(delta_rows, key=lambda r: r["machine_id"])
+                        )
+                    store.commit(merged)
+                    # the two plan_upsert barriers are consumed by the
+                    # feed write + commit above; free them now (the epoch
+                    # scope frees them if anything above raises)
+                    release_checkpoint(merged)
+                    release_checkpoint(deltas)
+            finally:
+                if reportable is not None:
+                    reportable.unpersist()
+                if parsed is not None:
+                    parsed.unpersist()
+                batch_df.unpersist()
 
     return (
         source.writeStream.foreachBatch(process_batch)
@@ -581,19 +588,18 @@ def streaming_latest_status_durable(
         # feed-before-commit, checkpoint-token epoch key, write-once
         # per epoch: same exactly-once reasoning as
         # run_ingest_stream's snapshot leg
-        deltas, merged = store.plan_upsert(batch_df, compare_col="status")
-        epoch_val = f"{sink_token}-{epoch_id}"
-        if change_feed_path and not _feed_epoch_published(
-            batch_df.sparkSession, change_feed_path, epoch_val
-        ):
-            deltas.withColumn(
-                "__epoch_id", F.lit(epoch_val)
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("__epoch_id").parquet(change_feed_path)
-        store.commit(merged)
-        release_checkpoint(merged)
-        release_checkpoint(deltas)
+        with barrier_scope(batch_df.sparkSession):
+            deltas, merged = store.plan_upsert(batch_df, compare_col="status")
+            epoch_val = f"{sink_token}-{epoch_id}"
+            if change_feed_path and not _feed_epoch_published(
+                batch_df.sparkSession, change_feed_path, epoch_val
+            ):
+                deltas.withColumn(
+                    "__epoch_id", F.lit(epoch_val)
+                ).write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("__epoch_id").parquet(change_feed_path)
+            store.commit(merged)
 
     agg = source_messages.groupBy("machine_id").agg(
         F.max_by("status", F.col("event_epoch")).alias("status"),

@@ -43,8 +43,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.kneser_ney import trigram_counts
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import _tracked_local_checkpoint, release_checkpoint
 
 KN_DELTA_SCHEMA = "w1 string, w2 string, w3 string, c3 long, __epoch_id string"
 
@@ -75,10 +75,8 @@ def run_kn_counts_stream(
         # pin the batch's counts once: count() and write would each
         # re-derive the explode+aggregate otherwise (the sibling
         # decontam/shards loops' barrier discipline)
-        delta = _tracked_local_checkpoint(
-            trigram_counts(batch_df, toks_col_factory())
-        )
-        try:
+        with barrier_scope(spark):
+            delta = barrier(trigram_counts(batch_df, toks_col_factory()))
             if delta.count() > 0:
                 delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
                     "overwrite"
@@ -99,8 +97,6 @@ def run_kn_counts_stream(
                 )
                 if stale:
                     fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-        finally:
-            release_checkpoint(delta)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

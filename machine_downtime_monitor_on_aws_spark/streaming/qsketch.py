@@ -31,8 +31,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.qsketch import merge_sketches, sketch_bins
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import _tracked_local_checkpoint, release_checkpoint
 
 QSKETCH_DELTA_SCHEMA = (
     "source string, score_bin long, cnt long, __epoch_id string"
@@ -91,10 +91,10 @@ def run_quality_sketch_stream(
             F.col(source_col).alias("source"),
             score_col_factory().alias("__score"),
         )
-        delta = _tracked_local_checkpoint(
-            sketch_bins(scored, ["source"], "__score", lo, hi, n_bins)
-        )
-        try:
+        with barrier_scope(spark):
+            delta = barrier(
+                sketch_bins(scored, ["source"], "__score", lo, hi, n_bins)
+            )
             if delta.count() > 0:
                 delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
                     "overwrite"
@@ -115,8 +115,6 @@ def run_quality_sketch_stream(
                 )
                 if stale:
                     fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-        finally:
-            release_checkpoint(delta)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

@@ -46,8 +46,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.shards import assign_training_shards
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import _tracked_local_checkpoint, release_checkpoint
 
 
 def manifest_schema(key_cols_schema: str) -> str:
@@ -107,10 +107,10 @@ def run_shard_manifest_stream(
         marker = f"{marker_dir}/{epoch_val}"
         if fsio.exists(spark, marker):
             return
-        assigned = _tracked_local_checkpoint(
-            assign_training_shards(batch_df, key_cols, n_shards)
-        )
-        try:
+        with barrier_scope(spark):
+            assigned = barrier(
+                assign_training_shards(batch_df, key_cols, n_shards)
+            )
             if assigned.count() > 0:
                 committed = _read_feed().filter(
                     F.col("__epoch_id") != F.lit(epoch_val)
@@ -145,8 +145,6 @@ def run_shard_manifest_stream(
                     fsio.delete(
                         spark, f"{marker_dir}/{old}", recursive=False
                     )
-        finally:
-            release_checkpoint(assigned)
 
     return (
         pack_stream.writeStream.foreachBatch(process_batch)

@@ -49,8 +49,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.sketch import bloom_build, cms_build
+from ..session import barrier, barrier_scope
 from .ingest import _checkpoint_sink_token
-from .store import _tracked_local_checkpoint, release_checkpoint
 
 _PARAMS_NAME = "_sketch_params.json"
 
@@ -107,8 +107,8 @@ def run_delta_sketch_stream(
         marker = f"{marker_dir}/{epoch_val}"
         if fsio.exists(spark, marker):
             return
-        delta = _tracked_local_checkpoint(delta_fn(batch_df))
-        try:
+        with barrier_scope(spark):
+            delta = barrier(delta_fn(batch_df))
             if delta.count() > 0:
                 delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
                     "overwrite"
@@ -129,8 +129,6 @@ def run_delta_sketch_stream(
                 )
                 if stale:
                     fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-        finally:
-            release_checkpoint(delta)
 
     return (
         doc_stream.writeStream.foreachBatch(process_batch)

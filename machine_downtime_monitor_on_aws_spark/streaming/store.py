@@ -39,85 +39,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.latest import changed_rows
+from ..session import barrier, release_checkpoint
 
 _BUCKET_COL = "__kb"
-
-
-def _tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Eager localCheckpoint that records which RDD id it pinned
-    (as ``_spark_graft_ckpt_ids`` on the returned frame) so
-    :func:`release_checkpoint` can free it deterministically.
-    Neither ``DataFrame.unpersist()`` nor dropping the Python
-    reference releases a localCheckpoint's blocks (verified on
-    PySpark 4.1), and a long-lived streaming query that checkpoints
-    per micro-batch would otherwise pin two RDDs per epoch for the
-    life of the query.
-
-    The pinned id is read DIRECTLY off the returned frame's plan -
-    ``Dataset.localCheckpoint`` wraps exactly the RDD it persisted in
-    a ``LogicalRDD`` node - never by diffing the context-global
-    persistent-RDD set: with two concurrent streaming queries on one
-    SparkContext (ingest + incremental dedup both run through here),
-    a diff window can capture the OTHER thread's in-flight persist
-    and release_checkpoint would then unpersist a foreign
-    localCheckpoint that cannot be recomputed (r5 advice).
-
-    ``eager=False`` defers materialization to the first action (the
-    id is still registered at mark time) - for query builders that
-    must stay lazy (the catalog contract) while keeping their
-    barrier frames releasable."""
-    # Nested barrier ids ride OUTWARD: a frame that itself carries
-    # tracked ids (e.g. candidate_pairs_exact's internal band-array
-    # barrier) must not have them orphaned by an outer checkpoint -
-    # release_checkpoint(outer) frees every pinned RDD in the chain.
-    # Release order is irrelevant (each id is unpersisted
-    # independently) and double-release is a no-op (released ids
-    # vanish from getPersistentRDDs).
-    inner = tuple(getattr(df, "_spark_graft_ckpt_ids", ()))
-    out = df.localCheckpoint(eager=eager)
-    try:
-        rid = int(out._jdf.queryExecution().analyzed().rdd().id())
-        out._spark_graft_ckpt_ids = (rid,) + inner
-    except Exception:
-        # plan-shape drift in a future Spark: leave the frame
-        # untracked (release becomes a no-op; bench/session sweeps
-        # still reclaim) rather than risk freeing the wrong RDD
-        out._spark_graft_ckpt_ids = inner
-    return out
-
-
-def _is_checkpoint_scan(df: DataFrame) -> bool:
-    """True when the frame's analyzed plan is a bare ``LogicalRDD``
-    scan - a (local)checkpoint, or any other RDD-backed frame
-    (createDataFrame of driver data) - i.e. there is NO upstream
-    expression pipeline that a multi-consumer barrier would protect
-    from double computation. Used to skip redundant barriers on
-    inputs that are already materialized once (the streaming paths
-    checkpoint every micro-batch before fanning out). Conservative
-    on any doubt: False means "add the barrier", which is always
-    safe."""
-    try:
-        return (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        )
-    except Exception:
-        return False
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks a :func:`_tracked_local_checkpoint` pinned.
-    Call ONLY after every consumer of the frame has executed - a
-    released localCheckpoint cannot be recomputed. No-op for frames
-    without tracking metadata."""
-    ids = getattr(df, "_spark_graft_ckpt_ids", ())
-    if not ids:
-        return
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
 
 
 @dataclass
@@ -156,7 +80,7 @@ class KeyedParquetStore:
         keep_existing: bool = False,
     ) -> tuple[DataFrame, DataFrame]:
         """Phase 1 of the merge: compute (deltas, merged) WITHOUT
-        writing the store. Both are materialized (localCheckpoint) so
+        writing the store. Both are eager barriers so
         their lineage doesn't re-read post-write state and the merge
         plan may legally write to the path it read from; the
         checkpoints hold only batch-sized and touched-bucket-sized
@@ -220,8 +144,8 @@ class KeyedParquetStore:
         else:
             deltas = updates
             merged = u
-        deltas = _tracked_local_checkpoint(deltas)
-        merged = _tracked_local_checkpoint(merged)
+        deltas = barrier(deltas)
+        merged = barrier(merged)
         return deltas, merged
 
     def commit(self, merged: DataFrame) -> None:
@@ -265,7 +189,7 @@ class KeyedParquetStore:
             return 0
         n_deleted = sum(r["__n"] for r in per_bucket)
         touched = [r[_BUCKET_COL] for r in per_bucket]
-        remaining = _tracked_local_checkpoint(
+        remaining = barrier(
             store.filter(F.col(_BUCKET_COL).isin(touched)).join(
                 F.broadcast(k), store[self.key_col] == F.col("__dk"), "left_anti"
             )
@@ -298,8 +222,8 @@ class KeyedParquetStore:
         ``compare_col`` changed; all update rows when ``compare_col``
         is None). Callers that publish the deltas somewhere durable
         should use the two-phase API and publish between the phases;
-        long-lived callers should :func:`release_checkpoint` the
-        returned deltas once consumed (merged is released here)."""
+        the returned deltas are a barrier, released by the enclosing
+        barrier_scope (merged is released here)."""
         deltas, merged = self.plan_upsert(updates, compare_col, keep_existing)
         self.commit(merged)
         release_checkpoint(merged)

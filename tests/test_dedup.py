@@ -1158,16 +1158,17 @@ def test_minhash_signature_selectexpr_matches_column_reference(spark):
 
 def test_candidate_pairs_exact_skips_barrier_on_checkpoint_input(spark):
     """The streaming dedup path hands candidate_pairs_exact an
-    already-checkpointed band table every micro-batch; a second
-    internal barrier there was pure cost plus one leaked pinned RDD
+    already-barriered band table every micro-batch; a second
+    internal barrier there was pure cost plus one more pinned RDD
     per epoch (r17 ADVICE #1)."""
     from machine_downtime_monitor_on_aws_spark.operators.dedup import (
         candidate_pairs_exact,
         minhash_band_arrays,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        _tracked_local_checkpoint,
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier,
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     df = spark.createDataFrame(
@@ -1175,32 +1176,35 @@ def test_candidate_pairs_exact_skips_barrier_on_checkpoint_input(spark):
         "doc_id long, text string",
     )
     ba = minhash_band_arrays(df, "doc_id", "text")
+    before = set(persistent_rdd_ids(spark))
 
-    # non-checkpoint input: internal lazy barrier, id rides the result
-    out = candidate_pairs_exact(ba, 4)
-    assert len(getattr(out, "_spark_graft_ckpt_ids", ())) == 1
-    out.count()
-    release_checkpoint(out)
+    # non-barrier input: one internal lazy barrier
+    with barrier_scope(spark):
+        candidate_pairs_exact(ba, 4).count()
+        assert len(set(persistent_rdd_ids(spark)) - before) == 1
+    assert not set(persistent_rdd_ids(spark)) - before
 
-    # checkpointed input: NO extra barrier; the input's own id rides
-    ck = _tracked_local_checkpoint(minhash_band_arrays(df, "doc_id", "text"))
-    out2 = candidate_pairs_exact(ck, 4)
-    assert tuple(out2._spark_graft_ckpt_ids) == tuple(ck._spark_graft_ckpt_ids)
-    out2.count()
-    release_checkpoint(ck)
+    # barriered input: NO extra barrier
+    with barrier_scope(spark):
+        ck = barrier(minhash_band_arrays(df, "doc_id", "text"))
+        candidate_pairs_exact(ck, 4).count()
+        assert len(set(persistent_rdd_ids(spark)) - before) == 1
+    assert not set(persistent_rdd_ids(spark)) - before
 
 
-def test_incremental_candidate_pairs_rides_ckpt_ids(spark):
-    """r17 ADVICE #1: unionByName drops python attrs; the streaming
-    caller must still be able to free the self-join leg's barrier."""
+def test_incremental_candidate_pairs_barrier_released_by_scope(spark):
+    """r17 ADVICE #1: the batch band table's barrier (shared by the
+    history probe and the self-join leg) is the probe's only pin, and
+    the streaming caller's scope frees it."""
     from machine_downtime_monitor_on_aws_spark.operators.dedup import (
         DEFAULT_NUM_BANDS,
         incremental_candidate_pairs,
         minhash_band_arrays,
         write_minhash_index,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     df = spark.createDataFrame(
@@ -1209,6 +1213,7 @@ def test_incremental_candidate_pairs_rides_ckpt_ids(spark):
     )
     table = "t_icp_ids"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
+    before = set(persistent_rdd_ids(spark))
     try:
         write_minhash_index(
             minhash_band_arrays(df.filter("doc_id % 2 = 0"), "doc_id", "text"),
@@ -1217,21 +1222,46 @@ def test_incremental_candidate_pairs_rides_ckpt_ids(spark):
             num_bands=DEFAULT_NUM_BANDS,
             shingle_n=5,
         )
+        # the index write released its own barrier
+        assert not set(persistent_rdd_ids(spark)) - before
         batch = minhash_band_arrays(
             df.filter("doc_id % 2 = 1"), "doc_id", "text"
         )
-        pairs = incremental_candidate_pairs(
-            spark, batch, table, DEFAULT_NUM_BANDS
-        )
-        # the vs_self leg's lazy barrier id must ride the union
-        assert len(getattr(pairs, "_spark_graft_ckpt_ids", ())) == 1
-        pairs.count()
-        release_checkpoint(pairs)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in pairs._spark_graft_ckpt_ids:
-            assert jmap.get(rid) is None
+        with barrier_scope(spark):
+            pairs = incremental_candidate_pairs(
+                spark, batch, table, DEFAULT_NUM_BANDS
+            )
+            pairs.count()
+            assert len(set(persistent_rdd_ids(spark)) - before) == 1
+        assert not set(persistent_rdd_ids(spark)) - before
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_connected_components_large_releases_pins_in_scope(spark):
+    """The distributed propagation pins its edge tables and every
+    round's labels; inside a scope all of them end with it (they
+    used to bypass tracking and leak several RDDs per call)."""
+    from machine_downtime_monitor_on_aws_spark.operators.dedup import (
+        connected_components,
+    )
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a long, doc_b long"
+    )
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        got = {
+            (r.doc_id, r.component)
+            for r in connected_components(pairs, size_hint="large").collect()
+        }
+        assert set(persistent_rdd_ids(spark)) - before
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)}
+    assert not set(persistent_rdd_ids(spark)) - before
 
 
 def test_simhash_md5_packed_votes_match_unpacked_reference(spark):

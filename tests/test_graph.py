@@ -105,38 +105,38 @@ def test_pagerank_matches_python_power_iteration(spark):
 
 def test_pagerank_checkpointed_identical_and_releasable(spark):
     """checkpoint_every truncates lineage without changing a single
-    bit (quantized sums make iterations deterministic); the pinned
-    ids ride the result and release frees them."""
+    bit (quantized sums make iterations deterministic); the pins live
+    until the caller's scope exits."""
     from machine_downtime_monitor_on_aws_spark.operators.graph import (
         pagerank_unrolled,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     pairs = [(str(a), str(b)) for a in range(8) for b in range(8) if a < b and (a + b) % 3]
     df = spark.createDataFrame(pairs, "id_a string, id_b string")
-    plain = {
-        r.node: (r.degree, r.pagerank)
-        for r in pagerank_unrolled(df, iters=6).collect()
-    }
-    ck = pagerank_unrolled(df, iters=6, checkpoint_every=2)
-    got = {r.node: (r.degree, r.pagerank) for r in ck.collect()}
-    assert got == plain
-    ids = ck._spark_graft_ckpt_ids
-    # superseded rank checkpoints (iterations 2 and 4) are released
-    # as soon as their successor materializes (r14 ADVICE); what
-    # rides the result is the three static graph-table barriers
-    # (edges/deg/nodes, r17) plus ONLY the live final rank checkpoint
-    assert len(ids) == 4
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(
-        jmap.get(rid) is not None for rid in ids
-    )  # live until the caller frees
-    release_checkpoint(ck)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(rid) is None for rid in ids)
-    release_checkpoint(pagerank_unrolled(df, iters=1))  # static-only path
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        plain = {
+            r.node: (r.degree, r.pagerank)
+            for r in pagerank_unrolled(df, iters=6).collect()
+        }
+    assert not set(persistent_rdd_ids(spark)) - before
+    with barrier_scope(spark):
+        ck = pagerank_unrolled(df, iters=6, checkpoint_every=2)
+        got = {r.node: (r.degree, r.pagerank) for r in ck.collect()}
+        assert got == plain
+        # superseded rank checkpoints (iterations 2 and 4) are released
+        # as soon as their successor materializes (r14 ADVICE); what
+        # stays pinned is the three static graph-table barriers
+        # (edges/deg/nodes, r17) plus ONLY the live final rank checkpoint
+        assert len(set(persistent_rdd_ids(spark)) - before) == 4
+    assert not set(persistent_rdd_ids(spark)) - before
+    with barrier_scope(spark):
+        pagerank_unrolled(df, iters=1)  # static-only path
+    assert not set(persistent_rdd_ids(spark)) - before
 
     import pytest
 

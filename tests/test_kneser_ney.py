@@ -148,25 +148,24 @@ def test_plan_explodes_corpus_once_text_never_shuffles(spark):
 
 
 def test_kn_barriers_tracked_and_releasable(spark):
-    """The trigram/type-table lazy checkpoint barriers (one corpus
-    explode instead of four - measured 3.42 -> 2.35 s at sf0.1) ride
-    the result as _spark_graft_ckpt_ids per the catalog resource
-    contract: all three pinned RDDs exist after consumption and
-    release_checkpoint frees exactly them."""
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    """The trigram/type-table lazy barriers (one corpus explode
+    instead of four - measured 3.42 -> 2.35 s at sf0.1) follow the
+    catalog resource contract: all three pinned RDDs exist while the
+    caller's scope consumes the result, and the scope frees exactly
+    them."""
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     df = spark.createDataFrame(
         [(i, f"a b c w{i % 3} a b c") for i in range(12)],
         "doc_id long, text string",
     )
-    out = kn_trigram_doc_scores(df, F.split(F.col("text"), " "))
-    ids = getattr(out, "_spark_graft_ckpt_ids", ())
-    assert len(ids) == 3, ids
-    assert out.count() == 12  # materializes the lazy barriers
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(rid) is not None for rid in ids)
-    release_checkpoint(out)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(rid) is None for rid in ids)
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        out = kn_trigram_doc_scores(df, F.split(F.col("text"), " "))
+        assert out.count() == 12  # materializes the lazy barriers
+        pinned = set(persistent_rdd_ids(spark)) - before
+        assert len(pinned) == 3, pinned
+    assert not set(persistent_rdd_ids(spark)) - before

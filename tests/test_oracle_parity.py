@@ -4,6 +4,10 @@ check: row count, column names, and order-insensitive value equality.
 Floats compare exactly (the catalog is engineered for bit-identical
 doubles/decimals); if a query here needs tolerance, it will flake in
 the driver too - fix the query, not the test.
+
+Every query also runs under the catalog resource contract: built and
+consumed inside one ``barrier_scope``, it must leave no pinned RDD
+behind.
 """
 
 from __future__ import annotations
@@ -15,6 +19,10 @@ import duckdb
 import pytest
 
 from machine_downtime_monitor_on_aws_spark.plans import catalog
+from machine_downtime_monitor_on_aws_spark.session import (
+    barrier_scope,
+    persistent_rdd_ids,
+)
 from machine_downtime_monitor_on_aws_spark.tables import TABLE_NAMES, table_path
 
 from conftest import SF_ORACLE
@@ -53,9 +61,13 @@ def _canon(rows, cols):
 @pytest.mark.parametrize("name", sorted(catalog.oracle_sql().keys()))
 def test_query_matches_oracle(spark, name):
     spec = catalog.REGISTRY[name]
-    sdf = spec.fn(spark, SF_ORACLE)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        sdf = spec.fn(spark, SF_ORACLE)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    leaked = set(persistent_rdd_ids(spark)) - before
+    assert not leaked, f"{name}: pinned RDDs outlive the scope: {leaked}"
 
     con = _duck(SF_ORACLE)
     res = con.execute(spec.oracle)
@@ -72,9 +84,13 @@ def test_query_matches_oracle(spark, name):
 @pytest.mark.parametrize("name", sorted(set(catalog.REGISTRY) - set(catalog.oracle_sql())))
 def test_rows_only_queries_run(spark, name):
     spec = catalog.REGISTRY[name]
-    df = spec.fn(spark, SF_ORACLE)
-    assert df.count() >= 0
-    assert df.columns
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        df = spec.fn(spark, SF_ORACLE)
+        assert df.count() >= 0
+        assert df.columns
+    leaked = set(persistent_rdd_ids(spark)) - before
+    assert not leaked, f"{name}: pinned RDDs outlive the scope: {leaked}"
 
 
 @pytest.mark.parametrize("name", sorted(catalog.REGISTRY))

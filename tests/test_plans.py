@@ -1015,6 +1015,52 @@ def test_reregister_bucketed_table_cold_session(spark, tmp_path):
     fsio.delete(spark, loc)
 
 
+def _table_props(spark, table):
+    return {r.key: r.value for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
+
+
+def test_reregister_escapes_quoted_property_values(spark):
+    """Stamped property values (and the location) reach the restore
+    DDL as SQL string literals: a single quote or a backslash in a
+    value must round-trip verbatim, not break - or inject into - the
+    CREATE TABLE statement."""
+    from machine_downtime_monitor_on_aws_spark import fsio
+    from machine_downtime_monitor_on_aws_spark.sources.lake import (
+        reregister_bucketed_table,
+        stamp_bucketspec,
+    )
+
+    table = "t_rereg_quoted"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    loc = f"{wh.rstrip('/')}/{table}"
+    fsio.delete(spark, loc)
+    value = "it's a \\ path', 'spark_graft.x'='y"
+    try:
+        spark.createDataFrame([(1, "a")], "k int, v string").write.bucketBy(
+            2, "k"
+        ).saveAsTable(table)
+        spark.sql(
+            f"ALTER TABLE {table} SET TBLPROPERTIES "
+            "('spark_graft.note'='it\\'s a \\\\ path\\', \\'spark_graft.x\\'=\\'y')"
+        )
+        assert _table_props(spark, table)["spark_graft.note"] == value
+        stamp_bucketspec(spark, table)
+
+        aside = loc + "__aside"
+        assert fsio.rename(spark, loc, aside)
+        spark.sql(f"DROP TABLE {table}")
+        assert fsio.rename(spark, aside, loc)
+
+        assert reregister_bucketed_table(spark, table) is True
+        assert _table_props(spark, table)["spark_graft.note"] == value
+        assert "spark_graft.x" not in _table_props(spark, table)
+        assert [tuple(r) for r in spark.table(table).collect()] == [(1, "a")]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        fsio.delete(spark, loc)
+
+
 def test_reregister_refuses_without_sidecar(spark):
     """A location without a COMPLETE sidecar (interrupted build, or a
     pre-r18 index) is not restorable - the caller must rebuild."""

@@ -252,21 +252,24 @@ def test_quality_gate_plan_and_oracle_parity(spark):
         _QS_GATE_SQL,
         quality_gate_from_sketch,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
     from machine_downtime_monitor_on_aws_spark.tables import table_path
 
-    out = quality_gate_from_sketch(spark, SF_ORACLE)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "SinglePartition" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        out = quality_gate_from_sketch(spark, SF_ORACLE)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("formatted")
+        plan = buf.getvalue()
+        assert "SinglePartition" not in plan, plan
+        assert "BroadcastExchange" in plan, plan
 
-    got = sorted(map(tuple, out.collect()))
-    release_checkpoint(out)
+        got = sorted(map(tuple, out.collect()))
+    assert not set(persistent_rdd_ids(spark)) - before
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "

@@ -145,27 +145,26 @@ def test_tfidf_rank_matches_python_model(spark):
 
 
 def test_tfidf_barriers_tracked_and_releasable(spark):
-    """The r14 lazy checkpoint barriers (one corpus explode instead
-    of three) ride the result as _spark_graft_ckpt_ids per the
-    catalog resource contract: both pinned RDDs exist after
-    consumption and release_checkpoint frees exactly them."""
+    """The r14 lazy barriers (one corpus explode instead of three)
+    follow the catalog resource contract: both pinned RDDs exist
+    while the caller's scope consumes the result, and the scope frees
+    exactly them."""
     from machine_downtime_monitor_on_aws_spark.operators.retrieval import (
         tfidf_rank,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     df = spark.createDataFrame(
         [(i, f"w{i % 3} join hash x{i}") for i in range(20)],
         "doc_id long, text string",
     )
-    out = tfidf_rank(df, ["join", "hash"], 5)
-    ids = getattr(out, "_spark_graft_ckpt_ids", ())
-    assert len(ids) == 2, ids
-    assert out.count() == 5  # materializes the lazy barriers
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(rid) is not None for rid in ids)
-    release_checkpoint(out)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(rid) is None for rid in ids)
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        out = tfidf_rank(df, ["join", "hash"], 5)
+        assert out.count() == 5  # materializes the lazy barriers
+        pinned = set(persistent_rdd_ids(spark)) - before
+        assert len(pinned) == 2, pinned
+    assert not set(persistent_rdd_ids(spark)) - before

@@ -213,26 +213,23 @@ def test_vocab_freq_items_superset_of_heavy_hitters(spark):
 
 
 def test_minhash_estimate_qa_checkpoints_released(spark):
-    """r5 advice: the estimator QA's three lazy barrier frames ride
-    their pinned RDD ids on the returned frame; release_checkpoint
-    frees them after consumption (no indefinite pinning in
-    long-lived sessions)."""
+    """r5 advice: the estimator QA's lazy barrier frames stay pinned
+    while the caller's scope consumes the result and are freed when
+    it exits (no indefinite pinning in long-lived sessions)."""
     from machine_downtime_monitor_on_aws_spark.plans.textops import (
         minhash_estimate_qa,  # retired from the registry (r10 swap)
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
-    df = minhash_estimate_qa(spark, SF_ORACLE)
-    ids = getattr(df, "_spark_graft_ckpt_ids", ())
-    # sig, pairs (outer + candidate_pairs_exact's inner band barrier,
-    # riding outward since the r18 nested-id merge - ADVICE #3),
-    # shingles
-    assert len(ids) == 4
-    assert df.count() > 0  # materializes the lazy checkpoints
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(i) is not None for i in ids)
-    release_checkpoint(df)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert all(jmap.get(i) is None for i in ids)
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        df = minhash_estimate_qa(spark, SF_ORACLE)
+        assert df.count() > 0  # materializes the lazy barriers
+        # sig, pairs (outer + candidate_pairs_exact's inner band
+        # barrier), shingles
+        pinned = set(persistent_rdd_ids(spark)) - before
+        assert len(pinned) == 4, pinned
+    assert not set(persistent_rdd_ids(spark)) - before

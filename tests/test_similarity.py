@@ -47,6 +47,25 @@ def test_lsh_cap_noop_for_small_buckets(spark):
     assert capped == uncapped and capped
 
 
+def test_lsh_capped_releases_pin_in_scope(spark):
+    """Capped mode rewrites the bucket table after its barrier; the
+    barrier still belongs to the caller's scope and ends with it (it
+    used to leak one pinned RDD per call)."""
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
+    )
+
+    rows = [(i, [1.0, 0.0, 0.0, float(i % 2)]) for i in range(120)]
+    df = spark.createDataFrame(rows, "vec_id long, vec array<double>")
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        n = lsh_neardup_pairs(df, 0.9, 4, 4, max_bucket_size=50).count()
+        assert len(set(persistent_rdd_ids(spark)) - before) == 1
+    assert n > 0
+    assert not set(persistent_rdd_ids(spark)) - before
+
+
 def test_num_planes_none_derives_from_count(spark):
     rows = [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, vec array<double>")

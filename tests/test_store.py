@@ -97,86 +97,143 @@ def test_upsert_without_compare_col_returns_all(spark, tmp_path):
 def test_keyed_store_first_seen_wins(spark, tmp_path):
     """keep_existing=True: a key already in the store keeps its
     stored row (content-addressed semantics), deltas are exactly the
-    new keys, and replaying the same batch is a no-op."""
+    new keys, and replaying the same batch is a no-op. The upsert
+    barriers all end with the caller's scope."""
     import pytest
 
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
+    )
     from machine_downtime_monitor_on_aws_spark.streaming.store import (
         KeyedParquetStore,
-        release_checkpoint,
     )
 
+    before = set(persistent_rdd_ids(spark))
     store = KeyedParquetStore(str(tmp_path / "cas"), "k", 8)
-    b1 = spark.createDataFrame([("a", 1), ("b", 1)], "k string, ref int")
-    d1 = store.upsert(b1, keep_existing=True)
-    assert {(r.k, r.ref) for r in d1.collect()} == {("a", 1), ("b", 1)}
-    release_checkpoint(d1)
+    with barrier_scope(spark):
+        b1 = spark.createDataFrame([("a", 1), ("b", 1)], "k string, ref int")
+        d1 = store.upsert(b1, keep_existing=True)
+        assert {(r.k, r.ref) for r in d1.collect()} == {("a", 1), ("b", 1)}
 
-    # second batch: 'a' re-arrives with a DIFFERENT ref (first seen
-    # wins - stored row keeps ref 1), 'c' is genuinely new
-    b2 = spark.createDataFrame([("a", 2), ("c", 2)], "k string, ref int")
-    d2 = store.upsert(b2, keep_existing=True)
-    assert {(r.k, r.ref) for r in d2.collect()} == {("c", 2)}
-    release_checkpoint(d2)
-    assert {(r.k, r.ref) for r in store.read(spark).collect()} == {
-        ("a", 1), ("b", 1), ("c", 2),
-    }
+        # second batch: 'a' re-arrives with a DIFFERENT ref (first seen
+        # wins - stored row keeps ref 1), 'c' is genuinely new
+        b2 = spark.createDataFrame([("a", 2), ("c", 2)], "k string, ref int")
+        d2 = store.upsert(b2, keep_existing=True)
+        assert {(r.k, r.ref) for r in d2.collect()} == {("c", 2)}
+        assert {(r.k, r.ref) for r in store.read(spark).collect()} == {
+            ("a", 1), ("b", 1), ("c", 2),
+        }
 
-    # replaying a fully-landed batch produces zero deltas
-    d3 = store.upsert(b2, keep_existing=True)
-    assert d3.count() == 0
-    release_checkpoint(d3)
+        # replaying a fully-landed batch produces zero deltas
+        d3 = store.upsert(b2, keep_existing=True)
+        assert d3.count() == 0
+    assert not set(persistent_rdd_ids(spark)) - before
 
     with pytest.raises(ValueError, match="mutually exclusive"):
         store.plan_upsert(b2, compare_col="ref", keep_existing=True)
 
 
-def test_tracked_checkpoint_merges_nested_ids(spark):
-    """r17 ADVICE #3: checkpointing a frame that itself carries
-    tracked ids must ride them outward - release of the OUTER frame
-    frees every pinned RDD in the chain (and double-release stays a
-    no-op)."""
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        _tracked_local_checkpoint,
+def test_barrier_scope_releases_nested_barriers(spark):
+    """A barrier taken over another barrier pins a second RDD; each
+    belongs to the innermost open scope, which frees it on exit.
+    release_checkpoint frees one barrier early, and releasing it
+    again (or letting its scope release it again) is a no-op."""
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier,
+        barrier_scope,
+        persistent_rdd_ids,
         release_checkpoint,
     )
 
-    inner = _tracked_local_checkpoint(
-        spark.createDataFrame([(1, "a")], "k int, v string")
+    before = set(persistent_rdd_ids(spark))
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    with barrier_scope(spark):
+        inner = barrier(df)
+        with barrier_scope(spark):
+            outer = barrier(inner.withColumn("w", inner["k"] + 1))
+            assert len(set(persistent_rdd_ids(spark)) - before) == 2
+            assert outer.collect()[0]["w"] == 2
+        # the nested scope freed only its own pin
+        assert len(set(persistent_rdd_ids(spark)) - before) == 1
+        assert inner.count() == 1
+        release_checkpoint(inner)
+        assert not set(persistent_rdd_ids(spark)) - before
+        release_checkpoint(inner)
+    assert not set(persistent_rdd_ids(spark)) - before
+
+
+def test_barrier_scope_releases_on_raise(spark):
+    """A scope exited by an exception still frees its pins - the
+    failure path of a streaming epoch or a catalog query."""
+    import pytest
+
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier,
+        barrier_scope,
+        persistent_rdd_ids,
     )
-    assert len(inner._spark_graft_ckpt_ids) == 1
-    outer = _tracked_local_checkpoint(inner)
-    assert set(outer._spark_graft_ckpt_ids) >= set(inner._spark_graft_ckpt_ids)
-    assert len(outer._spark_graft_ckpt_ids) == 2
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in outer._spark_graft_ckpt_ids:
-        assert jmap.get(rid) is not None
-    release_checkpoint(outer)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in outer._spark_graft_ckpt_ids:
-        assert jmap.get(rid) is None
-    # releasing the inner again is a safe no-op
-    release_checkpoint(inner)
+
+    before = set(persistent_rdd_ids(spark))
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    with pytest.raises(RuntimeError, match="sink failed"):
+        with barrier_scope(spark):
+            barrier(df)
+            barrier(df.select("k"), eager=False)
+            assert len(set(persistent_rdd_ids(spark)) - before) == 2
+            raise RuntimeError("sink failed")
+    assert not set(persistent_rdd_ids(spark)) - before
+
+
+def test_barrier_scope_ignores_other_threads(spark):
+    """Scopes are per thread (a ContextVar): a scope open on one
+    thread never captures, and so never frees, a barrier another
+    thread takes meanwhile - two streaming queries on one context run
+    their epochs on different threads."""
+    import threading
+
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier,
+        barrier_scope,
+        persistent_rdd_ids,
+        release_checkpoint,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    other = {}
+    with barrier_scope(spark):
+        t = threading.Thread(target=lambda: other.setdefault("ck", barrier(df)))
+        t.start()
+        t.join()
+    ck = other["ck"]
+    try:
+        assert ck.count() == 1  # still pinned: readable after the scope
+        rid = int(ck._jdf.queryExecution().analyzed().rdd().id())
+        assert rid in persistent_rdd_ids(spark)
+    finally:
+        release_checkpoint(ck)
+    assert rid not in persistent_rdd_ids(spark)
 
 
 def test_is_checkpoint_scan_detects_barrier_frames(spark):
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        _is_checkpoint_scan,
-        _tracked_local_checkpoint,
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier,
+        barrier_scope,
+        is_barrier_scan,
     )
 
     # a createDataFrame frame is itself a bare RDD scan (no upstream
     # pipeline a barrier would protect) - True is correct for it too
     df = spark.createDataFrame([(1, "a")], "k int, v string")
-    assert _is_checkpoint_scan(df) is True
-    ck = _tracked_local_checkpoint(df)
-    assert _is_checkpoint_scan(ck) is True
-    # a transform on top is no longer a bare checkpoint scan
-    assert _is_checkpoint_scan(ck.select("k")) is False
-    # a storage-backed relation is not an RDD scan
-    import tempfile
+    assert is_barrier_scan(df) is True
+    with barrier_scope(spark):
+        ck = barrier(df)
+        assert is_barrier_scan(ck) is True
+        # a transform on top is no longer a bare barrier scan
+        assert is_barrier_scan(ck.select("k")) is False
+        # a storage-backed relation is not an RDD scan
+        import tempfile
 
-    with tempfile.TemporaryDirectory() as d:
-        ck.write.mode("overwrite").parquet(f"{d}/p")
-        assert _is_checkpoint_scan(spark.read.parquet(f"{d}/p")) is False
-    release_checkpoint(ck)
+        with tempfile.TemporaryDirectory() as d:
+            ck.write.mode("overwrite").parquet(f"{d}/p")
+            assert is_barrier_scan(spark.read.parquet(f"{d}/p")) is False

@@ -605,6 +605,31 @@ def test_failed_sink_releases_persisted_blocks(spark, dirs, tmp_path):
     assert leaked == set()
 
 
+def test_failed_store_commit_releases_upsert_barriers(spark, dirs, monkeypatch):
+    """A raise between plan_upsert and the early releases (here: the
+    store commit) must not leak the two upsert barriers - the epoch's
+    scope frees them on the way out, and the retry pins fresh ones."""
+    from machine_downtime_monitor_on_aws_spark.session import persistent_rdd_ids
+    from machine_downtime_monitor_on_aws_spark.streaming.store import (
+        KeyedParquetStore,
+    )
+
+    def failing_commit(self, merged):
+        raise OSError("store unavailable")
+
+    monkeypatch.setattr(KeyedParquetStore, "commit", failing_commit)
+    sinks = IngestSinks(realtime_path=dirs["realtime"], snapshot_path=dirs["snapshot"])
+    with open(os.path.join(dirs["src"], "b1.jsonl"), "w") as f:
+        f.write(_record("r1", _msg("site/a/p/m1/status", "u")))
+    before = set(persistent_rdd_ids(spark))
+    src = read_envelope_stream(spark, dirs["src"])
+    q = run_ingest_stream(spark, src, lambda: CFG, sinks, dirs["ckpt"])
+    with pytest.raises(Exception, match="store unavailable"):
+        q.awaitTermination(120)
+    leaked = set(persistent_rdd_ids(spark)) - before
+    assert leaked == set(), leaked
+
+
 def test_streaming_trending_terms(spark, tmp_path):
     """Windowed token counts over a document stream: finalized
     (window, term) rows with min_count pruning, append mode."""
@@ -2385,8 +2410,9 @@ def test_streaming_kn_counts_loop(spark, tmp_path):
         kn_counts_from_store,
         run_kn_counts_stream,
     )
-    from machine_downtime_monitor_on_aws_spark.streaming.store import (
-        release_checkpoint,
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
     )
 
     src = str(tmp_path / "docs")
@@ -2424,15 +2450,16 @@ def test_streaming_kn_counts_loop(spark, tmp_path):
     assert got_counts == want_counts and got_counts
 
     # scoring from the store == the one-shot batch operator
-    tr = trigram_rows(full, F.split(F.col("text"), " "))
-    from_store = kn_scores_from_counts(
-        tr, kn_counts_from_store(spark, counts_path)
-    )
-    batch = kn_trigram_doc_scores(full, F.split(F.col("text"), " "))
-    a = sorted(map(tuple, from_store.collect()))
-    b = sorted(map(tuple, batch.collect()))
-    release_checkpoint(from_store)
-    release_checkpoint(batch)
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        tr = trigram_rows(full, F.split(F.col("text"), " "))
+        from_store = kn_scores_from_counts(
+            tr, kn_counts_from_store(spark, counts_path)
+        )
+        batch = kn_trigram_doc_scores(full, F.split(F.col("text"), " "))
+        a = sorted(map(tuple, from_store.collect()))
+        b = sorted(map(tuple, batch.collect()))
+    assert not set(persistent_rdd_ids(spark)) - before
     assert a == b and len(a) == len(docs)
 
     run()  # no new data: marker + checkpoint make it a no-op
