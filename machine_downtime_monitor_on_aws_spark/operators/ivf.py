@@ -1091,7 +1091,16 @@ _IVFBIN_GUARD_OK: "_weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
 def _invalidate_ivfbin_guard(path: str) -> None:
     """Drop every session's cached clean-guard verdict for ``path`` -
     called by the in-process mutators (compact, rebuild) so the next
-    serve/append re-probes the directory state."""
+    serve/append re-probes the directory state.
+
+    Must-invalidate contract: any in-process code that can create a
+    guarded state (a ``corpus__old``/``corpus__compacting`` side dir,
+    or a missing ``corpus`` under a stamped index) must call this
+    after it touches the directory, or a cached clean verdict masks
+    the state. :func:`purge_from_ivf_corpus`, which also serves ivfbin
+    corpora, rewrites and deletes only leaf ``list_id`` partitions
+    inside ``corpus``, so it cannot create a guarded state and does
+    not call it. Deletions by another process are outside the contract."""
     key = path.rstrip("/")
     for paths in _IVFBIN_GUARD_OK.values():
         paths.discard(key)
@@ -1110,7 +1119,9 @@ def _guard_ivfbin_corpus(spark: SparkSession, path: str) -> None:
     Cost discipline (r17 verdict #4): ONE child listing of the index
     root replaces three existence probes, and a clean verdict is
     cached per (session, path) - the serve path re-checks only after
-    an in-process compaction/rebuild invalidates it."""
+    an in-process compaction/rebuild invalidates it. The cache is
+    sound only under :func:`_invalidate_ivfbin_guard`'s
+    must-invalidate contract."""
     from .. import fsio
 
     root = path.rstrip("/")

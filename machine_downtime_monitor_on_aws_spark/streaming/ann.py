@@ -20,9 +20,8 @@ O(batch) work per micro-batch and EXACTLY-ONCE semantics throughout:
   rewrites exactly the same partitions - duplicates are structurally
   impossible (a plain parquet append would at-least-once duplicate
   vectors, and duplicated corpus rows silently eat top-k slots).
-- **epoch markers** (Hadoop-FS, same discipline as the dedup loop)
-  make fully-committed replays no-ops and are pruned by epoch id
-  parsed from the name.
+- **epoch markers**: both loops run on :func:`~.epochs.run_epochs`,
+  so fully-committed replays are no-ops.
 - **skew gate** (optional): after each committed epoch,
   ``rebalance_ivf_index_if_needed`` retrains when drift pushed one
   list past the share bound; the rebuild preserves the epoch layout
@@ -49,8 +48,7 @@ from ..operators.ivf import (
     read_ivf_index_params,
     rebalance_ivf_index_if_needed,
 )
-from ..session import barrier_scope
-from .ingest import _checkpoint_sink_token
+from .epochs import parse_epoch_val, run_epochs, superseded
 
 _STATS_SCHEMA = "dim int, n long, sum_q long, sumsq_q long"
 
@@ -75,21 +73,22 @@ def _add_stats(a: list, b: list) -> list:
     ]
 
 
-def _latest_snapshot_rows(spark, snap_dir, token, epoch_id):
+def _latest_snapshot_rows(spark, snap_dir, epoch_val):
     """Rows of the newest cumulative-stats snapshot STRICTLY BELOW
-    ``epoch_id`` for this checkpoint lineage, or None. A replayed
-    epoch's own (possibly half-written) snapshot is excluded so the
-    replay recomputes it from the same predecessor - that is what
-    makes the pre-marker snapshot write idempotent."""
+    ``epoch_val``'s epoch for this checkpoint lineage, or None. A
+    replayed epoch's own (possibly half-written) snapshot is excluded
+    so the replay recomputes it from the same predecessor - that is
+    what makes the pre-marker snapshot write idempotent."""
+    token, epoch_id = parse_epoch_val(epoch_val)
     best = None
     for name in fsio.list_names(spark, snap_dir):
         if not name.startswith("__epoch="):
             continue
-        tok, _, eid = name[len("__epoch="):].rpartition("-")
-        if tok != token or not eid.isdigit() or int(eid) >= epoch_id:
+        tok, eid = parse_epoch_val(name[len("__epoch="):])
+        if tok != token or eid is None or eid >= epoch_id:
             continue
-        if best is None or int(eid) > best[0]:
-            best = (int(eid), name)
+        if best is None or eid > best[0]:
+            best = (eid, name)
     if best is None:
         return None
     return (
@@ -148,119 +147,101 @@ def run_incremental_ann_stream(
     wrong answer. Per batch this adds one O(batch) dim-row
     aggregation and bounded dim-row driver pulls."""
     spark = vec_stream.sparkSession
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/ann_epochs"
-    fsio.mkdirs(spark, marker_dir)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        with barrier_scope(spark):
-            epoch_val = f"{token}-{epoch_id}"
-            marker = f"{marker_dir}/{epoch_val}"
-            if fsio.exists(spark, marker):
-                return  # fully committed epoch replayed after restart
-            e = batch_df.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str):
+        e = batch_df.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+        )
+        # NULL / mis-sized vectors: the batch operators fail fast on
+        # them (l2_norm raises - right for offline callers, a silent
+        # skip would bias an index or a statistic), but inside
+        # foreachBatch that raise lands BEFORE the epoch marker, so
+        # every restart replays the same poison batch and fails again
+        # - a wedged loop. Quarantine them
+        # instead: exactly-once via dynamic overwrite of this epoch's
+        # partition, same discipline as the corpus append itself.
+        ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
+        bad = e.filter(~ok)
+        if bad.limit(1).count() > 0:
+            bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                "__epoch"
+            ).json(checkpoint_dir.rstrip("/") + "/ann_rejects")
+        e = e.filter(ok)
+        if not read_ivf_index_params(spark, index_path):
+            # bootstrap: params.json is written LAST by build, so its
+            # absence means no committed skeleton - (re-)run the
+            # deterministic train+build; the batch itself lands via
+            # the idempotent epoch append below, never inside build
+            # (a bootstrap crash window must not double-insert it).
+            # A first batch SMALLER than n_centroids trains with
+            # k = batch size instead of raising (the raise
+            # wedged the loop - the marker never commits, so every
+            # restart replays the same too-small batch and fails
+            # again) and instead of returning (which would silently
+            # DROP the batch: foreachBatch advances the checkpoint
+            # either way). Fewer lists only coarsens pruning; the
+            # rebalance gate retrains to full k as the corpus grows.
+            if bootstrap_centroids is not None:
+                cents = bootstrap_centroids.select("cid", "cv")
+            else:
+                avail = e.limit(n_centroids).count()
+                if avail == 0:
+                    return  # nothing to train on yet; the epoch commits
+                from ..operators.kmeans import kmeans_fit_centroids_df
+
+                cents = kmeans_fit_centroids_df(
+                    e, min(n_centroids, avail), dim,
+                    iters=train_iters, init="hash",
+                ).select(F.col("cid"), F.col("cv"))
+            build_ivf_index(
+                e.limit(0), index_path, n_centroids, dim,
+                centroids=cents, epoch_partitioned=True,
             )
-            # NULL / mis-sized vectors: the batch operators fail fast on
-            # them (l2_norm raises - right for offline callers, a silent
-            # skip would bias an index or a statistic), but inside
-            # foreachBatch that raise lands BEFORE the epoch marker, so
-            # every restart replays the same poison batch and fails again
-            # - a wedged loop (the r7 bootstrap lesson). Quarantine them
-            # instead: exactly-once via dynamic overwrite of this epoch's
-            # partition, same discipline as the corpus append itself.
-            ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
-            bad = e.filter(~ok)
-            if bad.limit(1).count() > 0:
-                bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch"
-                ).json(checkpoint_dir.rstrip("/") + "/ann_rejects")
-            e = e.filter(ok)
-            if not read_ivf_index_params(spark, index_path):
-                # bootstrap: params.json is written LAST by build, so its
-                # absence means no committed skeleton - (re-)run the
-                # deterministic train+build; the batch itself lands via
-                # the idempotent epoch append below, never inside build
-                # (a bootstrap crash window must not double-insert it).
-                # A first batch SMALLER than n_centroids trains with
-                # k = batch size instead of raising (r7 advice: the raise
-                # wedged the loop - the marker never commits, so every
-                # restart replays the same too-small batch and fails
-                # again) and instead of returning (which would silently
-                # DROP the batch: foreachBatch advances the checkpoint
-                # either way). Fewer lists only coarsens pruning; the
-                # rebalance gate retrains to full k as the corpus grows.
-                if bootstrap_centroids is not None:
-                    cents = bootstrap_centroids.select("cid", "cv")
-                else:
-                    avail = e.limit(n_centroids).count()
-                    if avail == 0:
-                        return  # nothing to train on yet
-                    from ..operators.kmeans import kmeans_fit_centroids_df
+        append_to_ivf_index(e, index_path, dim, epoch=epoch_val)
+        # cumulative-population snapshot BEFORE the marker: the chain
+        # entry for epoch N is a pure function of (snapshot < N, batch
+        # N), so a crash-replayed epoch rewrites the identical
+        # partition - exactly-once, like the corpus append. Writing it
+        # pre-marker means a committed epoch's mass is never lost from
+        # the chain (post-marker it would vanish on a crash, biasing
+        # every future drift decision).
+        batch_stat_rows: list = []
+        cum_rows = None
+        stats_path = index_path.rstrip("/") + "__popstats"
+        snap_dir = index_path.rstrip("/") + "__popstats_cur"
+        if drift_smd_threshold is not None:
+            from ..operators.drift import embedding_population_stats
 
-                    cents = kmeans_fit_centroids_df(
-                        e, min(n_centroids, avail), dim,
-                        iters=train_iters, init="hash",
-                    ).select(F.col("cid"), F.col("cv"))
-                build_ivf_index(
-                    e.limit(0), index_path, n_centroids, dim,
-                    centroids=cents, epoch_partitioned=True,
-                )
-            append_to_ivf_index(e, index_path, dim, epoch=epoch_val)
-            # cumulative-population snapshot BEFORE the marker: the chain
-            # entry for epoch N is a pure function of (snapshot < N, batch
-            # N), so a crash-replayed epoch rewrites the identical
-            # partition - exactly-once, like the corpus append. Writing it
-            # pre-marker means a committed epoch's mass is never lost from
-            # the chain (post-marker it would vanish on a crash, biasing
-            # every future drift decision).
-            batch_stat_rows: list = []
-            cum_rows = None
-            stats_path = index_path.rstrip("/") + "__popstats"
-            snap_dir = index_path.rstrip("/") + "__popstats_cur"
-            if drift_smd_threshold is not None:
-                from ..operators.drift import embedding_population_stats
+            # e is the quarantine-filtered well-formed subset, so the
+            # operator's fail-fast (which would otherwise kill the
+            # query, contradicting the advisory-gate contract) cannot
+            # fire here. <= dim rows: the bounded-pull
+            # class (centroid fetches).
+            batch_stat_rows = embedding_population_stats(
+                e, "vec", dim
+            ).collect()
+            if batch_stat_rows and fsio.exists(
+                spark, f"{stats_path}/_STORE_OK"
+            ):
+                prev = _latest_snapshot_rows(spark, snap_dir, epoch_val)
+                if prev is None:
+                    # fresh chain: the reference IS the population at
+                    # the last (re)train - start accumulating from it
+                    from ..operators.drift import read_population_stats
 
-                # e is the quarantine-filtered well-formed subset, so the
-                # operator's fail-fast (which would otherwise kill the
-                # query, contradicting the advisory-gate contract) cannot
-                # fire here (r14 ADVICE). <= dim rows: the bounded-pull
-                # class (centroid fetches).
-                batch_stat_rows = embedding_population_stats(
-                    e, "vec", dim
-                ).collect()
-                if batch_stat_rows and fsio.exists(
-                    spark, f"{stats_path}/_STORE_OK"
-                ):
-                    prev = _latest_snapshot_rows(spark, snap_dir, token, epoch_id)
-                    if prev is None:
-                        # fresh chain: the reference IS the population at
-                        # the last (re)train - start accumulating from it
-                        from ..operators.drift import read_population_stats
+                    prev = read_population_stats(spark, stats_path).collect()
+                cum_rows = _add_stats(prev, batch_stat_rows)
+                spark.createDataFrame(cum_rows, _STATS_SCHEMA).withColumn(
+                    "__epoch", F.lit(epoch_val)
+                ).write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("__epoch").parquet(snap_dir)
 
-                        prev = read_population_stats(spark, stats_path).collect()
-                    cum_rows = _add_stats(prev, batch_stat_rows)
-                    spark.createDataFrame(cum_rows, _STATS_SCHEMA).withColumn(
-                        "__epoch", F.lit(epoch_val)
-                    ).write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("__epoch").parquet(snap_dir)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            # prune committed markers older than this epoch (ordering by
-            # the epoch id parsed from the name, never mtime; foreign
-            # lineage tokens are stale by construction)
-            for old in fsio.list_names(spark, marker_dir):
-                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                if old_tok != token or (old_eid.isdigit() and int(old_eid) < epoch_id):
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-            # maintenance AFTER the epoch committed (same placement as the
-            # dedup loop's compaction): the rebuild never races its own
-            # epoch's write, and a crash mid-swap leaves both copies on
-            # disk rather than a half-updated index
+        def after_commit() -> None:
+            # a crash mid-swap leaves both copies on disk rather than a
+            # half-updated index
             rebuilt = False
             if rebalance_max_list_share is not None:
                 rebuilt = rebalance_ivf_index_if_needed(
@@ -325,20 +306,14 @@ def run_incremental_ann_stream(
                     # chain hygiene: epoch N's snapshot supersedes all
                     # earlier ones (and any foreign-token leftovers)
                     for old in fsio.list_names(spark, snap_dir):
-                        if not old.startswith("__epoch="):
-                            continue
-                        tok, _, eid = old[len("__epoch="):].rpartition("-")
-                        if tok != token or (
-                            eid.isdigit() and int(eid) < epoch_id
+                        if old.startswith("__epoch=") and superseded(
+                            old[len("__epoch="):], epoch_val
                         ):
                             fsio.delete(spark, f"{snap_dir}/{old}")
 
-    return (
-        vec_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return after_commit
+
+    return run_epochs(vec_stream, checkpoint_dir, "ann", body)
 
 
 def run_incremental_ivfbin_stream(
@@ -356,10 +331,11 @@ def run_incremental_ivfbin_stream(
     """The binary tier's ingest loop: keep a persisted IVF-binary
     index (operators/ivf.build_ivfbin_index - 16-byte codes, coarse
     partition pruning) current with O(batch) work per micro-batch,
-    under the run_incremental_ann_stream crash contract (epoch
-    markers; per-epoch idempotent dynamic overwrite of the batch's
-    own (__epoch, touched-list) partitions; malformed-vector
-    quarantine so a poison batch cannot wedge the loop).
+    under the run_incremental_ann_stream crash contract
+    (:func:`~.epochs.run_epochs`; per-epoch idempotent dynamic
+    overwrite of the batch's own (__epoch, touched-list) partitions;
+    malformed-vector quarantine so a poison batch cannot wedge the
+    loop).
 
     Bootstrap freezes BOTH model artifacts on the first committed
     build - coarse centroids (trained on the batch via hash-init
@@ -380,69 +356,46 @@ def run_incremental_ivfbin_stream(
     from ..operators.signq import signq_fit_thresholds
 
     spark = vec_stream.sparkSession
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/ivfbin_epochs"
-    fsio.mkdirs(spark, marker_dir)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        with barrier_scope(spark):
-            epoch_val = f"{token}-{epoch_id}"
-            marker = f"{marker_dir}/{epoch_val}"
-            if fsio.exists(spark, marker):
-                return
-            e = batch_df.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str) -> None:
+        e = batch_df.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
+        )
+        # quarantine before the encode: signq_encode fails loudly on
+        # wrong-dim vectors (right for offline callers), but inside
+        # foreachBatch that raise lands before the marker and every
+        # restart replays the same poison batch - the wedged-loop
+        # failure the ANN loop already designs out.
+        ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
+        bad = e.filter(~ok)
+        if bad.limit(1).count() > 0:
+            bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                "__epoch"
+            ).json(checkpoint_dir.rstrip("/") + "/ivfbin_rejects")
+        e = e.filter(ok)
+        if not read_ivf_index_params(spark, index_path):
+            avail = e.limit(max(n_centroids, 1)).count()
+            if avail == 0:
+                return  # nothing to bootstrap from yet; the epoch commits
+            if bootstrap_thresholds is not None:
+                thr = list(bootstrap_thresholds)
+            else:
+                thr = signq_fit_thresholds(e, dim)
+            if bootstrap_centroids is not None:
+                cents = bootstrap_centroids.select("cid", "cv")
+            else:
+                from ..operators.kmeans import kmeans_fit_centroids_df
+
+                cents = kmeans_fit_centroids_df(
+                    e, min(n_centroids, avail), dim,
+                    iters=train_iters, init="hash",
+                ).select("cid", "cv")
+            build_ivfbin_index(
+                e.limit(0), index_path, n_centroids, dim, thr,
+                centroids=cents, epoch_partitioned=True,
             )
-            # quarantine before the encode: signq_encode fails loudly on
-            # wrong-dim vectors (right for offline callers), but inside
-            # foreachBatch that raise lands before the marker and every
-            # restart replays the same poison batch - the wedged-loop
-            # failure the ANN loop already designs out.
-            ok = F.col("vec").isNotNull() & (F.size("vec") == dim)
-            bad = e.filter(~ok)
-            if bad.limit(1).count() > 0:
-                bad.withColumn("__epoch", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch"
-                ).json(checkpoint_dir.rstrip("/") + "/ivfbin_rejects")
-            e = e.filter(ok)
-            if not read_ivf_index_params(spark, index_path):
-                avail = e.limit(max(n_centroids, 1)).count()
-                if avail == 0:
-                    return  # nothing to bootstrap from yet
-                if bootstrap_thresholds is not None:
-                    thr = list(bootstrap_thresholds)
-                else:
-                    thr = signq_fit_thresholds(e, dim)
-                if bootstrap_centroids is not None:
-                    cents = bootstrap_centroids.select("cid", "cv")
-                else:
-                    from ..operators.kmeans import kmeans_fit_centroids_df
+        append_to_ivfbin_index(e, index_path, dim, epoch=epoch_val)
 
-                    cents = kmeans_fit_centroids_df(
-                        e, min(n_centroids, avail), dim,
-                        iters=train_iters, init="hash",
-                    ).select("cid", "cv")
-                build_ivfbin_index(
-                    e.limit(0), index_path, n_centroids, dim, thr,
-                    centroids=cents, epoch_partitioned=True,
-                )
-            append_to_ivfbin_index(e, index_path, dim, epoch=epoch_val)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-
-    return (
-        vec_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_epochs(vec_stream, checkpoint_dir, "ivfbin", body)

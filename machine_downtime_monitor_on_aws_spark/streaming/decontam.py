@@ -23,11 +23,8 @@ exactly ONE epoch partition, summing a doc's deltas across epochs
 equals the batch pass against the full accumulated benchmark -
 the invariant the replay catalog query hash-checks end to end.
 
-Crash semantics (the exact-dedup loop's protocol): BOTH sinks are
-epoch-partitioned dynamic overwrites keyed by the checkpoint-lineage
-token, so a retried epoch replaces its own partial output; the epoch
-marker (written last) gates committed replays; stale markers from
-dead lineages are swept. Unlike the dedup loops there is no
+Crash semantics (:func:`~.epochs.run_epochs`): BOTH sinks are epoch
+partitions. Unlike the dedup loops there is no
 unconditionally-appended store at all - every write is idempotent,
 so the crash window needs no count-safety argument.
 """
@@ -40,8 +37,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..functions.text import shingles
-from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from ..session import barrier
+from .epochs import run_epochs, write_epoch_partition
 
 GRAMS_SCHEMA = "g string, __epoch_id string"
 FLAGS_SCHEMA = "doc_id long, n_new_shared int, __epoch_id string"
@@ -126,59 +123,20 @@ def run_decontamination_stream(
     its overlap flagged by that loop's own probe or the next full
     audit, the standard split of duties."""
     spark = benchmark_stream.sparkSession
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/decontam_epochs"
-    fsio.mkdirs(spark, marker_dir)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str) -> None:
         seen = _read_or_empty(spark, grams_path, GRAMS_SCHEMA).filter(
             F.col("__epoch_id") != F.lit(epoch_val)
         )
-        with barrier_scope(spark):
-            new_grams = barrier(
-                benchmark_gram_deltas(batch_df, seen, n, text_col=text_col)
-            )
-            if new_grams.count() > 0:
-                deltas = probe_corpus_index(
-                    spark, new_grams, corpus_index_table
-                )
-                deltas.withColumn(
-                    "__epoch_id", F.lit(epoch_val)
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("__epoch_id").parquet(flags_path)
-                new_grams.withColumn(
-                    "__epoch_id", F.lit(epoch_val)
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("__epoch_id").parquet(grams_path)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if (
-                    old == epoch_val
-                    or old.endswith(".tmp")
-                    or old.startswith(".")
-                ):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(
-                        spark, f"{marker_dir}/{old}", recursive=False
-                    )
+        new_grams = barrier(
+            benchmark_gram_deltas(batch_df, seen, n, text_col=text_col)
+        )
+        if new_grams.count() > 0:
+            deltas = probe_corpus_index(spark, new_grams, corpus_index_table)
+            write_epoch_partition(deltas, flags_path, epoch_val)
+            write_epoch_partition(new_grams, grams_path, epoch_val)
 
-    return (
-        benchmark_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_epochs(benchmark_stream, checkpoint_dir, "decontam", body)
 
 
 def contamination_totals(spark: SparkSession, flags_path: str) -> DataFrame:

@@ -10,12 +10,13 @@ probes against them. Per-batch cost is O(batch + touched buckets),
 never O(corpus) - re-running full-corpus dedup per ingest batch is
 unaffordable at 100 TB (see operators/dedup.py scale notes).
 
-Crash semantics, per sink:
+Crash semantics (:func:`~.epochs.run_epochs` runs all three loops),
+per sink:
 
-- pairs: epoch-partitioned dynamic OVERWRITE keyed by the
-  checkpoint-lineage token (same mechanism as the realtime lake) -
-  a retried epoch replaces its own partial output, a fresh
-  checkpoint lineage can never clobber a prior one.
+- pairs: one epoch partition per epoch
+  (:func:`~.epochs.write_epoch_partition`) - a retried epoch
+  replaces its own partial output, a fresh checkpoint lineage can
+  never clobber a prior one.
 - index: plain bucketed APPEND (bucketed tables cannot dynamic-
   overwrite), so a crash between the pairs write and the epoch
   marker re-appends the batch's band rows once per retry. That is
@@ -49,7 +50,7 @@ from ..operators.dedup import (
     write_minhash_index,
 )
 from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from .epochs import checkpoint_sink_token, run_epochs, write_epoch_partition
 from .store import KeyedParquetStore
 
 
@@ -327,209 +328,153 @@ def run_incremental_dedup_stream(
     # otherwise the first probe would bootstrap a FRESH index and
     # silently forget the whole history
     recover_minhash_index(spark, index_table)
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    # heal a crashed takedown drain without waiting for new data
-    _boot_drain(
+    token = checkpoint_sink_token(spark, checkpoint_dir)
+    drain_args = (
         spark, takedown_requests_path, index_table, id_col,
-        labels_store_path, labels_buckets, token,
+        labels_store_path, labels_buckets,
+    )
+    drain_kwargs = dict(
         pairs_path=pairs_path,
         chunk_store_path=chunk_store_path,
         chunk_buckets=chunk_buckets,
         chunk_feed_path=chunk_feed_path,
     )
-    # Epoch markers live INSIDE the checkpoint dir and are read and
-    # written through the Hadoop FileSystem API (fsio): the checkpoint
-    # location is HDFS/S3 on a real cluster, where os.path/open calls
-    # silently misbehave (r5 verdict's `weak` finding) - routed this
-    # way, the local-FS tests exercise the exact code path a s3a://
-    # deployment runs.
-    marker_dir = checkpoint_dir.rstrip("/") + "/dedup_epochs"
-    fsio.mkdirs(spark, marker_dir)
+    # heal a crashed takedown drain without waiting for new data
+    _boot_drain(*drain_args, token, **drain_kwargs)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return  # fully committed epoch replayed after restart
-        with barrier_scope(spark):
-            ba = barrier(
-                minhash_band_arrays(
-                    batch_df,
-                    id_col,
-                    text_col,
-                    num_perms,
-                    num_bands,
-                    shingle_n,
-                    parallelism=parallelism,
-                )
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str):
+        ba = barrier(
+            minhash_band_arrays(
+                batch_df,
+                id_col,
+                text_col,
+                num_perms,
+                num_bands,
+                shingle_n,
+                parallelism=parallelism,
             )
-            index_exists = spark.catalog.tableExists(index_table)
-            if index_exists:
-                pairs = incremental_candidate_pairs(
-                    spark,
-                    ba,
-                    index_table,
-                    num_bands,
-                    max_bucket_size=max_bucket_size,
-                    num_perms=num_perms,
-                    shingle_n=shingle_n,
-                )
-            else:
-                pairs = candidate_pairs_exact(ba, num_bands)
-            # materialize once: the count gates the write (an
-            # all-unique batch - the common fresh-corpus case - would
-            # otherwise leave pairs_path schema-less: zero part files
-            # means spark.read.parquet cannot infer a schema and the
-            # downstream feed reader crashes; absent-dir-means-empty
-            # is the documented contract instead) and the write then
-            # reads the checkpointed rows, not a recomputed plan
-            pairs = barrier(pairs)
-            n_pairs = pairs.count()
-            if n_pairs > 0:
-                pairs.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(pairs_path)
-            if labels_store_path is not None and n_pairs > 0:
-                # labels leg: cluster labels maintained incrementally.
-                # The store holds labels ONLY for docs seen in some
-                # pair - the duplicate sliver - so the contraction
-                # join scans a sliver, the delta graph is
-                # batch-bounded (broadcast inside update_components),
-                # and the upsert prunes to the changed keys' buckets.
-                # Replay-safe without its own marker: re-folding an
-                # epoch's pairs into already-updated labels is a
-                # no-op (update_components idempotence).
-                lstore = KeyedParquetStore(
-                    labels_store_path, "doc_id", labels_buckets
-                )
-                if lstore.exists(spark):
-                    prior = lstore.read(spark)
-                    merged = barrier(update_components(prior, pairs))
-                    changed = (
-                        merged.join(
-                            prior.withColumnRenamed("component", "__old"),
-                            "doc_id",
-                            "left",
-                        )
-                        .filter(
-                            F.col("__old").isNull()
-                            | (F.col("__old") != F.col("component"))
-                        )
-                        .select("doc_id", "component")
-                    )
-                    lstore.upsert(changed)
-                else:
-                    lstore.upsert(connected_components(pairs))
-            if chunk_store_path is not None:
-                # chunk leg: content-defined chunks -> first-seen-wins
-                # content-addressed store; NEW chunk contents publish
-                # to the feed between plan and commit (the two-phase
-                # exactly-once window plan_upsert documents)
-                from ..operators.sampling import cdc_chunks
-                from ..operators.topk import top_k_per_group
-
-                chunks = cdc_chunks(
-                    batch_df, id_col, text_col, chunk_boundary_mod
-                )
-                canon = top_k_per_group(
-                    chunks,
-                    ["chunk_md5"],
-                    [F.col("doc_id").asc(), F.col("chunk_idx").asc()],
-                    1,
-                ).select(
-                    "chunk_md5",
-                    F.col("doc_id").alias("ref_doc_id"),
-                    F.col("chunk_idx").alias("ref_chunk_idx"),
-                    "n_tokens",
-                )
-                cstore = KeyedParquetStore(
-                    chunk_store_path, "chunk_md5", chunk_buckets
-                )
-                new_chunks, cmerged = cstore.plan_upsert(
-                    canon, keep_existing=True
-                )
-                if (
-                    chunk_feed_path is not None
-                    and new_chunks.limit(1).count() > 0
-                ):
-                    new_chunks.withColumn(
-                        "__epoch_id", F.lit(epoch_val)
-                    ).write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("__epoch_id").parquet(chunk_feed_path)
-                cstore.commit(cmerged)
-            writer = append_to_minhash_index if index_exists else write_minhash_index
-            writer(
+        )
+        index_exists = spark.catalog.tableExists(index_table)
+        if index_exists:
+            pairs = incremental_candidate_pairs(
+                spark,
                 ba,
                 index_table,
-                num_buckets,
+                num_bands,
+                max_bucket_size=max_bucket_size,
                 num_perms=num_perms,
-                num_bands=num_bands,
                 shingle_n=shingle_n,
             )
-            # the index writes above ran through the micro-batch's
-            # cloned session (ba derives from batch_df); refresh the
-            # MAIN session's cached listing so ad-hoc user reads see
-            # the grown table (the next batch's probe refreshes
-            # itself inside incremental_candidate_pairs)
-            spark.catalog.refreshTable(index_table)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            # only the latest uncommitted epoch can ever be replayed;
-            # prune older markers so a long-lived loop doesn't grow
-            # one file per micro-batch forever. Ordering is by the
-            # epoch id PARSED FROM THE MARKER NAME, never mtime:
-            # object stores have no meaningful mtime ordering, and
-            # the name already carries the total order (r5 verdict -
-            # "order marker pruning by epoch token, not mtime").
-            # A marker from a DIFFERENT lineage token is stale by
-            # construction (the token is pinned per checkpoint dir,
-            # so a foreign token means the dir was recycled).
-            for old in fsio.list_names(spark, marker_dir):
-                # "."-prefixed entries are filesystem bookkeeping
-                # (local ChecksumFileSystem .crc sidecars - deleted
-                # alongside their marker by fs.delete)
-                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
+        else:
+            pairs = candidate_pairs_exact(ba, num_bands)
+        # materialize once: the count gates the write (an
+        # all-unique batch - the common fresh-corpus case - would
+        # otherwise leave pairs_path schema-less: zero part files
+        # means spark.read.parquet cannot infer a schema and the
+        # downstream feed reader crashes; absent-dir-means-empty
+        # is the documented contract instead) and the write then
+        # reads the checkpointed rows, not a recomputed plan
+        pairs = barrier(pairs)
+        n_pairs = pairs.count()
+        if n_pairs > 0:
+            write_epoch_partition(pairs, pairs_path, epoch_val)
+        if labels_store_path is not None and n_pairs > 0:
+            # labels leg: cluster labels maintained incrementally.
+            # The store holds labels ONLY for docs seen in some
+            # pair - the duplicate sliver - so the contraction
+            # join scans a sliver, the delta graph is
+            # batch-bounded (broadcast inside update_components),
+            # and the upsert prunes to the changed keys' buckets.
+            # Replay-safe without its own marker: re-folding an
+            # epoch's pairs into already-updated labels is a
+            # no-op (update_components idempotence).
+            lstore = KeyedParquetStore(
+                labels_store_path, "doc_id", labels_buckets
+            )
+            if lstore.exists(spark):
+                prior = lstore.read(spark)
+                merged = barrier(update_components(prior, pairs))
+                changed = (
+                    merged.join(
+                        prior.withColumnRenamed("component", "__old"),
+                        "doc_id",
+                        "left",
+                    )
+                    .filter(
+                        F.col("__old").isNull()
+                        | (F.col("__old") != F.col("component"))
+                    )
+                    .select("doc_id", "component")
                 )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-            # maintenance AFTER the epoch committed: compaction never
-            # races the epoch's own append, and a crash mid-compaction
-            # is healed by recover_minhash_index on the next trigger
-            # (or loop start) without touching the epoch's results.
+                lstore.upsert(changed)
+            else:
+                lstore.upsert(connected_components(pairs))
+        if chunk_store_path is not None:
+            # chunk leg: content-defined chunks -> first-seen-wins
+            # content-addressed store; NEW chunk contents publish
+            # to the feed between plan and commit (the two-phase
+            # exactly-once window plan_upsert documents)
+            from ..operators.sampling import cdc_chunks
+            from ..operators.topk import top_k_per_group
+
+            chunks = cdc_chunks(
+                batch_df, id_col, text_col, chunk_boundary_mod
+            )
+            canon = top_k_per_group(
+                chunks,
+                ["chunk_md5"],
+                [F.col("doc_id").asc(), F.col("chunk_idx").asc()],
+                1,
+            ).select(
+                "chunk_md5",
+                F.col("doc_id").alias("ref_doc_id"),
+                F.col("chunk_idx").alias("ref_chunk_idx"),
+                "n_tokens",
+            )
+            cstore = KeyedParquetStore(
+                chunk_store_path, "chunk_md5", chunk_buckets
+            )
+            new_chunks, cmerged = cstore.plan_upsert(
+                canon, keep_existing=True
+            )
+            if (
+                chunk_feed_path is not None
+                and new_chunks.limit(1).count() > 0
+            ):
+                write_epoch_partition(new_chunks, chunk_feed_path, epoch_val)
+            cstore.commit(cmerged)
+        writer = append_to_minhash_index if index_exists else write_minhash_index
+        writer(
+            ba,
+            index_table,
+            num_buckets,
+            num_perms=num_perms,
+            num_bands=num_bands,
+            shingle_n=shingle_n,
+        )
+        # the index writes above ran through the micro-batch's
+        # cloned session (ba derives from batch_df); refresh the
+        # MAIN session's cached listing so ad-hoc user reads see
+        # the grown table (the next batch's probe refreshes
+        # itself inside incremental_candidate_pairs)
+        spark.catalog.refreshTable(index_table)
+
+        def after_commit() -> None:
             # Takedowns drain FIRST: the purge's bucket-preserving
             # rewrite doubles as a compaction, usually leaving the
-            # file-count gate below threshold for free.
+            # file-count gate below threshold for free. A crash
+            # mid-compaction is healed by recover_minhash_index on the
+            # next trigger (or loop start).
             if takedown_requests_path is not None:
-                _drain_takedown_requests(
-                    spark,
-                    takedown_requests_path,
-                    index_table,
-                    id_col,
-                    labels_store_path,
-                    labels_buckets,
-                    epoch_val,
-                    pairs_path=pairs_path,
-                    chunk_store_path=chunk_store_path,
-                    chunk_buckets=chunk_buckets,
-                    chunk_feed_path=chunk_feed_path,
-                )
+                _drain_takedown_requests(*drain_args, epoch_val, **drain_kwargs)
             if compact_max_files_per_bucket is not None:
                 compact_minhash_index_if_needed(
                     spark, index_table, compact_max_files_per_bucket
                 )
 
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return after_commit
+
+    return run_epochs(doc_stream, checkpoint_dir, "dedup", body)
 
 
 def run_exact_dedup_stream(
@@ -557,10 +502,9 @@ def run_exact_dedup_stream(
     an epoch-partitioned sink, and appends its postings so the next
     batch probes against them.
 
-    Crash semantics mirror the minhash loop exactly - epoch markers
-    gate committed replays, the pairs sink is a dynamic overwrite
-    keyed by the checkpoint-lineage token, and the index is a plain
-    bucketed append whose crash re-appends are COUNT-SAFE: the
+    Crash semantics mirror the minhash loop: the pairs sink is an
+    epoch partition, and the index is a plain bucketed append whose
+    crash re-appends are COUNT-SAFE: the
     probe's (shingle, doc_id) dedupe rides the bucketing, so a
     replayed batch's duplicate posting rows can never inflate an
     intersection count (tested; a corrupted count would skew
@@ -589,81 +533,51 @@ def run_exact_dedup_stream(
 
     spark = doc_stream.sparkSession
     recover_shingle_index(spark, index_table)
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
+    token = checkpoint_sink_token(spark, checkpoint_dir)
+    drain_args = (spark, takedown_requests_path, index_table, id_col, None, 0)
+    drain_kwargs = dict(purge_fn=purge_from_shingle_index, pairs_path=pairs_path)
     # heal a crashed takedown drain without waiting for new data
-    _boot_drain(
-        spark, takedown_requests_path, index_table, id_col,
-        None, 0, token,
-        purge_fn=purge_from_shingle_index,
-        pairs_path=pairs_path,
-    )
-    marker_dir = checkpoint_dir.rstrip("/") + "/exact_dedup_epochs"
-    fsio.mkdirs(spark, marker_dir)
+    _boot_drain(*drain_args, token, **drain_kwargs)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
-        with barrier_scope(spark):
-            batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
-            index_exists = spark.catalog.tableExists(index_table)
-            if index_exists:
-                pairs = incremental_exact_jaccard(
-                    spark,
-                    batch,
-                    id_col,
-                    text_col,
-                    index_table,
-                    threshold,
-                    shingle_n,
-                    max_shingle_df=max_shingle_df,
-                )
-            else:
-                pairs = allpairs_jaccard_join(
-                    batch, id_col, text_col, threshold, shingle_n
-                )
-            pairs = barrier(pairs)
-            if pairs.count() > 0:
-                pairs.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(pairs_path)
-            po = shingle_postings(
-                batch, id_col, text_col, shingle_n, parallelism=parallelism
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str):
+        batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
+        index_exists = spark.catalog.tableExists(index_table)
+        if index_exists:
+            pairs = incremental_exact_jaccard(
+                spark,
+                batch,
+                id_col,
+                text_col,
+                index_table,
+                threshold,
+                shingle_n,
+                max_shingle_df=max_shingle_df,
             )
-            if index_exists:
-                append_to_shingle_index(
-                    po, index_table, num_buckets, shingle_n=shingle_n
-                )
-            else:
-                write_shingle_index(
-                    po, index_table, num_buckets, shingle_n=shingle_n
-                )
-            spark.catalog.refreshTable(index_table)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
+        else:
+            pairs = allpairs_jaccard_join(
+                batch, id_col, text_col, threshold, shingle_n
+            )
+        pairs = barrier(pairs)
+        if pairs.count() > 0:
+            write_epoch_partition(pairs, pairs_path, epoch_val)
+        po = shingle_postings(
+            batch, id_col, text_col, shingle_n, parallelism=parallelism
+        )
+        if index_exists:
+            append_to_shingle_index(
+                po, index_table, num_buckets, shingle_n=shingle_n
+            )
+        else:
+            write_shingle_index(
+                po, index_table, num_buckets, shingle_n=shingle_n
+            )
+        spark.catalog.refreshTable(index_table)
+
+        def after_commit() -> None:
+            # takedowns drain before the compaction gate, as in the
+            # minhash loop
             if takedown_requests_path is not None:
-                _drain_takedown_requests(
-                    spark,
-                    takedown_requests_path,
-                    index_table,
-                    id_col,
-                    None,
-                    0,
-                    epoch_val,
-                    purge_fn=purge_from_shingle_index,
-                    pairs_path=pairs_path,
-                )
+                _drain_takedown_requests(*drain_args, epoch_val, **drain_kwargs)
             if compact_max_files_per_bucket is not None:
                 recover_shingle_index(spark, index_table)
                 stats = minhash_index_stats(spark, index_table)
@@ -672,12 +586,9 @@ def run_exact_dedup_stream(
                 ):
                     compact_shingle_index(spark, index_table)
 
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return after_commit
+
+    return run_epochs(doc_stream, checkpoint_dir, "exact_dedup", body)
 
 
 def run_span_dedup_stream(
@@ -703,10 +614,9 @@ def run_span_dedup_stream(
     remove_duplicated_spans corpus edit consumes), and appends its
     windows so the next batch probes against them.
 
-    Crash semantics mirror the sibling loops exactly: epoch markers
-    gate committed replays, the spans feed is a dynamic overwrite
-    keyed by the checkpoint-lineage token, and the index is a plain
-    bucketed append whose crash re-appends are SPAN-SAFE: duplicate
+    Crash semantics mirror the sibling loops: the spans feed is an
+    epoch partition, and the index is a plain bucketed append whose
+    crash re-appends are SPAN-SAFE: duplicate
     (doc_id, pos, g) history rows would inflate the stitcher's
     diagonal row_number and FRAGMENT maximal spans (a wrongness
     hazard, not mere duplication - same class as the exact loop's
@@ -739,80 +649,50 @@ def run_span_dedup_stream(
         min_span_tokens = k
     spark = doc_stream.sparkSession
     recover_kgram_index(spark, index_table)
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
+    token = checkpoint_sink_token(spark, checkpoint_dir)
+    drain_args = (spark, takedown_requests_path, index_table, id_col, None, 0)
+    drain_kwargs = dict(purge_fn=purge_from_kgram_index, pairs_path=spans_path)
     # heal a crashed takedown drain without waiting for new data
-    _boot_drain(
-        spark, takedown_requests_path, index_table, id_col,
-        None, 0, token,
-        purge_fn=purge_from_kgram_index,
-        pairs_path=spans_path,
-    )
-    marker_dir = checkpoint_dir.rstrip("/") + "/span_dedup_epochs"
-    fsio.mkdirs(spark, marker_dir)
+    _boot_drain(*drain_args, token, **drain_kwargs)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
-        with barrier_scope(spark):
-            batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
-            index_exists = spark.catalog.tableExists(index_table)
-            if index_exists:
-                spans = incremental_duplicated_spans(
-                    spark,
-                    batch,
-                    index_table,
-                    k,
-                    id_col=id_col,
-                    text_col=text_col,
-                    min_span_tokens=min_span_tokens,
-                )
-            else:
-                spans = duplicated_spans(
-                    batch, id_col, text_col, k,
-                    min_span_tokens=min_span_tokens,
-                )
-            spans = barrier(spans)
-            if spans.count() > 0:
-                spans.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(spans_path)
-            if index_exists:
-                append_to_kgram_index(
-                    batch, index_table, k,
-                    id_col=id_col, text_col=text_col, num_buckets=num_buckets,
-                )
-            else:
-                write_kgram_index(
-                    batch, index_table, k,
-                    id_col=id_col, text_col=text_col, num_buckets=num_buckets,
-                )
-            spark.catalog.refreshTable(index_table)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if old == epoch_val or old.endswith(".tmp") or old.startswith("."):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str):
+        batch = barrier(batch_df.select(F.col(id_col), F.col(text_col)))
+        index_exists = spark.catalog.tableExists(index_table)
+        if index_exists:
+            spans = incremental_duplicated_spans(
+                spark,
+                batch,
+                index_table,
+                k,
+                id_col=id_col,
+                text_col=text_col,
+                min_span_tokens=min_span_tokens,
+            )
+        else:
+            spans = duplicated_spans(
+                batch, id_col, text_col, k,
+                min_span_tokens=min_span_tokens,
+            )
+        spans = barrier(spans)
+        if spans.count() > 0:
+            write_epoch_partition(spans, spans_path, epoch_val)
+        if index_exists:
+            append_to_kgram_index(
+                batch, index_table, k,
+                id_col=id_col, text_col=text_col, num_buckets=num_buckets,
+            )
+        else:
+            write_kgram_index(
+                batch, index_table, k,
+                id_col=id_col, text_col=text_col, num_buckets=num_buckets,
+            )
+        spark.catalog.refreshTable(index_table)
+
+        def after_commit() -> None:
+            # takedowns drain before the compaction gate, as in the
+            # minhash loop
             if takedown_requests_path is not None:
-                _drain_takedown_requests(
-                    spark,
-                    takedown_requests_path,
-                    index_table,
-                    id_col,
-                    None,
-                    0,
-                    epoch_val,
-                    purge_fn=purge_from_kgram_index,
-                    pairs_path=spans_path,
-                )
+                _drain_takedown_requests(*drain_args, epoch_val, **drain_kwargs)
             if compact_max_files_per_bucket is not None:
                 recover_kgram_index(spark, index_table)
                 stats = minhash_index_stats(spark, index_table)
@@ -821,9 +701,6 @@ def run_span_dedup_stream(
                 ):
                     compact_kgram_index(spark, index_table)
 
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        return after_commit
+
+    return run_epochs(doc_stream, checkpoint_dir, "span_dedup", body)

@@ -44,6 +44,7 @@ from ..operators.latest import latest_by_key
 from ..operators.normalize import parse_envelopes
 from ..sources.lake import with_day_partitions
 from ..session import barrier_scope, release_checkpoint
+from .epochs import checkpoint_sink_token, feed_epoch_published, write_epoch_partition
 from .store import KeyedParquetStore
 
 ENVELOPE_SCHEMA = "record_id STRING, partition_key STRING, arrival_ts DOUBLE, data STRING"
@@ -155,65 +156,6 @@ def read_envelope_stream_kinesis(
     for k, v in opts.items():
         reader = reader.option(k, v)
     return envelope_from_kinesis_records(reader.load())
-
-
-def _feed_epoch_published(spark: SparkSession, feed_path: str, epoch_val: str) -> bool:
-    """True when the change feed already holds epoch ``epoch_val``.
-
-    Dynamic partition overwrite stages files and commits the
-    partition by rename, so the partition dir with part files exists
-    IFF the publish completed - a partial write never surfaces it.
-    The feed write is therefore write-once per epoch: the FIRST
-    publish is computed against the pre-commit store (the full,
-    correct delta set), and a retry must never rewrite it - a crash
-    midway through the store commit leaves some buckets updated, so
-    the retry's recomputed deltas are a SUBSET and overwriting would
-    silently lose feed rows. Routed through the Hadoop FileSystem API
-    (fsio) so the guard holds on s3a://hdfs:// feeds - an
-    os.path.isdir check silently returns False for any URI and the
-    guard would degrade to rewrite-on-retry, reintroducing exactly
-    the subset-loss bug it exists to prevent (r5 advice)."""
-    from .. import fsio
-
-    d = feed_path.rstrip("/") + f"/__epoch_id={epoch_val}"
-    return any(n.startswith("part-") for n in fsio.list_names(spark, d))
-
-
-def _checkpoint_sink_token(spark: SparkSession, checkpoint_dir: str) -> str:
-    """Stable token identifying a checkpoint LINEAGE, persisted inside
-    the checkpoint dir itself. Epoch partition values embed it
-    (``<token>-<epoch_id>``) so the idempotent dynamic-overwrite sinks
-    are scoped to the lineage that generated the epoch ids: a retry
-    against the SAME checkpoint replaces its own partial output
-    (exactly-once), while a FRESH checkpoint pointed at the same sink
-    path restarts epoch ids at 0 under a NEW token and can never
-    clobber data a previous lineage wrote (without the token, new
-    epoch 0 dynamic-overwrites historical epoch-0 partitions -
-    silent data loss, strictly worse than append's duplicates).
-
-    Hadoop-FS realization (fsio): the checkpoint dir lives wherever
-    the stream's checkpointLocation does (HDFS/S3 on a cluster), so
-    the token must be durable THERE - publish is write-tmp +
-    fs.rename, and a lost rename race re-reads the winner's token so
-    concurrent starts still agree on one value."""
-    import uuid
-
-    from .. import fsio
-
-    p = checkpoint_dir.rstrip("/") + "/spark_graft_sink_token"
-    if fsio.exists(spark, p):
-        return fsio.read_text(spark, p).strip()
-    fsio.mkdirs(spark, checkpoint_dir)
-    # write_text_atomic returns False only when the publish failed AND
-    # the path still doesn't exist (a lost race re-reads the winner's
-    # token and returns True) - without this check the read below
-    # would surface a raw Java FileNotFoundException instead of
-    # naming the checkpoint dir that couldn't take the token.
-    if not fsio.write_text_atomic(spark, p, uuid.uuid4().hex[:12]):
-        raise OSError(
-            f"could not publish sink token under {checkpoint_dir!r}"
-        )
-    return fsio.read_text(spark, p).strip()
 
 
 def _assert_epoch_layout(spark: SparkSession, realtime_path: str) -> None:
@@ -400,7 +342,7 @@ def run_ingest_stream(
     pass that could have fixed it.
     """
     _assert_epoch_layout(spark, sinks.realtime_path)
-    sink_token = _checkpoint_sink_token(spark, checkpoint_dir)
+    sink_token = checkpoint_sink_token(spark, checkpoint_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cfg = config_provider().validate()
@@ -502,14 +444,10 @@ def run_ingest_stream(
                     # commit re-converges idempotently.
                     deltas, merged = store.plan_upsert(latest, compare_col="status")
                     epoch_val = f"{sink_token}-{epoch_id}"
-                    if sinks.change_feed_path and not _feed_epoch_published(
+                    if sinks.change_feed_path and not feed_epoch_published(
                         batch_df.sparkSession, sinks.change_feed_path, epoch_val
                     ):
-                        deltas.withColumn(
-                            "__epoch_id", F.lit(epoch_val)
-                        ).write.mode("overwrite").option(
-                            "partitionOverwriteMode", "dynamic"
-                        ).partitionBy("__epoch_id").parquet(sinks.change_feed_path)
+                        write_epoch_partition(deltas, sinks.change_feed_path, epoch_val)
                     if sinks.change_feed is not None:
                         # test-only observability: deltas are one row per
                         # *changed* machine, driver-safe by construction
@@ -580,7 +518,7 @@ def streaming_latest_status_durable(
     and the state store (one row per machine) guards event-time
     ordering across batches."""
     store = KeyedParquetStore(store_path, "machine_id", num_buckets)
-    sink_token = _checkpoint_sink_token(
+    sink_token = checkpoint_sink_token(
         source_messages.sparkSession, checkpoint_dir
     )
 
@@ -591,14 +529,10 @@ def streaming_latest_status_durable(
         with barrier_scope(batch_df.sparkSession):
             deltas, merged = store.plan_upsert(batch_df, compare_col="status")
             epoch_val = f"{sink_token}-{epoch_id}"
-            if change_feed_path and not _feed_epoch_published(
+            if change_feed_path and not feed_epoch_published(
                 batch_df.sparkSession, change_feed_path, epoch_val
             ):
-                deltas.withColumn(
-                    "__epoch_id", F.lit(epoch_val)
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("__epoch_id").parquet(change_feed_path)
+                write_epoch_partition(deltas, change_feed_path, epoch_val)
             store.commit(merged)
 
     agg = source_messages.groupBy("machine_id").agg(

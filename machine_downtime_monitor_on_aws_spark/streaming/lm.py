@@ -19,14 +19,11 @@ instead of storing them: a stored N1+(w1 w2 .) could not merge from
 deltas without the full type table anyway, and the type table IS the
 counts table's keys.
 
-Crash semantics (the decontamination loop's protocol): the delta
-feed is ONE epoch-partitioned dynamic overwrite keyed by the
-checkpoint-lineage token - a replayed epoch replaces its own partial
-output with identical rows (delta counts are a pure function of the
-batch); the epoch marker gates committed replays; stale markers from
-dead lineages are swept. Every write idempotent - double-counting,
-the classic additive-state hazard, is structurally impossible
-because an epoch's counts live in exactly one partition.
+Crash semantics: the loop is a :func:`~.epochs.delta_feed` under
+:func:`~.epochs.run_epochs` - delta counts are a pure function of the
+batch and an epoch's counts live in exactly one partition, so
+double-counting, the classic additive-state hazard, is structurally
+impossible.
 
 Scale shape: per batch, one batch-sized explode + one map-side-
 combining count; the feed holds vocab-sized delta rows per epoch;
@@ -43,8 +40,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.kneser_ney import trigram_counts
-from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from .epochs import delta_feed, run_epochs
 
 KN_DELTA_SCHEMA = "w1 string, w2 string, w3 string, c3 long, __epoch_id string"
 
@@ -62,47 +58,13 @@ def run_kn_counts_stream(
     arity/closure lesson from the PySpark-lambda gotcha: building
     the expression fresh per batch keeps it bound to the batch
     plan)."""
-    spark = doc_stream.sparkSession
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/kn_counts_epochs"
-    fsio.mkdirs(spark, marker_dir)
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
-        # pin the batch's counts once: count() and write would each
-        # re-derive the explode+aggregate otherwise (the sibling
-        # decontam/shards loops' barrier discipline)
-        with barrier_scope(spark):
-            delta = barrier(trigram_counts(batch_df, toks_col_factory()))
-            if delta.count() > 0:
-                delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(counts_path)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if (
-                    old == epoch_val
-                    or old.endswith(".tmp")
-                    or old.startswith(".")
-                ):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_epochs(
+        doc_stream,
+        checkpoint_dir,
+        "kn_counts",
+        delta_feed(
+            counts_path, lambda b: trigram_counts(b, toks_col_factory())
+        ),
     )
 
 

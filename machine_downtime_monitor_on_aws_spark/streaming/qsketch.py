@@ -3,16 +3,12 @@ percentile cutoffs that refresh in O(delta) as documents arrive.
 
 The sketch state (operators/qsketch.sketch_bins - per-source
 fixed-grid bin counts) merges additively, so the production loop is
-the KN-counts protocol verbatim: each micro-batch lands its own
-(source, score_bin, cnt) deltas in an epoch-partitioned feed keyed
-by the checkpoint-lineage token; a replayed epoch replaces its own
-partition with identical rows (deltas are a pure function of the
-batch), the epoch marker gates committed replays, stale markers
-from dead lineages are swept - double-counting is structurally
-impossible. A reader folds the feed by (source, bin) and reads the
-type-1 quantile cutoffs off <= n_bins + 1 rows per source; no batch
-ever re-reads earlier documents, which is exactly what the batch
-adaptive_quality_filter cannot offer a stream.
+a :func:`~.epochs.delta_feed` of (source, score_bin, cnt) deltas
+under :func:`~.epochs.run_epochs`. A reader folds the feed by
+(source, bin) and reads the type-1 quantile cutoffs off
+<= n_bins + 1 rows per source; no batch ever re-reads earlier
+documents, which is exactly what the batch adaptive_quality_filter
+cannot offer a stream.
 
 Grid discipline: bin counts cut on different grids must never
 merge, so the loop stamps (lo, hi, n_bins) into the feed directory
@@ -31,8 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.qsketch import merge_sketches, sketch_bins
-from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from .epochs import delta_feed, run_epochs
 
 QSKETCH_DELTA_SCHEMA = (
     "source string, score_bin long, cnt long, __epoch_id string"
@@ -78,49 +73,16 @@ def run_quality_sketch_stream(
     loudly on NULL by design."""
     spark = doc_stream.sparkSession
     _stamp_or_check_grid(spark, bins_path, lo, hi, n_bins)
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/qsketch_epochs"
-    fsio.mkdirs(spark, marker_dir)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
+    def delta(batch_df: DataFrame) -> DataFrame:
         scored = batch_df.select(
             F.col(source_col).alias("source"),
             score_col_factory().alias("__score"),
         )
-        with barrier_scope(spark):
-            delta = barrier(
-                sketch_bins(scored, ["source"], "__score", lo, hi, n_bins)
-            )
-            if delta.count() > 0:
-                delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(bins_path)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if (
-                    old == epoch_val
-                    or old.endswith(".tmp")
-                    or old.startswith(".")
-                ):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
+        return sketch_bins(scored, ["source"], "__score", lo, hi, n_bins)
 
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_epochs(
+        doc_stream, checkpoint_dir, "qsketch", delta_feed(bins_path, delta)
     )
 
 

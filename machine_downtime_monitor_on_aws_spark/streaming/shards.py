@@ -23,13 +23,11 @@ cannot survive appends:
   batch operator at a corpus freeze to recover it; the manifest is
   key+counters, so that re-sort is cheap relative to the corpus).
 
-Crash semantics (the decontamination loop's protocol): the manifest
-is ONE epoch-partitioned dynamic overwrite keyed by the
-checkpoint-lineage token - a replayed epoch recomputes its base
+Crash semantics (:func:`~.epochs.run_epochs`): the manifest is ONE
+epoch partition per epoch, and a replayed epoch recomputes its base
 offsets EXCLUDING its own partition, so the rewrite is
-value-identical; the epoch marker gates committed replays; stale
-markers from dead lineages are swept. No append-only store exists,
-so every write is idempotent.
+value-identical. No append-only store exists, so every write is
+idempotent.
 
 Scale shape: shard/order_key are scan expressions over the batch;
 the within-batch position is a per-shard window on batch-sized data;
@@ -46,8 +44,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.shards import assign_training_shards
-from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from ..session import barrier
+from .epochs import run_epochs, write_epoch_partition
 
 
 def manifest_schema(key_cols_schema: str) -> str:
@@ -92,9 +90,6 @@ def run_shard_manifest_stream(
     to read the feed schema-explicitly on replay (the
     _parquet_or_empty lesson)."""
     spark = pack_stream.sparkSession
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = checkpoint_dir.rstrip("/") + "/shard_manifest_epochs"
-    fsio.mkdirs(spark, marker_dir)
     feed_schema = manifest_schema(key_cols_schema)
 
     def _read_feed() -> DataFrame:
@@ -102,56 +97,21 @@ def run_shard_manifest_stream(
             return spark.createDataFrame([], feed_schema)
         return spark.read.schema(feed_schema).parquet(manifest_path)
 
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
+    def body(batch_df: DataFrame, epoch_id: int, epoch_val: str) -> None:
+        assigned = barrier(assign_training_shards(batch_df, key_cols, n_shards))
+        if assigned.count() == 0:
             return
-        with barrier_scope(spark):
-            assigned = barrier(
-                assign_training_shards(batch_df, key_cols, n_shards)
-            )
-            if assigned.count() > 0:
-                committed = _read_feed().filter(
-                    F.col("__epoch_id") != F.lit(epoch_val)
-                )
-                base = shard_base_positions(committed, n_shards)
-                out = assigned.join(base, "shard").select(
-                    *batch_df.columns,  # full passthrough, not just keys
-                    "shard",
-                    "order_key",
-                    (F.col("base") + F.col("position"))
-                    .cast("int")
-                    .alias("position"),
-                )
-                out.withColumn(
-                    "__epoch_id", F.lit(epoch_val)
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("__epoch_id").parquet(manifest_path)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if (
-                    old == epoch_val
-                    or old.endswith(".tmp")
-                    or old.startswith(".")
-                ):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(
-                        spark, f"{marker_dir}/{old}", recursive=False
-                    )
+        committed = _read_feed().filter(F.col("__epoch_id") != F.lit(epoch_val))
+        base = shard_base_positions(committed, n_shards)
+        out = assigned.join(base, "shard").select(
+            *batch_df.columns,  # full passthrough, not just keys
+            "shard",
+            "order_key",
+            (F.col("base") + F.col("position")).cast("int").alias("position"),
+        )
+        write_epoch_partition(out, manifest_path, epoch_val)
 
-    return (
-        pack_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_epochs(pack_stream, checkpoint_dir, "shard_manifest", body)
 
 
 def read_manifest(

@@ -5,12 +5,10 @@ O(delta) per micro-batch.
 With qsketch (bin counts) and the KN trainer (trigram counts) the
 repo already maintains its ADDITIVE summaries incrementally; this
 module completes the picture with the two other merge algebras a
-sketch can have, under ONE shared epoch-delta protocol
-(:func:`run_delta_sketch_stream` - the KN-counts crash discipline
-verbatim: per-epoch idempotent dynamic-overwrite partitions keyed by
-the checkpoint-lineage token, marker-gated replays, stale-marker
-sweep, params stamped into the feed directory and verified by every
-writer/reader):
+sketch can have, under ONE shared loop
+(:func:`run_delta_sketch_stream` - a :func:`~.epochs.delta_feed`
+under :func:`~.epochs.run_epochs`, with params stamped into the feed
+directory and verified by every writer/reader):
 
 - **CMS (additive)**: the per-batch delta is the batch's own cell
   counts; the fold sums by (r, c). Integer sums are epoch/partition-
@@ -49,8 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import fsio
 from ..operators.sketch import bloom_build, cms_build
-from ..session import barrier, barrier_scope
-from .ingest import _checkpoint_sink_token
+from .epochs import delta_feed, run_epochs
 
 _PARAMS_NAME = "_sketch_params.json"
 
@@ -89,52 +86,11 @@ def run_delta_sketch_stream(
     marker_name: str,
 ) -> StreamingQuery:
     """The shared loop: per epoch, ``delta_fn(batch)`` (a bounded
-    sketch-delta DataFrame) lands under its own ``__epoch_id``
-    partition of ``feed_path``. Exactly-once by construction: the
-    delta is a pure function of the batch, the write is an
-    idempotent dynamic overwrite of the epoch's own partition, and
-    the epoch marker gates committed replays (the KN-counts
-    protocol). The delta is checkpoint-pinned so count() and write
-    derive it once."""
-    spark = doc_stream.sparkSession
-    _stamp_or_check_params(spark, feed_path, params)
-    token = _checkpoint_sink_token(spark, checkpoint_dir)
-    marker_dir = f"{checkpoint_dir.rstrip('/')}/{marker_name}_epochs"
-    fsio.mkdirs(spark, marker_dir)
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        epoch_val = f"{token}-{epoch_id}"
-        marker = f"{marker_dir}/{epoch_val}"
-        if fsio.exists(spark, marker):
-            return
-        with barrier_scope(spark):
-            delta = barrier(delta_fn(batch_df))
-            if delta.count() > 0:
-                delta.withColumn("__epoch_id", F.lit(epoch_val)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "__epoch_id"
-                ).parquet(feed_path)
-            fsio.write_text_atomic(spark, marker, epoch_val)
-            for old in fsio.list_names(spark, marker_dir):
-                if (
-                    old == epoch_val
-                    or old.endswith(".tmp")
-                    or old.startswith(".")
-                ):
-                    continue
-                old_tok, _, old_eid = old.rpartition("-")
-                stale = old_tok != token or (
-                    old_eid.isdigit() and int(old_eid) < epoch_id
-                )
-                if stale:
-                    fsio.delete(spark, f"{marker_dir}/{old}", recursive=False)
-
-    return (
-        doc_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sketch-delta DataFrame, a pure function of the batch) lands under
+    its own ``__epoch_id`` partition of ``feed_path``."""
+    _stamp_or_check_params(doc_stream.sparkSession, feed_path, params)
+    return run_epochs(
+        doc_stream, checkpoint_dir, marker_name, delta_feed(feed_path, delta_fn)
     )
 
 

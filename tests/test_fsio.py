@@ -48,25 +48,25 @@ def test_checkpoint_token_stable_through_file_uri(spark, tmp_path):
     """The lineage token written via a file: URI must be re-read
     identically by a plain-path caller and vice versa - both resolve
     to the same file through the Hadoop local filesystem."""
-    from machine_downtime_monitor_on_aws_spark.streaming.ingest import (
-        _checkpoint_sink_token,
+    from machine_downtime_monitor_on_aws_spark.streaming.epochs import (
+        checkpoint_sink_token,
     )
 
     ckpt = tmp_path / "ckpt"
-    t1 = _checkpoint_sink_token(spark, "file:" + str(ckpt))
-    t2 = _checkpoint_sink_token(spark, str(ckpt))
-    t3 = _checkpoint_sink_token(spark, "file:" + str(ckpt))
+    t1 = checkpoint_sink_token(spark, "file:" + str(ckpt))
+    t2 = checkpoint_sink_token(spark, str(ckpt))
+    t3 = checkpoint_sink_token(spark, "file:" + str(ckpt))
     assert t1 == t2 == t3
     assert len(t1) == 12
 
 
 def test_feed_epoch_published_gate_file_uri(spark, tmp_path):
-    from machine_downtime_monitor_on_aws_spark.streaming.ingest import (
-        _feed_epoch_published,
+    from machine_downtime_monitor_on_aws_spark.streaming.epochs import (
+        feed_epoch_published,
     )
 
     feed = "file:" + str(tmp_path / "feed")
-    assert not _feed_epoch_published(spark, feed, "tok-0")
+    assert not feed_epoch_published(spark, feed, "tok-0")
     (
         spark.range(3)
         .withColumn("__epoch_id", F.lit("tok-0"))
@@ -75,10 +75,10 @@ def test_feed_epoch_published_gate_file_uri(spark, tmp_path):
         .partitionBy("__epoch_id")
         .parquet(feed)
     )
-    assert _feed_epoch_published(spark, feed, "tok-0")
+    assert feed_epoch_published(spark, feed, "tok-0")
     # an epoch that never published stays unpublished - the write-once
     # guard's exact discrimination
-    assert not _feed_epoch_published(spark, feed, "tok-1")
+    assert not feed_epoch_published(spark, feed, "tok-1")
 
 
 def test_ingest_fails_fast_on_flat_lake(spark, tmp_path):
