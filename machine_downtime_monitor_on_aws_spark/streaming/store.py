@@ -9,16 +9,23 @@ which must not cost O(snapshot) per micro-batch.
 Layout: parquet partitioned by ``__kb = pmod(xxhash64(key), N)``. An
 upsert batch touches only the buckets its keys hash into:
 
-1. the batch's distinct bucket ids are collected (bounded by N, never
-   by data size);
-2. ONLY those bucket partitions are read back (partition pruning -
-   the scan lists just the touched directories);
+1. the batch is tagged with its bucket and materialized ONCE (an
+   eager barrier); the batch's distinct bucket ids are collected by
+   an ``Observation`` on that same pass (bounded by N, never by data
+   size), so no separate job computes them;
+2. the present buckets come from ONE non-recursive listing of the
+   store root, and ONLY the touched bucket directories that exist are
+   read back, with the batch's schema - untouched directories are
+   never listed and no schema-inference job runs;
 3. merge = prior \\ batch-keys + batch (anti-join + union), written
    with dynamic partition overwrite, so untouched buckets are never
    read or rewritten.
 
 Per-batch cost is O(batch + touched-bucket contents) regardless of
-total store size. Choose N so a bucket's contents fit an executor
+total store size. The control plane pays one root listing plus a
+listing of the touched directories (a Spark job once more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32 by
+default, are read). Choose N so a bucket's contents fit an executor
 comfortably: N=4096 at 10^9 keys is ~250k rows/bucket.
 
 On a cluster with a transactional table format available, the same
@@ -35,7 +42,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.latest import changed_rows
@@ -55,19 +62,28 @@ class KeyedParquetStore:
             F.xxhash64(F.col(self.key_col).cast("string")), F.lit(self.num_buckets)
         ).cast("int")
 
+    def _present_buckets(self, spark: SparkSession) -> set[str]:
+        """Names (``__kb=<b>``) of the committed bucket directories:
+        one non-recursive listing of the store root. Spark's
+        ``.spark-staging-*`` directories and ``_SUCCESS`` are not
+        buckets; a bucket directory appears only when a dynamic
+        overwrite commits it and :meth:`delete_keys` removes the ones
+        it empties."""
+        from .. import fsio
+
+        return {
+            n for n in fsio.list_names(spark, self.path)
+            if n.startswith(f"{_BUCKET_COL}=")
+        }
+
     def exists(self, spark: SparkSession) -> bool:
-        """True when the store holds any committed parquet file.
-        Routed through the Hadoop FileSystem API (fsio) so the check
-        is correct when the store path is hdfs://s3a:// - an
+        """True when the store holds any committed bucket. Routed
+        through the Hadoop FileSystem API (fsio) so the check is
+        correct when the store path is hdfs://s3a:// - an
         os.path.isdir probe returns False for any URI and the merge
         would silently treat an existing store as empty, dropping
         every key the batch doesn't carry (r5 verdict)."""
-        from .. import fsio
-
-        return any(
-            f.endswith(".parquet")
-            for f in fsio.list_files_recursive(spark, self.path)
-        )
+        return bool(self._present_buckets(spark))
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Full store contents (no bucket column)."""
@@ -85,6 +101,13 @@ class KeyedParquetStore:
         plan may legally write to the path it read from; the
         checkpoints hold only batch-sized and touched-bucket-sized
         data.
+
+        The updates are computed once: tagged with their bucket and
+        materialized into a barrier whose ``Observation`` yields the
+        touched bucket ids. Prior rows are read only from the touched
+        buckets that one root listing shows present, with the
+        updates' schema, and both outputs are derived from that
+        barrier, which is released once they are materialized.
 
         The two-phase split exists for exactly-once change feeds: a
         caller can durably publish the deltas FIRST and only then
@@ -112,40 +135,43 @@ class KeyedParquetStore:
                 "(updates-win change detection) are mutually exclusive"
             )
         spark = updates.sparkSession
-        u = updates.withColumn(_BUCKET_COL, self._bucket())
-        if self.exists(spark):
-            touched = [
-                r[0] for r in u.select(_BUCKET_COL).distinct().collect()
-            ]  # bounded by num_buckets, not by data
-            prior = spark.read.parquet(self.path).filter(
-                F.col(_BUCKET_COL).isin(touched)
-            )  # partition-pruned scan: only touched bucket dirs are listed
-            if keep_existing:
-                u = u.join(
-                    prior.select(self.key_col), self.key_col, "left_anti"
-                )
-                deltas = updates.join(
-                    prior.select(self.key_col), self.key_col, "left_anti"
-                )
-                merged = prior.unionByName(u)
-            else:
-                if compare_col is not None:
-                    deltas = changed_rows(
-                        updates,
-                        prior.drop(_BUCKET_COL),
-                        [self.key_col],
-                        compare_col,
-                    )
-                else:
-                    deltas = updates
-                merged = prior.join(
-                    u.select(self.key_col), self.key_col, "left_anti"
-                ).unionByName(u)
+        obs = Observation()
+        u = barrier(
+            updates.withColumn(_BUCKET_COL, self._bucket()).observe(
+                obs, F.collect_set(_BUCKET_COL).alias("touched")
+            )
+        )  # the one pass over the updates; the observation is its by-product
+        present = self._present_buckets(spark)
+        dirs = [
+            f"{self.path}/{d}"
+            for d in sorted(f"{_BUCKET_COL}={b}" for b in obs.get["touched"])
+            if d in present
+        ]
+        batch = u.drop(_BUCKET_COL)
+        if not dirs:
+            # no prior rows to merge: the tagged batch is what commit writes
+            return barrier(batch), u
+        prior = (
+            spark.read.schema(u.schema).option("basePath", self.path).parquet(*dirs)
+        )  # no schema inference, and only these directories are listed
+        if keep_existing:
+            new = u.join(prior.select(self.key_col), self.key_col, "left_anti")
+            deltas = new.drop(_BUCKET_COL)
+            merged = prior.unionByName(new)
         else:
-            deltas = updates
-            merged = u
+            if compare_col is not None:
+                deltas = changed_rows(
+                    batch, prior.drop(_BUCKET_COL), [self.key_col], compare_col
+                )
+            else:
+                deltas = batch
+            merged = prior.join(
+                u.select(self.key_col), self.key_col, "left_anti"
+            ).unionByName(u)
         deltas = barrier(deltas)
         merged = barrier(merged)
+        # both outputs are materialized with truncated lineage
+        release_checkpoint(u)
         return deltas, merged
 
     def commit(self, merged: DataFrame) -> None:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from machine_downtime_monitor_on_aws_spark.streaming.store import KeyedParquetStore
@@ -237,3 +238,177 @@ def test_is_checkpoint_scan_detects_barrier_frames(spark):
         with tempfile.TemporaryDirectory() as d:
             ck.write.mode("overwrite").parquet(f"{d}/p")
             assert is_barrier_scan(spark.read.parquet(f"{d}/p")) is False
+
+
+_MODES = {
+    "compare_col": {"compare_col": "status"},
+    "none": {},
+    "keep_existing": {"keep_existing": True},
+}
+
+
+class _DictStore:
+    """Pure-Python reference for the three upsert modes: one row per
+    key, deltas as :meth:`KeyedParquetStore.plan_upsert` defines
+    them."""
+
+    def __init__(self, mode: str) -> None:
+        self.mode = mode
+        self.rows: dict = {}
+
+    def upsert(self, batch):
+        deltas = []
+        for row in batch:
+            k, status = row[0], row[1]
+            if self.mode == "keep_existing":
+                if k not in self.rows:
+                    self.rows[k] = row
+                    deltas.append(row)
+                continue
+            # None == None here: the store's compare is null-safe
+            if self.mode == "none" or k not in self.rows or self.rows[k][1] != status:
+                deltas.append(row)
+            self.rows[k] = row
+        return sorted(deltas, key=repr)
+
+
+def _rows(df):
+    return sorted(
+        ((r.machine_id, r.status, r.status_epoch) for r in df.collect()), key=repr
+    )
+
+
+def _bucket_bytes(path):
+    out = {}
+    for d in os.listdir(path):
+        if d.startswith("__kb="):
+            full = os.path.join(path, d)
+            out[d] = {
+                f: open(os.path.join(full, f), "rb").read()
+                for f in os.listdir(full)
+                if f.endswith(".parquet")
+            }
+    return out
+
+
+@pytest.mark.parametrize("mode", sorted(_MODES))
+def test_upsert_matches_dict_model(spark, tmp_path, mode):
+    """plan_upsert + commit (and upsert) against a dict model, in all
+    three modes: an empty store, a batch that hits only never-written
+    buckets, a batch mixing written and new buckets with NULL
+    compare values on both sides, and an identical replay - which
+    must leave the buckets it does not hash into byte-identical."""
+    from machine_downtime_monitor_on_aws_spark.session import (
+        barrier_scope,
+        persistent_rdd_ids,
+        release_checkpoint,
+    )
+
+    path = str(tmp_path / "st")
+    store = KeyedParquetStore(path, "machine_id", num_buckets=16)
+    kw = _MODES[mode]
+    model = _DictStore(mode)
+    keys = [f"m{i}" for i in range(200)]
+    bucket = {
+        r[0]: r[1]
+        for r in spark.createDataFrame([(k,) for k in keys], "machine_id string")
+        .select("machine_id", store._bucket())
+        .collect()
+    }
+    low = [k for k in keys if bucket[k] < 4]
+    mid = [k for k in keys if 4 <= bucket[k] < 8]
+    high = [k for k in keys if bucket[k] >= 8]
+
+    def step(batch, replay=False):
+        want = model.upsert(batch)
+        if replay:
+            got = _rows(store.upsert(_df(spark, batch), **kw))
+        else:
+            deltas, merged = store.plan_upsert(_df(spark, batch), **kw)
+            got = _rows(deltas)
+            store.commit(merged)
+            release_checkpoint(merged)
+        assert got == want
+        assert _rows(store.read(spark)) == sorted(model.rows.values(), key=repr)
+        return got
+
+    before = set(persistent_rdd_ids(spark))
+    with barrier_scope(spark):
+        assert not store.exists(spark)
+        b1 = [(k, "UP", 1) for k in low[:5]] + [(low[5], None, 1), (low[6], None, 1)]
+        step(b1)
+        written = {f"__kb={bucket[k]}" for k, *_ in b1}
+        assert set(_bucket_bytes(path)) == written
+
+        # the store exists, but the batch hits only never-written buckets
+        step([(k, "DOWN", 2) for k in high[:3]])
+
+        # mixed: a status change, an unchanged status at a newer epoch,
+        # NULL -> NULL, NULL -> value, value -> NULL, plus keys in new
+        # buckets
+        b3 = [
+            (low[0], "DOWN", 3),
+            (low[1], "UP", 3),
+            (low[5], None, 3),
+            (low[6], "UP", 3),
+            (low[2], None, 3),
+            (mid[0], "UP", 3),
+            (mid[1], None, 3),
+            (high[0], "UP", 3),
+        ]
+        d3 = step(b3)
+        if mode == "compare_col":
+            assert {r[0] for r in d3} == {
+                low[0], low[6], low[2], mid[0], mid[1], high[0]
+            }
+
+        touched = {f"__kb={bucket[k]}" for k, *_ in b3}
+        files = _bucket_bytes(path)
+        assert set(files) - touched  # some buckets are not in the replay
+        d4 = step(b3, replay=True)
+        if mode != "none":
+            assert d4 == []
+        after = _bucket_bytes(path)
+        for d in set(files) - touched:
+            assert after[d] == files[d], f"untouched bucket {d} was rewritten"
+    assert not set(persistent_rdd_ids(spark)) - before
+
+
+def test_plan_upsert_hot_path_reads_only_touched_buckets(spark, tmp_path, monkeypatch):
+    """A steady-state upsert into a non-empty 64-bucket store never
+    walks the store's files, and runs only the jobs of the batch pass
+    and the two output barriers - no touched-bucket collect, no
+    partition-discovery listing job, no schema-inference job."""
+    import uuid
+
+    from machine_downtime_monitor_on_aws_spark import fsio
+    from machine_downtime_monitor_on_aws_spark.session import barrier_scope
+
+    path = str(tmp_path / "st")
+    store = KeyedParquetStore(path, "machine_id", num_buckets=64)
+    seed = _df(spark, [(f"m{i}", "UP", 1) for i in range(400)])
+    store.upsert(seed, compare_col="status")
+    assert len([d for d in os.listdir(path) if d.startswith("__kb=")]) == 64
+
+    def walk(*a, **kw):
+        raise AssertionError("plan_upsert walked every file of the store")
+
+    monkeypatch.setattr(fsio, "list_files_recursive", walk)
+    batch = _df(spark, [("m1", "DOWN", 2), ("m2", "UP", 2), ("new", "UP", 2)])
+    sc = spark.sparkContext
+    group = f"plan-upsert-{uuid.uuid4().hex}"
+    with barrier_scope(spark):
+        sc.setJobGroup(group, "steady-state plan_upsert")
+        try:
+            deltas, merged = store.plan_upsert(batch, compare_col="status")
+        finally:
+            sc.setJobGroup("", "")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert {r.machine_id for r in deltas.collect()} == {"m1", "new"}
+        # merged is exactly the touched buckets' prior rows plus the new key
+        touched = [r[0] for r in batch.select(store._bucket()).distinct().collect()]
+        prior = spark.read.parquet(path).filter(F.col("__kb").isin(touched))
+        assert merged.count() == prior.count() + 1
+    # one pass over the batch, the deltas broadcast + barrier, and the
+    # merged anti-join (two shuffle stages, AQE's broadcast, barrier)
+    assert len(jobs) <= 7, f"plan_upsert ran {len(jobs)} jobs: {sorted(jobs)}"
