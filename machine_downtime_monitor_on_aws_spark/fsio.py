@@ -21,14 +21,16 @@ filter-kinesis-stream/index.ts:146-191); on a lake the durable unit
 is the filesystem rename, which HDFS guarantees atomic and S3A maps
 to copy+delete. Two kinds of payload move through rename here: SMALL
 single-file control records (atomic-enough everywhere), and
-build-if-absent store DIRECTORIES via :func:`publish_dir`, whose
-commit protocol is explicitly copy-publish-safe (the commit record
-surfaces last on every filesystem — see its docstring). Streaming
-data files never move through here — they are committed by Spark's
-own committers.
+build-if-absent store DIRECTORIES (:func:`build_if_absent`) via
+:func:`publish_dir`, whose commit protocol is explicitly
+copy-publish-safe (the commit record surfaces last on every
+filesystem — see its docstring). Streaming data files never move
+through here — they are committed by Spark's own committers.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -251,17 +253,40 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> bool:
 _LIVE_STORE_PATHS: set[str] = set()
 
 
+def store_ident(src: str, key: str) -> str:
+    """Identity of a store derived from the local corpus file ``src``:
+    ``{src}:{mtime_ns}:{size}:{key}``, so a changed corpus maps to a
+    new store. ``key`` must open with a ``name:vN`` version token: a
+    semantics change bumps the token instead of silently serving the
+    previous generation's store."""
+    import os
+    import re
+
+    if not re.match(r"[A-Za-z0-9_]+:v\d+(:|$)", key):
+        raise ValueError(f"store key must start with name:vN: {key!r}")
+    st = os.stat(src)
+    return f"{src}:{st.st_mtime_ns}:{st.st_size}:{key}"
+
+
+def store_tag(ident: str) -> str:
+    """The 10-hex tag naming everything built for ``ident``: the
+    :func:`tmp_store_path` directory and any warehouse table beside
+    it."""
+    import hashlib
+
+    return hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
+
+
 def tmp_store_path(family: str, ident: str) -> str:
     """Deterministic build-if-absent store location under the system
-    tempdir: ``spark_graft_{family}_{md5(ident)[:10]}``. Every ident
-    carries a ``name:vN`` version token (pinned by
-    tests/test_plans.py), so a semantics bump changes the tag and the
-    previous generation's directory becomes unreferenced garbage;
-    registering each computed path as live-in-this-process is what
-    lets :func:`sweep_stale_stores` reclaim exactly that garbage (the
+    tempdir: ``spark_graft_{family}_{store_tag(ident)}``. Every ident
+    carries a ``name:vN`` version token (:func:`store_ident`), so a
+    semantics bump changes the tag and the previous generation's
+    directory becomes unreferenced garbage; registering each computed
+    path as live-in-this-process is what lets
+    :func:`sweep_stale_stores` reclaim exactly that garbage (the
     v1->v2 migration's orphans, r11 verdict #4) without ever touching
     a store the current generation serves."""
-    import hashlib
     import os
     import re
     import tempfile
@@ -272,9 +297,49 @@ def tmp_store_path(family: str, ident: str) -> str:
     # than written and silently confuse sweep scoping
     if not re.fullmatch(r"[A-Za-z0-9_]+", family):
         raise ValueError(f"store family must be [A-Za-z0-9_]+: {family!r}")
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_{family}_{tag}")
+    path = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_{family}_{store_tag(ident)}"
+    )
     _LIVE_STORE_PATHS.add(path)
+    return path
+
+
+def build_if_absent(
+    spark: SparkSession,
+    family: str,
+    ident: str,
+    build: Callable[[str], None],
+    ok_name: str | None = None,
+) -> str:
+    """The published store for ``(family, ident)``, built on first use.
+
+    Warm, this is one exists-probe of the commit record. Cold,
+    ``build(staged)`` writes the whole store under a per-writer
+    ``{path}.build-<uuid>`` directory and :func:`publish_dir` swings
+    it into place, so no reader ever sees a partial store. Content is
+    a deterministic function of the ident, so a store lost to a crash
+    or a concurrent writer is rebuilt bit-identically.
+
+    ``ok_name`` is the commit record ``build`` writes itself (the
+    ``params.json`` of the ``save_*`` helpers, the ``_SUCCESS`` of a
+    Spark write); with None the finished build is certified here with
+    a ``_STORE_OK`` record. A raising ``build`` publishes nothing: its
+    staged directory is removed and the error propagates."""
+    import uuid
+
+    path = tmp_store_path(family, ident)
+    record = ok_name or "_STORE_OK"
+    if exists(spark, f"{path}/{record}"):
+        return path
+    staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    try:
+        build(staged)
+        if ok_name is None:
+            write_text_atomic(spark, f"{staged}/{record}", "ok")
+    except BaseException:
+        delete(spark, staged)
+        raise
+    publish_dir(spark, staged, path, ok_name=record)
     return path
 
 

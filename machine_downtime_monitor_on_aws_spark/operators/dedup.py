@@ -428,7 +428,6 @@ def connected_components(
     max_iterations: int = 25,
     hops_per_round: int = 3,
     driver_threshold: int = 200_000,
-    size_hint: str | None = None,
 ) -> DataFrame:
     """``(doc_id, component)`` for every node appearing in ``pairs``;
     ``component`` is the minimum id reachable through shared-bucket
@@ -453,12 +452,8 @@ def connected_components(
     duplicate graphs don't have that shape, so the simpler propagation
     wins on constant factors.
 
-    ``size_hint="large"`` skips the driver-threshold probe and goes
-    straight to distributed propagation - pass it when the edge count
-    is known to exceed ``driver_threshold`` (production scale), where
-    the probe's collect would execute the full upstream pair pipeline
-    once only to discard the result and run it again into the
-    checkpoint.
+    ``driver_threshold=0`` sends every non-empty graph to the
+    distributed propagation.
     """
     el = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # Size-based strategy switch (the same decision AQE makes for
@@ -478,16 +473,9 @@ def connected_components(
     # persisting them during the collect is pure overhead. The
     # distributed fall-through re-runs the pipeline once more into a
     # checkpoint it then iterates on - that second run is the price of
-    # auto-dispatch, so callers who KNOW the graph exceeds the
-    # threshold (the expected case at production scale) pass
-    # size_hint="large" to skip the probe entirely and run the
-    # upstream pipeline exactly once (r4 advice).
-    if size_hint not in (None, "auto", "large"):
-        raise ValueError(f"size_hint must be None/'auto'/'large', got {size_hint!r}")
-    head = (
-        [] if size_hint == "large" else el.limit(driver_threshold + 1).collect()
-    )
-    if size_hint != "large" and len(head) <= driver_threshold:
+    # auto-dispatch.
+    head = el.limit(driver_threshold + 1).collect()
+    if len(head) <= driver_threshold:
         # Union-find is direction-agnostic: raw (u, v) rows suffice -
         # no symmetric union, no distinct shuffle for sliver graphs.
         rows = head

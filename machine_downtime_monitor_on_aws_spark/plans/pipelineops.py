@@ -489,33 +489,20 @@ def shard_manifest_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     - BASE-OFFSET integrity: each epoch's rows start exactly one
       past the prior committed max per shard.
 
-    Replay runs once per corpus (build-if-absent under _REPLAY_DONE;
-    single-writer assumed, crash-partial builds wiped); warm
+    Replay runs once per corpus (streaming/epochs.replay_store); warm
     invocations read the feed. The ``ep`` column re-derives from the
     feed's __epoch_id suffix so the oracle's arrival attribution is
     checked, not assumed."""
-    import hashlib
     import os
 
+    from .. import fsio
+    from ..streaming.epochs import replay_store
     from ..streaming.shards import read_manifest, run_shard_manifest_stream
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:shreplay:v1:"
-        f"{_PACK_MAX_TOKENS}:{_PACK_BUCKETS}:{_N_SHARDS}:{_MANIFEST_EPOCHS}"
-    )
-    from .. import fsio
-
-    root = fsio.tmp_store_path("shreplay", ident)
-    manifest_path = f"{root}/manifest"
-    done = f"{root}/_REPLAY_DONE"
     key_schema = "bucket bigint, pack_id int, n_docs bigint, pack_tokens bigint"
 
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
+    def cold(root: str) -> list[DataFrame]:
         d = _docs(spark, sf_dir).select(
             "doc_id", token_count(F.col("text")).alias("n_tokens")
         )
@@ -530,35 +517,32 @@ def shard_manifest_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").alias("pack_tokens"),
             )
         )
-        in_dir = f"{root}/in"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(_MANIFEST_EPOCHS):
-            stage = f"{root}/stage_e{ep}"
+        return [
             packs.filter(
                 (F.col("bucket") + F.col("pack_id")) % _MANIFEST_EPOCHS == ep
-            ).coalesce(1).write.mode("overwrite").json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
             )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            q = run_shard_manifest_stream(
-                spark.readStream.schema(key_schema).json(in_dir),
-                ["bucket", "pack_id"],
-                manifest_path,
-                f"{root}/ckpt",
-                _N_SHARDS,
-                key_schema,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
-    feed = read_manifest(spark, manifest_path, key_schema)
+            for ep in range(_MANIFEST_EPOCHS)
+        ]
+
+    root = replay_store(
+        spark, "shreplay",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"shreplay:v1:{_PACK_MAX_TOKENS}:{_PACK_BUCKETS}:{_N_SHARDS}"
+            f":{_MANIFEST_EPOCHS}",
+        ),
+        key_schema,
+        cold,
+        lambda source, root, ep: run_shard_manifest_stream(
+            source,
+            ["bucket", "pack_id"],
+            f"{root}/manifest",
+            f"{root}/ckpt",
+            _N_SHARDS,
+            key_schema,
+        ),
+    )
+    feed = read_manifest(spark, f"{root}/manifest", key_schema)
     return feed.select(
         "bucket", "pack_id", "n_docs", "pack_tokens", "shard", "order_key",
         "position",

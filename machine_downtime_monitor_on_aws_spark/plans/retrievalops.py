@@ -100,29 +100,27 @@ def _lex_shortlist_store(spark: SparkSession, sf_dir: str) -> str:
     BM25 scores and integer ranks round-trip parquet exactly, so
     consumers keep hash-matching the derivation oracle; the PRODUCER
     query (bm25_top_docs) stays fully inline as the derivation
-    evidence. Staged build, single-rename publish."""
+    evidence. Staged build, single-rename publish
+    (fsio.build_if_absent)."""
     import os
-    import uuid
 
     from .. import fsio
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    terms = ",".join(_TERMS)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:lexshort:v1:{terms}:{_TOP_N}"
-    )
-    path = fsio.tmp_store_path("lexshort", ident)
-    if not fsio.exists(spark, f"{path}/_STORE_OK"):
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
         pin_utc(spark)
         d = load_table(spark, sf_dir, "documents")
         bm25_rank(d, list(_TERMS), _TOP_N).write.mode("overwrite").parquet(
             f"{staged}/lex"
         )
-        fsio.write_text_atomic(spark, f"{staged}/_STORE_OK", "ok")
-        fsio.publish_dir(spark, staged, path)
-    return path
+
+    return fsio.build_if_absent(
+        spark, "lexshort",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"lexshort:v1:{','.join(_TERMS)}:{_TOP_N}",
+        ),
+        build,
+    )
 
 
 @register(

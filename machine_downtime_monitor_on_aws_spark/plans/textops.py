@@ -9,9 +9,12 @@ whitespace tokenization are engine-portable primitives.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..functions.text import (
     STOPWORDS,
     distinct_token_count,
@@ -39,6 +42,12 @@ from ..operators.dedup import (
 )
 from ..operators.sampling import sample_hash, sample_hash_sql
 from ..session import barrier, barrier_scope, pin_utc
+from ..sources.lake import (
+    drop_warehouse_table,
+    reregister_bucketed_table,
+    stamp_bucketspec,
+)
+from ..streaming.epochs import replay_store
 from ..tables import load_table
 from .catalog import register
 
@@ -82,6 +91,28 @@ _STOPWORDS_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_utc(spark)
     return load_table(spark, sf_dir, "documents")
+
+
+# the document replays' arrival epochs (streaming/epochs.replay_store):
+# docs arrive by doc_id % 3, staged as JSON
+_ARRIVAL_SCHEMA = "doc_id long, text string"
+
+
+def _doc_arrivals(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    d = _docs(spark, sf_dir).select("doc_id", "text")
+    return [d.filter(F.col("doc_id") % 3 == ep) for ep in range(3)]
+
+
+def _submit_takedown_before_last_epoch(
+    spark: SparkSession, sf_dir: str, root: str, ep: int
+) -> None:
+    """The dedup replays' right-to-be-forgotten request (doc_id % 15
+    = 0), submitted BEFORE the last epoch's restart: its boot drain
+    must purge the index and scrub the feed."""
+    if ep == 2:
+        _docs(spark, sf_dir).filter(F.col("doc_id") % 15 == 0).select(
+            "doc_id"
+        ).write.mode("overwrite").parquet(f"{root}/takedown/pending")
 
 
 @register(
@@ -1359,33 +1390,17 @@ def _neardup_history_store(spark: SparkSession, sf_dir: str) -> str:
     corpus file's identity; bit-identical to the inline derivation
     (long ids/labels round-trip parquet exactly), so consumers keep
     hash-matching the derivation oracles. The three tables build
-    under a per-writer staged directory and publish through
-    fsio.publish_dir (r10 ADVICE #4; commit record surfaced last,
-    r11 ADVICE #1) - readers never observe a partial store or the
-    record before the data it certifies; the PRODUCER queries
+    and publish whole through fsio.build_if_absent - readers never
+    observe a partial store or the record before the data it
+    certifies; the PRODUCER queries
     (minhash_lsh_buckets, neardup_candidate_pairs,
     neardup_jaccard_verified, neardup_duplicate_clusters) stay fully
     inline as the derivation evidence."""
-    import os
 
-    from .. import fsio
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:mhhist:v2:"
-        f"{_NUM_PERMS}:{_NUM_BANDS}:{_SHINGLE_N}"
-    )
-    path = fsio.tmp_store_path("mh_hist", ident)
-    if not fsio.exists(spark, f"{path}/_STORE_OK"):
-        # per-writer staged build, published with ONE rename (r10
-        # ADVICE #4): a reader never sees a partial three-table store
-        # or an in-flight overwrite at the published path
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        pairs = _minhash_pairs(spark, sf_dir)
-        pairs.write.mode("overwrite").parquet(f"{staged}/pairs")
+    def build(staged: str) -> None:
+        _minhash_pairs(spark, sf_dir).write.mode("overwrite").parquet(
+            f"{staged}/pairs"
+        )
         stored = spark.read.parquet(f"{staged}/pairs")
         connected_components(
             stored.filter(~_pair_epoch2(stored))
@@ -1393,9 +1408,15 @@ def _neardup_history_store(spark: SparkSession, sf_dir: str) -> str:
         connected_components(stored).write.mode("overwrite").parquet(
             f"{staged}/labels_full"
         )
-        fsio.write_text_atomic(spark, f"{staged}/_STORE_OK", "ok")
-        fsio.publish_dir(spark, staged, path)
-    return path
+
+    return fsio.build_if_absent(
+        spark, "mh_hist",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"mhhist:v2:{_NUM_PERMS}:{_NUM_BANDS}:{_SHINGLE_N}",
+        ),
+        build,
+    )
 
 
 def _stored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1946,8 +1967,6 @@ def bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, warm calls are one digest-verified load + the segment
     folds. Stored merges are the training output verbatim, so the
     oracle is unchanged."""
-    import os
-
     from ..operators.bpe import (
         bpe_segment,
         bpe_train_merges,
@@ -1957,21 +1976,16 @@ def bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin_utc(spark)
     d = load_table(spark, sf_dir, "documents")
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:bpe:v2:{_BPE_MERGES}"
-    from .. import fsio
-
-    path = fsio.tmp_store_path("bpe_merges", ident)
-
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        save_merges(
+    path = fsio.build_if_absent(
+        spark, "bpe_merges",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), f"bpe:v2:{_BPE_MERGES}"
+        ),
+        lambda staged: save_merges(
             spark, staged, bpe_train_merges(d, "text", _BPE_MERGES), "bpe"
-        )
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
+        ),
+        ok_name="params.json",
+    )
     merges, _params = load_merges(spark, path, expect_layout="bpe")
     # spread the segmentation folds: the corpus arrives in one input
     # split at bench scale and would otherwise segment on one core
@@ -2103,25 +2117,14 @@ def _bigram_lm_counts(
     digest-verified (bigram, c) / (w1, c1) tables + V. Integer counts
     round-trip parquet exactly. Digests are recomputed over the
     RE-READ parquet so they pin the on-disk bytes. The whole store
-    (both count tables + params.json) builds under a per-writer
-    staged directory and publishes with ONE rename (r10 ADVICE #4) -
-    a concurrent reader can never digest-verify against another
-    writer's in-flight overwrite, because nothing is ever rewritten
-    at the published path; params.json doubles as the commit record
-    (publish_dir keys on it)."""
+    (both count tables + params.json) builds and publishes whole
+    through fsio.build_if_absent - a concurrent reader can never
+    digest-verify against another writer's in-flight overwrite,
+    because nothing is ever rewritten at the published path;
+    params.json doubles as the commit record."""
     import json as _json
-    import os
-    import uuid
 
-    from .. import fsio
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:bigramlm:v2:a1"
-    path = fsio.tmp_store_path("bigram_lm", ident)
-    rec = f"{path}/params.json"
-    if not fsio.exists(spark, rec):
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
         bc, pc, vocab = _train_bigram_counts(spark, _docs(spark, sf_dir))
         bc.write.mode("overwrite").parquet(f"{staged}/bigram_counts")
         pc.write.mode("overwrite").parquet(f"{staged}/prefix_counts")
@@ -2144,8 +2147,15 @@ def _bigram_lm_counts(
                 sort_keys=True,
             ),
         )
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
-    params = _json.loads(fsio.read_text(spark, rec))
+
+    path = fsio.build_if_absent(
+        spark, "bigram_lm",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), "bigramlm:v2:a1"
+        ),
+        build, ok_name="params.json",
+    )
+    params = _json.loads(fsio.read_text(spark, f"{path}/params.json"))
     bc = spark.read.parquet(f"{path}/bigram_counts")
     pc = spark.read.parquet(f"{path}/prefix_counts")
     for df, cols, key in (
@@ -2326,60 +2336,26 @@ def kn_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
       decontamination loop's crash protocol: epoch-keyed dynamic
       overwrites, marker-gated replays).
 
-    Replay runs once per corpus (build-if-absent under _REPLAY_DONE;
-    single-writer assumed, crash-partial builds wiped); warm
+    Replay runs once per corpus (streaming/epochs.replay_store); warm
     invocations fold the persisted feed - the serve path IS the
-    production read. Epoch inputs stage through a distributed JSON
-    write + rename; the corpus never collects to the driver."""
-    import hashlib
-    import os
-
+    production read."""
     from ..operators.kneser_ney import kn_scores_from_counts, trigram_rows
     from ..streaming.lm import kn_counts_from_store, run_kn_counts_stream
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:knreplay:v1:3"
-    from .. import fsio
-
-    root = fsio.tmp_store_path("knreplay", ident)
-    counts_path = f"{root}/counts"
-    done = f"{root}/_REPLAY_DONE"
-
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        in_dir = f"{root}/in"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            d.filter(F.col("doc_id") % 3 == ep).coalesce(1).write.mode(
-                "overwrite"
-            ).json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            q = run_kn_counts_stream(
-                spark.readStream.schema("doc_id long, text string").json(
-                    in_dir
-                ),
-                counts_path,
-                f"{root}/ckpt",
-                lambda: tokens(F.col("text")),
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
-    c3t = kn_counts_from_store(spark, counts_path)
+    root = replay_store(
+        spark, "knreplay",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), "knreplay:v1:3"
+        ),
+        _ARRIVAL_SCHEMA,
+        lambda root: _doc_arrivals(spark, sf_dir),
+        lambda source, root, ep: run_kn_counts_stream(
+            source, f"{root}/counts", f"{root}/ckpt",
+            lambda: tokens(F.col("text")),
+        ),
+    )
+    c3t = kn_counts_from_store(spark, f"{root}/counts")
     tr = trigram_rows(
         _docs(spark, sf_dir).select("doc_id", "text"),
         tokens(F.col("text")),
@@ -2970,8 +2946,6 @@ def unigram_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-segmentation - which is exactly train_unigram_lm's last step
     as a pure function of (vocab, word table), so the oracle is
     unchanged and cold/warm paths hash identically."""
-    import os
-
     from ..operators.unigram_lm import (
         encode_docs,
         load_unigram_vocab,
@@ -2983,20 +2957,8 @@ def unigram_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir)
     wf = word_freqs(d, "text", _ULM_MAXW)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:ulm:v2:{_ULM_MAXW}:{_ULM_MAXP}"
-        f":{_ULM_SEED_CAP}:{_ULM_PRUNE_CAP}"
-    )
-    from .. import fsio
 
-    path = fsio.tmp_store_path("ulm_vocab", ident)
-
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
         # the trainer's words/seed barriers end with the vocab save
         with barrier_scope(spark):
             trained, _seg = train_unigram_lm(
@@ -3005,7 +2967,15 @@ def unigram_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 max_piece=_ULM_MAXP,
             )
             save_unigram_vocab(spark, staged, trained, _ULM_MAXP)
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
+
+    path = fsio.build_if_absent(
+        spark, "ulm_vocab",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"ulm:v2:{_ULM_MAXW}:{_ULM_MAXP}:{_ULM_SEED_CAP}:{_ULM_PRUNE_CAP}",
+        ),
+        build, ok_name="params.json",
+    )
     vocab, _params = load_unigram_vocab(spark, path)
     seg = viterbi_segment_words(wf, vocab, _ULM_MAXP)
     return encode_docs(d, seg, "doc_id", "text", _ULM_MAXW)
@@ -3308,9 +3278,6 @@ def perceptron_lang_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm invocations load the digest-verified dim+1 ints and run only
     the scoring pass. Ints round-trip JSON exactly, so store-served
     margins hash identically to retraining - oracle unchanged."""
-    import os
-
-    from .. import fsio
     from ..operators.perceptron import (
         hashed_token_features,
         load_weights,
@@ -3325,17 +3292,19 @@ def perceptron_lang_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         F.when(F.col("lang") == "en", 1).otherwise(-1).alias("y"),
     )
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:pcep:v2:{_PCEP_DIM}:{_PCEP_ITERS}"
+    path = fsio.build_if_absent(
+        spark, "pcep",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"),
+            f"pcep:v2:{_PCEP_DIM}:{_PCEP_ITERS}",
+        ),
+        lambda staged: save_weights(
+            spark, staged,
+            perceptron_train(feats, labels, _PCEP_DIM + 1, _PCEP_ITERS),
+            {"task": "en_vs_rest", "iters": _PCEP_ITERS},
+        ),
+        ok_name="params.json",
     )
-    path = fsio.tmp_store_path("pcep", ident)
-    if not fsio.exists(spark, f"{path}/params.json"):
-        w = perceptron_train(feats, labels, _PCEP_DIM + 1, _PCEP_ITERS)
-        save_weights(
-            spark, path, w, {"task": "en_vs_rest", "iters": _PCEP_ITERS}
-        )
     w, _params = load_weights(spark, path)
     return perceptron_predict(feats, labels, w)
 
@@ -3642,9 +3611,6 @@ def incremental_exact_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-forces every history-x-batch and batch-x-batch pair in
     DuckDB - a hash match machine-checks losslessness of the whole
     index+probe lifecycle."""
-    import hashlib
-    import os
-
     from ..operators.allpairs import (
         incremental_exact_jaccard,
         shingle_postings,
@@ -3652,36 +3618,30 @@ def incremental_exact_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:shx:v2:{_SHINGLE_N}"
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    table = f"spark_graft_shx_{tag}"
+    table = "spark_graft_shx_" + fsio.store_tag(
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), f"shx:v2:{_SHINGLE_N}"
+        )
+    )
     d = _docs(spark, sf_dir)
-    if not spark.catalog.tableExists(table):
-        # table registrations are SESSION-scoped but the location (and
-        # the build's full output, sidecar-stamped) persists in the
-        # warehouse dir. A fresh session first tries to RESTORE the
-        # registration over the existing files (one DDL, zero data
-        # movement - r17 verdict #6: the rebuild cost 8s per cold
-        # session); only a location without a complete sidecar is
-        # cleared and rebuilt.
-        from .. import fsio
-        from ..sources.lake import reregister_bucketed_table, stamp_bucketspec
-
-        if not reregister_bucketed_table(spark, table):
-            wh = spark.conf.get("spark.sql.warehouse.dir")
-            loc = f"{wh.rstrip('/')}/{table}"
-            if fsio.exists(spark, loc):
-                fsio.delete(spark, loc)
-            hist = d.filter(F.col("doc_id") % 10 != 0)
-            write_shingle_index(
-                shingle_postings(hist, "doc_id", "text", _SHINGLE_N),
-                table,
-                num_buckets=16,
-                shingle_n=_SHINGLE_N,
-            )
-            stamp_bucketspec(spark, table)
+    # table registrations are SESSION-scoped but the location (and the
+    # build's full output, sidecar-stamped) persists in the warehouse
+    # dir. A fresh session first tries to RESTORE the registration over
+    # the existing files (one DDL, zero data movement - r17 verdict #6:
+    # the rebuild cost 8s per cold session); only a location without a
+    # complete sidecar is cleared and rebuilt.
+    if not reregister_bucketed_table(spark, table):
+        drop_warehouse_table(spark, table)
+        write_shingle_index(
+            shingle_postings(
+                d.filter(F.col("doc_id") % 10 != 0), "doc_id", "text",
+                _SHINGLE_N,
+            ),
+            table,
+            num_buckets=16,
+            shingle_n=_SHINGLE_N,
+        )
+        stamp_bucketspec(spark, table)
     batch = d.filter(F.col("doc_id") % 10 == 0)
     return incremental_exact_jaccard(
         spark, batch, "doc_id", "text", table, 0.5, _SHINGLE_N
@@ -3701,8 +3661,6 @@ def _parquet_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     per store file to every warm call - measured +0.7 s on the
     64-bucket labels store). Only a fully absent path needs the one
     exists() probe."""
-    from .. import fsio
-
     if not fsio.exists(spark, path):
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(path)
@@ -3727,83 +3685,42 @@ def minhash_stream_labels_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode), update_components' per-epoch contractions converge to the
     exact min-label components regardless of arrival order, and the
     keyed store's upserts preserve them. Replay runs once per corpus
-    (build-if-absent under a _REPLAY_DONE gate, partial builds
-    wiped); warm invocations read the store. Unlike the parquet
-    stores (publish_dir), the replay root is NOT staged-published:
-    the build runs streaming checkpoints INSIDE the root, so a
-    concurrent cold builder of the same corpus would interleave
-    epochs. Single-writer is assumed for the one-shot replay build
-    (documented per r10 ADVICE #4); the gate+wipe protocol
-    serializes CRASH recovery, not concurrency."""
-    import hashlib
-    import os
-
+    (streaming/epochs.replay_store); warm invocations read the
+    store."""
     from ..streaming.dedup import run_incremental_dedup_stream
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:mhreplay:v2:"
-        f"{_NUM_PERMS}:{_NUM_BANDS}:{_SHINGLE_N}:3"
+    ident = fsio.store_ident(
+        os.path.join(sf_dir, "documents.parquet"),
+        f"mhreplay:v2:{_NUM_PERMS}:{_NUM_BANDS}:{_SHINGLE_N}:3",
     )
-    from .. import fsio
+    table = f"spark_graft_mrp_{fsio.store_tag(ident)}"
 
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    root = fsio.tmp_store_path("mhreplay", ident)
-    labels_path = f"{root}/labels"
-    done = f"{root}/_REPLAY_DONE"
+    def cold(root: str) -> list[DataFrame]:
+        drop_warehouse_table(spark, table)
+        return _doc_arrivals(spark, sf_dir)
 
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
-        table = f"spark_graft_mrp_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{wh.rstrip('/')}/{table}"
-        if fsio.exists(spark, loc):
-            fsio.delete(spark, loc)
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        in_dir = f"{root}/in"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            d.filter(F.col("doc_id") % 3 == ep).coalesce(1).write.mode(
-                "overwrite"
-            ).json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            q = run_incremental_dedup_stream(
-                spark.readStream.schema("doc_id long, text string").json(
-                    in_dir
-                ),
-                table,
-                f"{root}/pairs",
-                f"{root}/ckpt",
-                num_perms=_NUM_PERMS,
-                num_bands=_NUM_BANDS,
-                shingle_n=_SHINGLE_N,
-                num_buckets=16,
-                parallelism=spark.sparkContext.defaultParallelism,
-                max_bucket_size=None,
-                labels_store_path=labels_path,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
+    root = replay_store(
+        spark, "mhreplay", ident, _ARRIVAL_SCHEMA, cold,
+        lambda source, root, ep: run_incremental_dedup_stream(
+            source,
+            table,
+            f"{root}/pairs",
+            f"{root}/ckpt",
+            num_perms=_NUM_PERMS,
+            num_bands=_NUM_BANDS,
+            shingle_n=_SHINGLE_N,
+            num_buckets=16,
+            parallelism=spark.sparkContext.defaultParallelism,
+            max_bucket_size=None,
+            labels_store_path=f"{root}/labels",
+        ),
+    )
     # KeyedParquetStore.read via the committed-file guard: a takedown
     # drain that scrubbed every label leaves no .parquet - the true
     # end state is empty, not an unable-to-infer-schema error
     return _parquet_or_empty(
-        spark, labels_path, "doc_id long, component long"
+        spark, f"{root}/labels", "doc_id long, component long"
     ).select("doc_id", "component")
 
 
@@ -3848,82 +3765,40 @@ def exact_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
       excludes purged docs, valid ONLY because retention is scrubbed
       everywhere).
 
-    The replay runs once per corpus (build-if-absent under a
-    _REPLAY_DONE gate; single-writer assumed for the one-shot replay
-    build, as for every replay root; a partial build from a crashed session is
-    wiped and rebuilt - the epoch markers make that deterministic);
-    warm invocations read the feed. Epoch inputs are staged by a
-    distributed JSON write + file rename - the corpus never
-    collects to the driver."""
-    import hashlib
-    import os
-
+    The replay runs once per corpus (streaming/epochs.replay_store;
+    a partial build from a crashed session is wiped and rebuilt - the
+    epoch markers make that deterministic); warm invocations read the
+    feed."""
     from ..streaming.dedup import run_exact_dedup_stream
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:xreplay:v2:{_SHINGLE_N}:3:15"
-    from .. import fsio
+    ident = fsio.store_ident(
+        os.path.join(sf_dir, "documents.parquet"), f"xreplay:v2:{_SHINGLE_N}:3:15"
+    )
+    table = f"spark_graft_xrp_{fsio.store_tag(ident)}"
 
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    root = fsio.tmp_store_path("xreplay", ident)
-    pairs_path = f"{root}/pairs"
-    done = f"{root}/_REPLAY_DONE"
+    def cold(root: str) -> list[DataFrame]:
+        drop_warehouse_table(spark, table)
+        return _doc_arrivals(spark, sf_dir)
 
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
-        table = f"spark_graft_xrp_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{wh.rstrip('/')}/{table}"
-        if fsio.exists(spark, loc):
-            fsio.delete(spark, loc)
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        in_dir = f"{root}/in"
-        takedown = f"{root}/takedown"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            d.filter(F.col("doc_id") % 3 == ep).coalesce(1).write.mode(
-                "overwrite"
-            ).json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            if ep == 2:
-                # takedown submitted BEFORE the last epoch's restart:
-                # its boot drain must purge index + scrub the feed
-                d.filter(F.col("doc_id") % 15 == 0).select(
-                    "doc_id"
-                ).write.mode("overwrite").parquet(f"{takedown}/pending")
-            q = run_exact_dedup_stream(
-                spark.readStream.schema("doc_id long, text string").json(
-                    in_dir
-                ),
-                table,
-                pairs_path,
-                f"{root}/ckpt",
-                threshold=0.5,
-                shingle_n=_SHINGLE_N,
-                num_buckets=16,
-                parallelism=spark.sparkContext.defaultParallelism,
-                takedown_requests_path=takedown,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
+    def start(source: DataFrame, root: str, ep: int):
+        _submit_takedown_before_last_epoch(spark, sf_dir, root, ep)
+        return run_exact_dedup_stream(
+            source,
+            table,
+            f"{root}/pairs",
+            f"{root}/ckpt",
+            threshold=0.5,
+            shingle_n=_SHINGLE_N,
+            num_buckets=16,
+            parallelism=spark.sparkContext.defaultParallelism,
+            takedown_requests_path=f"{root}/takedown",
+        )
+
+    root = replay_store(spark, "xreplay", ident, _ARRIVAL_SCHEMA, cold, start)
     feed = _parquet_or_empty(
         spark,
-        pairs_path,
+        f"{root}/pairs",
         "doc_a long, doc_b long, jaccard double, __epoch_id string",
     )
     return feed.select(
@@ -3978,13 +3853,9 @@ def decontam_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
       postings table recovers exactly the corpus-side explode+join
       the batch operator runs.
 
-    Replay runs once per corpus (build-if-absent under _REPLAY_DONE;
-    single-writer assumed, crash-partial builds wiped); warm
+    Replay runs once per corpus (streaming/epochs.replay_store); warm
     invocations read the feed. Docs sharing no gram never enter the
     feed - the O(delta) point of the loop."""
-    import hashlib
-    import os
-
     from ..operators.allpairs import shingle_postings, write_shingle_index
     from ..streaming.decontam import (
         contamination_totals,
@@ -3992,25 +3863,13 @@ def decontam_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:dcreplay:v1:{_CONTAM_N}:3"
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    from .. import fsio
+    ident = fsio.store_ident(
+        os.path.join(sf_dir, "documents.parquet"), f"dcreplay:v1:{_CONTAM_N}:3"
+    )
+    table = f"spark_graft_dcr_{fsio.store_tag(ident)}"
 
-    root = fsio.tmp_store_path("dcreplay", ident)
-    flags_path = f"{root}/flags"
-    done = f"{root}/_REPLAY_DONE"
-
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
-        table = f"spark_graft_dcr_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{wh.rstrip('/')}/{table}"
-        if fsio.exists(spark, loc):
-            fsio.delete(spark, loc)
+    def cold(root: str) -> list[DataFrame]:
+        drop_warehouse_table(spark, table)
         d = _docs(spark, sf_dir)
         # the corpus's postings index at the decontamination window
         write_shingle_index(
@@ -4025,37 +3884,22 @@ def decontam_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shingle_n=_CONTAM_N,
         )
         bench = d.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-        in_dir = f"{root}/in"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            bench.filter(
-                (F.col("doc_id") % 291) / 97 == ep
-            ).coalesce(1).write.mode("overwrite").json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            q = run_decontamination_stream(
-                spark.readStream.schema("doc_id long, text string").json(
-                    in_dir
-                ),
-                table,
-                f"{root}/grams",
-                flags_path,
-                f"{root}/ckpt",
-                n=_CONTAM_N,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
-    return contamination_totals(spark, flags_path)
+        return [
+            bench.filter((F.col("doc_id") % 291) / 97 == ep) for ep in range(3)
+        ]
+
+    root = replay_store(
+        spark, "dcreplay", ident, _ARRIVAL_SCHEMA, cold,
+        lambda source, root, ep: run_decontamination_stream(
+            source,
+            table,
+            f"{root}/grams",
+            f"{root}/flags",
+            f"{root}/ckpt",
+            n=_CONTAM_N,
+        ),
+    )
+    return contamination_totals(spark, f"{root}/flags")
 
 
 # incremental substring dedup: duplicated_spans' oracle restricted to
@@ -4095,35 +3939,26 @@ def incremental_duplicated_spans_query(
     keyed by the corpus file's identity; the oracle runs the full
     self-join with a pair-level batch restriction, so the hash match
     machine-checks that the incremental path loses NO span."""
-    import hashlib
-    import os
-
     from ..operators.spans import (
         incremental_duplicated_spans,
         write_kgram_index,
     )
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:kgram:v2:{_SPAN_K}"
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    table = f"spark_graft_kgx_{tag}"
+    table = "spark_graft_kgx_" + fsio.store_tag(
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), f"kgram:v2:{_SPAN_K}"
+        )
+    )
     d = _docs(spark, sf_dir)
-    if not spark.catalog.tableExists(table):
-        # restore-over-existing-files first, rebuild only without a
-        # complete sidecar (see the shingle index note above)
-        from .. import fsio
-        from ..sources.lake import reregister_bucketed_table, stamp_bucketspec
-
-        if not reregister_bucketed_table(spark, table):
-            wh = spark.conf.get("spark.sql.warehouse.dir")
-            loc = f"{wh.rstrip('/')}/{table}"
-            if fsio.exists(spark, loc):
-                fsio.delete(spark, loc)
-            hist = d.filter(F.col("doc_id") % 10 != 0)
-            write_kgram_index(hist, table, _SPAN_K, num_buckets=16)
-            stamp_bucketspec(spark, table)
+    # restore-over-existing-files first, rebuild only without a
+    # complete sidecar (see the shingle index note above)
+    if not reregister_bucketed_table(spark, table):
+        drop_warehouse_table(spark, table)
+        write_kgram_index(
+            d.filter(F.col("doc_id") % 10 != 0), table, _SPAN_K, num_buckets=16
+        )
+        stamp_bucketspec(spark, table)
     batch = d.filter(F.col("doc_id") % 10 == 0)
     return incremental_duplicated_spans(spark, batch, table, _SPAN_K)
 
@@ -4184,79 +4019,36 @@ def span_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
       simply excludes them, valid only because retention is scrubbed
       everywhere).
 
-    Replay runs once per corpus (build-if-absent under a
-    _REPLAY_DONE gate; partial builds wiped, single-writer assumed as
-    for every replay root); warm invocations read
-    the feed through the committed-file guard. Epoch inputs stage
-    via distributed JSON write + rename - the corpus never collects
-    to the driver."""
-    import hashlib
-    import os
-
+    Replay runs once per corpus (streaming/epochs.replay_store); warm
+    invocations read the feed through the committed-file guard."""
     from ..streaming.dedup import run_span_dedup_stream
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:sreplay:v2:{_SPAN_K}:3:15"
-    from .. import fsio
+    ident = fsio.store_ident(
+        os.path.join(sf_dir, "documents.parquet"), f"sreplay:v2:{_SPAN_K}:3:15"
+    )
+    table = f"spark_graft_srp_{fsio.store_tag(ident)}"
 
-    tag = hashlib.md5(ident.encode("utf-8")).hexdigest()[:10]
-    root = fsio.tmp_store_path("sreplay", ident)
-    spans_path = f"{root}/spans"
-    done = f"{root}/_REPLAY_DONE"
+    def cold(root: str) -> list[DataFrame]:
+        drop_warehouse_table(spark, table)
+        return _doc_arrivals(spark, sf_dir)
 
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
-        table = f"spark_graft_srp_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{wh.rstrip('/')}/{table}"
-        if fsio.exists(spark, loc):
-            fsio.delete(spark, loc)
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        in_dir = f"{root}/in"
-        takedown = f"{root}/takedown"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            d.filter(F.col("doc_id") % 3 == ep).coalesce(1).write.mode(
-                "overwrite"
-            ).json(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and not p.endswith(".crc")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.json")
-            if ep == 2:
-                # takedown submitted BEFORE the last epoch's restart:
-                # its boot drain must purge the index + scrub the feed
-                d.filter(F.col("doc_id") % 15 == 0).select(
-                    "doc_id"
-                ).write.mode("overwrite").parquet(f"{takedown}/pending")
-            q = run_span_dedup_stream(
-                spark.readStream.schema("doc_id long, text string").json(
-                    in_dir
-                ),
-                table,
-                spans_path,
-                f"{root}/ckpt",
-                _SPAN_K,
-                num_buckets=16,
-                takedown_requests_path=takedown,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
+    def start(source: DataFrame, root: str, ep: int):
+        _submit_takedown_before_last_epoch(spark, sf_dir, root, ep)
+        return run_span_dedup_stream(
+            source,
+            table,
+            f"{root}/spans",
+            f"{root}/ckpt",
+            _SPAN_K,
+            num_buckets=16,
+            takedown_requests_path=f"{root}/takedown",
+        )
+
+    root = replay_store(spark, "sreplay", ident, _ARRIVAL_SCHEMA, cold, start)
     feed = _parquet_or_empty(
         spark,
-        spans_path,
+        f"{root}/spans",
         "doc_a long, doc_b long, start_a long, start_b long, "
         "span_tokens long, __epoch_id string",
     )
@@ -4439,8 +4231,6 @@ def wordpiece_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored merges are the training output verbatim (save/load
     round-trip digest-guarded in operators/bpe.py), so the oracle is
     unchanged - cold and warm paths hash identically."""
-    import os
-
     from ..operators.bpe import load_merges, save_merges
     from ..operators.wordpiece import (
         wordpiece_encode_words,
@@ -4449,22 +4239,17 @@ def wordpiece_doc_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _docs(spark, sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:wp:v2:{_WP_MERGES}"
-    from .. import fsio
-
-    path = fsio.tmp_store_path("wp_merges", ident)
-
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        save_merges(
+    path = fsio.build_if_absent(
+        spark, "wp_merges",
+        fsio.store_ident(
+            os.path.join(sf_dir, "documents.parquet"), f"wp:v2:{_WP_MERGES}"
+        ),
+        lambda staged: save_merges(
             spark, staged, wordpiece_train_merges(d, "text", _WP_MERGES),
             "wordpiece",
-        )
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
+        ),
+        ok_name="params.json",
+    )
     merges, _params = load_merges(spark, path, expect_layout="wordpiece")
     vocab = wordpiece_vocab(d, "text", merges)
     tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))

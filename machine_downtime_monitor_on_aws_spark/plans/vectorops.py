@@ -9,9 +9,12 @@ Spark plan and the oracle SQL.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..functions.vectors import hyperplanes
 from ..operators.similarity import brute_force_topk, lsh_neardup_pairs
 from ..session import barrier, barrier_scope, pin_utc
@@ -806,8 +809,6 @@ def ivfpq_rerank_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     query. Same deterministic first-16-residual codebooks, so the
     DuckDB oracle re-derives build + probe + shortlist + re-rank
     and the result hash-matches bit-for-bit."""
-    import os
-
     from ..operators.ivf import (
         build_ivfpq_index,
         load_ivfpq_codebooks,
@@ -815,24 +816,25 @@ def ivfpq_rerank_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _emb(spark, sf_dir).select("vec_id", "vec")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:ivfpq:v2:{_N_CENTROIDS}:{_PQ_M}:{_PQ_K}"
-    from .. import fsio
+    books = None
 
-    path = fsio.tmp_store_path("ivfpq_idx", ident)
-
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
+        nonlocal books
         cents, books = _ivfpq_books(e)
         build_ivfpq_index(
             e, staged, _N_CENTROIDS, _DIM, _PQ_M, books,
             centroids=cents, residual=True,
         )
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
-    else:
+
+    path = fsio.build_if_absent(
+        spark, "ivfpq_idx",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"ivfpq:v2:{_N_CENTROIDS}:{_PQ_M}:{_PQ_K}",
+        ),
+        build, ok_name="params.json",
+    )
+    if books is None:
         books = load_ivfpq_codebooks(spark, path)
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("vec").alias("qvec")
@@ -1084,8 +1086,6 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> dict:
     digest-verified K x dim sliver. Parquet doubles round-trip
     exactly, so store-served assignments hash identically to
     retraining and the unrolled-CTE oracles are unchanged."""
-    import os
-
     from ..operators.kmeans import (
         first_k_init,
         lloyd_iterations,
@@ -1093,27 +1093,22 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> dict:
         save_centroids,
     )
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:km:v2:{_KM_K}:{_KM_ITERS}"
-        f":{_DIM}:first_k"
-    )
-    from .. import fsio
-
-    path = fsio.tmp_store_path("km_cents", ident)
-
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
         e = _emb(spark, sf_dir).select("vec_id", "vec")
         save_centroids(
             spark,
             staged,
             lloyd_iterations(e, first_k_init(e, _KM_K), _DIM, _KM_ITERS),
         )
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
+
+    path = fsio.build_if_absent(
+        spark, "km_cents",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"km:v2:{_KM_K}:{_KM_ITERS}:{_DIM}:first_k",
+        ),
+        build, ok_name="params.json",
+    )
     cents, _params = load_centroids(spark, path)
     return cents
 
@@ -1394,28 +1389,21 @@ def ivfbin_rerank_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe, integer Hamming, left-fold sqL2), so the DuckDB oracle
     re-derives thresholds, codes, coarse assignment, probe, pruned
     shortlist, and re-rank end to end, hash-exact."""
-    import os
-
     from ..operators.ivf import build_ivfbin_index, search_ivfbin_index_rerank
     from ..operators.signq import signq_fit_thresholds
 
     e = _emb(spark, sf_dir).select("vec_id", "vec")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:ivfbin:v1:"
-        f"{_N_CENTROIDS}:{_DIM}"
+    path = fsio.build_if_absent(
+        spark, "ivfbin_idx",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"ivfbin:v1:{_N_CENTROIDS}:{_DIM}",
+        ),
+        lambda staged: build_ivfbin_index(
+            e, staged, _N_CENTROIDS, _DIM, signq_fit_thresholds(e, _DIM)
+        ),
+        ok_name="params.json",
     )
-    from .. import fsio
-
-    path = fsio.tmp_store_path("ivfbin_idx", ident)
-    if not fsio.exists(spark, f"{path}/params.json"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        thr = signq_fit_thresholds(e, _DIM)
-        build_ivfbin_index(e, staged, _N_CENTROIDS, _DIM, thr)
-        fsio.publish_dir(spark, staged, path, ok_name="params.json")
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("vec").alias("qvec")
     )
@@ -1630,29 +1618,24 @@ def neardup_pagerank_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. Shares the demo's oracle verbatim: the stored pairs are
     bit-identical to the inline ones, so both queries hash-match the
     same DuckDB CTE chain."""
-    import os
-
     from ..operators.graph import pagerank_unrolled
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = f"{src}:{st.st_mtime_ns}:{st.st_size}:lshpairs:v2:{_NUM_PLANES}:{_NEARDUP_THRESHOLD}"
-    from .. import fsio
-
-    path = fsio.tmp_store_path("lsh_pairs", ident)
-
-    if not fsio.exists(spark, f"{path}/_SUCCESS"):
-        import uuid
-
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        e = _emb(spark, sf_dir)
+    def build(staged: str) -> None:
         # the write consumes the pair pipeline's barrier entirely
         with barrier_scope(spark):
             lsh_neardup_pairs(
-                e, _NEARDUP_THRESHOLD, _NUM_PLANES, _DIM,
+                _emb(spark, sf_dir), _NEARDUP_THRESHOLD, _NUM_PLANES, _DIM,
                 parallelism=spark.sparkContext.defaultParallelism,
             ).write.mode("overwrite").parquet(staged)
-        fsio.publish_dir(spark, staged, path, ok_name="_SUCCESS")
+
+    path = fsio.build_if_absent(
+        spark, "lsh_pairs",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"lshpairs:v2:{_NUM_PLANES}:{_NEARDUP_THRESHOLD}",
+        ),
+        build, ok_name="_SUCCESS",
+    )
     pairs = spark.read.parquet(path)
     pr = pagerank_unrolled(pairs, _PR_ITERS)
     return pr.select(F.col("node").alias("vec_id"), "degree", "pagerank")
@@ -1859,26 +1842,14 @@ def _retrieval_shortlist_store(spark: SparkSession, sf_dir: str) -> str:
     embedding vector at all). Build-if-absent keyed on the corpus file's
     identity plus a version token and every hyperparameter that
     shapes the tables; the fully built store publishes with ONE
-    rename (fsio.publish_dir), so readers never observe a partial or
-    in-rewrite store. Doubles round-trip parquet exactly, so
+    rename (fsio.build_if_absent), so readers never observe a partial
+    or in-rewrite store. Doubles round-trip parquet exactly, so
     consumers keep hash-matching their derivation oracles; the
     PRODUCER query (knn_bruteforce_top5) stays fully inline as the
     derivation evidence."""
-    import os
-    import uuid
-
-    from .. import fsio
     from ..operators.similarity import brute_force_topk, hard_negative_topk
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:retshort:v2:"
-        f"{_N_QUERIES}:{_SHORT_N}:{_HN_K}:{_MMR_N}:{_DIM}"
-    )
-    path = fsio.tmp_store_path("retshort", ident)
-    if not fsio.exists(spark, f"{path}/_STORE_OK"):
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
+    def build(staged: str) -> None:
         e = _emb(spark, sf_dir)
         par = spark.sparkContext.defaultParallelism
         q = e.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -1927,9 +1898,15 @@ def _retrieval_shortlist_store(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(f"{staged}/cand_sims")
         )
-        fsio.write_text_atomic(spark, f"{staged}/_STORE_OK", "ok")
-        fsio.publish_dir(spark, staged, path)
-    return path
+
+    return fsio.build_if_absent(
+        spark, "retshort",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"retshort:v2:{_N_QUERIES}:{_SHORT_N}:{_HN_K}:{_MMR_N}:{_DIM}",
+        ),
+        build,
+    )
 
 
 def _stored_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2096,72 +2073,44 @@ def ann_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch) stays covered by tests/test_streaming.py; its xxhash coin
     flips are not DuckDB-expressible, which is WHY the replay pins
     the offline-codebook path. Replay runs once per corpus
-    (build-if-absent under a _REPLAY_DONE gate); warm invocations
-    read the index corpus. Unlike the parquet stores (publish_dir),
-    the replay root is NOT staged-published: the build runs
-    streaming checkpoints INSIDE the root, so a concurrent cold
-    builder of the same corpus would interleave epochs.
-    Single-writer is assumed for the one-shot replay build
-    (documented per r10 ADVICE #4); the gate+wipe protocol
-    serializes CRASH recovery, not concurrency. Epoch inputs stage
-    as renamed parquet parts - doubles never transit a text
-    format."""
-    import os
-
-    from .. import fsio
+    (streaming/epochs.replay_store); warm invocations read the index
+    corpus. Epoch inputs stage as parquet - doubles never transit a
+    text format."""
     from ..streaming.ann import run_incremental_ann_stream
+    from ..streaming.epochs import replay_store
 
     pin_utc(spark)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = (
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:annreplay:v2:"
-        f"{_N_CENTROIDS}:{_DIM}:3"
-    )
-    root = fsio.tmp_store_path("annreplay", ident)
-    index_path = f"{root}/index"
-    done = f"{root}/_REPLAY_DONE"
-    if not fsio.exists(spark, done):
-        if fsio.exists(spark, root):
-            fsio.delete(spark, root)
+    cents = None
+
+    def cold(root: str) -> list[DataFrame]:
+        nonlocal cents
         e = _emb(spark, sf_dir).select("vec_id", "vec")
         cents = e.filter(
-            (F.col("vec_id") % 3 == 0)
-            & (F.col("vec_id") < 3 * _N_CENTROIDS)
+            (F.col("vec_id") % 3 == 0) & (F.col("vec_id") < 3 * _N_CENTROIDS)
         ).select(F.col("vec_id").alias("cid"), F.col("vec").alias("cv"))
-        in_dir = f"{root}/in"
-        fsio.mkdirs(spark, in_dir)
-        for ep in range(3):
-            stage = f"{root}/stage_e{ep}"
-            e.filter(F.col("vec_id") % 3 == ep).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            parts = sorted(
-                p
-                for p in fsio.list_files_recursive(spark, stage)
-                if "/part-" in p and p.endswith(".parquet")
-            )
-            for i, p in enumerate(parts):
-                fsio.rename(spark, p, f"{in_dir}/e{ep}_{i}.parquet")
-            q = run_incremental_ann_stream(
-                spark.readStream.schema(
-                    "vec_id long, vec array<double>"
-                ).parquet(in_dir),
-                index_path,
-                f"{root}/ckpt",
-                _N_CENTROIDS,
-                _DIM,
-                bootstrap_centroids=cents,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "replay epoch did not terminate within 600s"
-                )
-        fsio.write_text_atomic(spark, done, "ok")
+        return [e.filter(F.col("vec_id") % 3 == ep) for ep in range(3)]
+
+    root = replay_store(
+        spark, "annreplay",
+        fsio.store_ident(
+            os.path.join(sf_dir, "embeddings.parquet"),
+            f"annreplay:v2:{_N_CENTROIDS}:{_DIM}:3",
+        ),
+        "vec_id long, vec array<double>",
+        cold,
+        lambda source, root, ep: run_incremental_ann_stream(
+            source,
+            f"{root}/index",
+            f"{root}/ckpt",
+            _N_CENTROIDS,
+            _DIM,
+            bootstrap_centroids=cents,
+        ),
+        fmt="parquet",
+    )
     corpus = spark.read.schema(
         "vec_id long, list_id long, __epoch string"
-    ).parquet(f"{index_path}/corpus")
+    ).parquet(f"{root}/index/corpus")
     return corpus.select(
         "vec_id",
         "list_id",

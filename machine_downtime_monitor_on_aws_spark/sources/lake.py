@@ -356,8 +356,7 @@ def reregister_bucketed_table(spark: SparkSession, table_name: str) -> bool:
 
     if spark.catalog.tableExists(table_name):
         return True
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    loc = f"{wh.rstrip('/')}/{table_name}"
+    loc = _warehouse_location(spark, table_name)
     sidecar = f"{loc}/{_BUCKETSPEC_NAME}"
     if not fsio.exists(spark, sidecar):
         return False
@@ -393,6 +392,22 @@ def reregister_bucketed_table(spark: SparkSession, table_name: str) -> bool:
         )
     )
     return True
+
+
+def drop_warehouse_table(spark: SparkSession, table_name: str) -> None:
+    """Clear ``table_name`` for a rebuild: drop its registration and
+    delete its warehouse location. A restored table is EXTERNAL, so
+    DROP alone leaves its files, and ``saveAsTable`` refuses to write
+    over a location that still holds any."""
+    from .. import fsio
+
+    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+    fsio.delete(spark, _warehouse_location(spark, table_name))
+
+
+def _warehouse_location(spark: SparkSession, table_name: str) -> str:
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    return f"{wh.rstrip('/')}/{table_name}"
 
 
 def _sql_string(v) -> str:

@@ -11,7 +11,10 @@ the body that computes and writes.
 
 The helpers the ingest pipeline shares with the loops live here as
 well: the lineage token, the change-feed publish gate and the
-epoch-partition write. Every filesystem call goes through ``fsio``
+epoch-partition write. So does :func:`replay_store`, which replays
+a corpus through a loop in arrival epochs, once per corpus - the
+catalog's evidence that each loop is exactly-once. Every filesystem
+call goes through ``fsio``
 (the Hadoop FileSystem API), so a checkpoint dir or feed on
 ``s3a://``/``hdfs://`` runs the same code the local tests exercise.
 """
@@ -205,3 +208,65 @@ def run_epochs(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def replay_store(
+    spark: SparkSession,
+    family: str,
+    ident: str,
+    schema: str,
+    cold: Callable[[str], list[DataFrame]],
+    start: Callable[[DataFrame, str, int], StreamingQuery],
+    fmt: str = "json",
+) -> str:
+    """Replay a corpus through a streaming loop once per ``ident`` and
+    return the replay root (``fsio.tmp_store_path(family, ident)``),
+    under which the loop's sinks and checkpoint live.
+
+    A ``_REPLAY_DONE`` record gates the replay: warm calls cost one
+    exists-probe. Cold, any partial root a crashed build left is
+    wiped, then ``cold(root)`` runs once - the caller's cold-only
+    preparation (warehouse tables, indexes, centroids) goes there -
+    and returns one frame per arrival epoch. Each frame lands as
+    ``{root}/in/e{ep}_{i}.{fmt}`` (a ``coalesce(1)`` write to
+    ``{root}/stage_e{ep}`` whose ``part-*.{fmt}`` files are renamed
+    in, so the corpus never collects to the driver), and
+    ``start(source, root, ep)`` restarts the loop over the ``{fmt}``
+    stream of ``{root}/in`` read with ``schema``; it must return the
+    started ``availableNow`` query. An epoch that does not finish
+    within 600 s is stopped and raises. ``_REPLAY_DONE`` is written
+    last, so any failure leaves a root the next call wipes and
+    rebuilds; the loop's epoch markers make that rebuild
+    deterministic.
+
+    Unlike the :func:`fsio.build_if_absent` stores, the replay root
+    is NOT staged-published: the loop keeps its streaming checkpoint
+    INSIDE the root, so a concurrent cold build of the same corpus
+    would interleave epochs. Single-writer is assumed for the
+    one-shot build (r10 ADVICE #4); the gate+wipe protocol
+    serializes CRASH recovery, not concurrency."""
+    root = fsio.tmp_store_path(family, ident)
+    done = f"{root}/_REPLAY_DONE"
+    if fsio.exists(spark, done):
+        return root
+    fsio.delete(spark, root)
+    in_dir = f"{root}/in"
+    fsio.mkdirs(spark, in_dir)
+    for ep, frame in enumerate(cold(root)):
+        stage = f"{root}/stage_e{ep}"
+        frame.coalesce(1).write.mode("overwrite").format(fmt).save(stage)
+        parts = sorted(
+            n
+            for n in fsio.list_names(spark, stage)
+            if n.startswith("part-") and n.endswith(f".{fmt}")
+        )
+        for i, n in enumerate(parts):
+            fsio.rename(spark, f"{stage}/{n}", f"{in_dir}/e{ep}_{i}.{fmt}")
+        q = start(
+            spark.readStream.schema(schema).format(fmt).load(in_dir), root, ep
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("replay epoch did not terminate within 600s")
+    fsio.write_text_atomic(spark, done, "ok")
+    return root

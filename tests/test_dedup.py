@@ -386,12 +386,10 @@ def test_minhash_index_param_metadata(spark):
         spark.sql("DROP TABLE IF EXISTS mh_meta_test")
 
 
-def test_connected_components_size_hint_large(spark):
-    """size_hint='large' (skip the driver probe, straight to
-    distributed propagation) must yield the same components as the
-    auto path - and reject unknown hints."""
-    import pytest as _pytest
-
+def test_connected_components_distributed_matches_driver(spark):
+    """driver_threshold=0 (every non-empty graph takes the distributed
+    propagation) must yield the same components as the driver-side
+    union-find."""
     from machine_downtime_monitor_on_aws_spark.operators.dedup import (
         connected_components,
     )
@@ -403,11 +401,9 @@ def test_connected_components_size_hint_large(spark):
     auto = {tuple(r) for r in connected_components(pairs).collect()}
     dist = {
         tuple(r)
-        for r in connected_components(pairs, size_hint="large").collect()
+        for r in connected_components(pairs, driver_threshold=0).collect()
     }
     assert auto == dist and dist
-    with _pytest.raises(ValueError, match="size_hint"):
-        connected_components(pairs, size_hint="huge")
 
 
 def test_skew_resilience_boilerplate_fixture(spark):
@@ -472,11 +468,11 @@ def test_skew_resilience_boilerplate_fixture(spark):
     sim_labels = {r.doc_id: r.component for r in sim_comp}
     assert len({sim_labels[i] for i in boiler_ids if i in sim_labels}) <= 1
 
-    # distributed path survives the same near-clique (size_hint
+    # distributed path survives the same near-clique (driver_threshold=0
     # forces the iterative propagation even at test scale)
     dist = connected_components(
         spark.createDataFrame(pairs, "doc_a long, doc_b long"),
-        size_hint="large",
+        driver_threshold=0,
     ).collect()
     assert {r.doc_id: r.component for r in dist} == labels
 
@@ -1257,7 +1253,7 @@ def test_connected_components_large_releases_pins_in_scope(spark):
     with barrier_scope(spark):
         got = {
             (r.doc_id, r.component)
-            for r in connected_components(pairs, size_hint="large").collect()
+            for r in connected_components(pairs, driver_threshold=0).collect()
         }
         assert set(persistent_rdd_ids(spark)) - before
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)}

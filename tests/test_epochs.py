@@ -1,6 +1,8 @@
 """streaming/epochs.run_epochs: the exactly-once epoch protocol every
 marker loop runs on, checked once here under a crash at each step of
-an epoch, plus the marker sweep's keep/delete rules."""
+an epoch, plus the marker sweep's keep/delete rules; and
+streaming/epochs.replay_store, the catalog's once-per-corpus replay
+harness, under a crash mid-replay."""
 
 from __future__ import annotations
 
@@ -9,11 +11,13 @@ import os
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from machine_downtime_monitor_on_aws_spark import fsio
 from machine_downtime_monitor_on_aws_spark.session import barrier, persistent_rdd_ids
 from machine_downtime_monitor_on_aws_spark.streaming.epochs import (
     checkpoint_sink_token,
+    replay_store,
     run_epochs,
     write_epoch_partition,
 )
@@ -136,3 +140,68 @@ def test_run_epochs_sweep_keeps_bookkeeping(spark, tmp_path):
     assert not names & set(foreign)
     assert set(kept) <= names
     assert _markers(marker_dir) == [f"{token}-{N_BATCHES - 1}"]
+
+
+def _replay(spark, ident: str, colds: list[int], crash_epoch: int | None = None):
+    """Replay 12 rows in three arrival epochs (k % 3) through
+    run_epochs into ``{root}/out``; the body raises in arrival epoch
+    ``crash_epoch``."""
+
+    def cold(root: str):
+        colds.append(1)
+        df = spark.createDataFrame([(k, f"r{k}") for k in range(12)], SCHEMA)
+        return [df.filter(F.col("k") % 3 == ep) for ep in range(3)]
+
+    def start(source, root: str, ep: int):
+        def body(batch_df, epoch_id, epoch_val):
+            if ep == crash_epoch:
+                raise RuntimeError("injected crash")
+            write_epoch_partition(batch_df, f"{root}/out", epoch_val)
+
+        return run_epochs(source, f"{root}/ckpt", "t", body)
+
+    return replay_store(spark, "unitreplay", ident, SCHEMA, cold, start)
+
+
+def _sink_rows(spark, root: str) -> list[tuple]:
+    out = spark.read.schema(f"{SCHEMA}, __epoch_id STRING").parquet(f"{root}/out")
+    return sorted(
+        (r.k, r.v, int(r["__epoch_id"].rsplit("-", 1)[1])) for r in out.collect()
+    )
+
+
+def test_replay_store_crash_then_rerun_matches_clean_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A replay whose stream raises in arrival epoch 1 leaves no
+    _REPLAY_DONE; the rerun wipes the partial root (a file dropped
+    there is gone) and ends with the sink an uncrashed replay writes,
+    each row once in its arrival epoch. A further call is warm: no
+    cold preparation, no restage."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ident = "src:1:2:unitreplay:v1"
+    root = fsio.tmp_store_path("unitreplay", ident)
+    colds: list[int] = []
+    with pytest.raises(Exception, match="injected crash"):
+        _replay(spark, ident, colds, crash_epoch=1)
+    assert not os.path.exists(f"{root}/_REPLAY_DONE")
+    staged = sorted(n for n in os.listdir(f"{root}/in") if not n.startswith("."))
+    assert staged == ["e0_0.json", "e1_0.json"]
+    leftover = os.path.join(root, "leftover")
+    with open(leftover, "w") as f:
+        f.write("partial")
+
+    assert _replay(spark, ident, colds) == root
+    assert os.path.exists(f"{root}/_REPLAY_DONE")
+    assert not os.path.exists(leftover)
+    clean = _replay(spark, "src:1:2:unitreplay:v1:clean", colds)
+    assert clean != root
+    got = _sink_rows(spark, root)
+    assert got == _sink_rows(spark, clean)
+    assert got == sorted((k, f"r{k}", k % 3) for k in range(12))
+
+    assert len(colds) == 3
+    assert _replay(spark, ident, colds) == root
+    assert len(colds) == 3

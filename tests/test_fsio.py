@@ -353,6 +353,79 @@ def test_publish_dir_refuses_when_record_cannot_step_aside(
     assert not fsio.exists(spark, staged)
 
 
+def _store_dirs(tmp_path, family: str) -> list[str]:
+    return sorted(
+        n for n in os.listdir(tmp_path) if n.startswith(f"spark_graft_{family}_")
+    )
+
+
+def test_build_if_absent_builds_once_then_serves_warm(
+    spark, tmp_path, monkeypatch
+):
+    """The first call builds under a .build-* sibling and publishes
+    it with a _STORE_OK record; the second call runs no build and
+    makes exactly one exists-probe, of the commit record."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    builds: list[str] = []
+
+    def build(staged: str) -> None:
+        builds.append(staged)
+        fsio.write_text(spark, f"{staged}/data.txt", "payload")
+
+    ident = "src:1:2:unitbuild:v1"
+    path = fsio.build_if_absent(spark, "unitbuild", ident, build)
+    assert path == fsio.tmp_store_path("unitbuild", ident)
+    assert len(builds) == 1 and builds[0].startswith(f"{path}.build-")
+    assert fsio.read_text(spark, f"{path}/data.txt") == "payload"
+    assert fsio.exists(spark, f"{path}/_STORE_OK")
+    assert _store_dirs(tmp_path, "unitbuild") == [os.path.basename(path)]
+
+    probes: list[str] = []
+    real_exists = fsio.exists
+
+    def counting_exists(spark_, p):
+        probes.append(p)
+        return real_exists(spark_, p)
+
+    monkeypatch.setattr(fsio, "exists", counting_exists)
+    assert fsio.build_if_absent(spark, "unitbuild", ident, build) == path
+    assert len(builds) == 1
+    assert probes == [f"{path}/_STORE_OK"]
+
+
+def test_build_if_absent_raising_build_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A build that raises (here after writing its own commit record)
+    leaves neither a published store nor its staged directory, and
+    the next call builds from scratch."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ident = "src:1:2:unitfail:v1"
+
+    def failing(staged: str) -> None:
+        fsio.write_text(spark, f"{staged}/params.json", "{}")
+        raise RuntimeError("injected build failure")
+
+    with pytest.raises(RuntimeError, match="injected build failure"):
+        fsio.build_if_absent(
+            spark, "unitfail", ident, failing, ok_name="params.json"
+        )
+    assert _store_dirs(tmp_path, "unitfail") == []
+
+    path = fsio.build_if_absent(
+        spark, "unitfail", ident,
+        lambda staged: fsio.write_text(spark, f"{staged}/params.json", "{}"),
+        ok_name="params.json",
+    )
+    assert fsio.read_text(spark, f"{path}/params.json") == "{}"
+    assert not fsio.exists(spark, f"{path}/_STORE_OK")
+    assert _store_dirs(tmp_path, "unitfail") == [os.path.basename(path)]
+
+
 def test_sweep_stale_stores_reclaims_unregistered_generations(
     spark, tmp_path, monkeypatch
 ):

@@ -879,12 +879,34 @@ def test_retrieval_consumers_read_only_store_slivers(spark):
     assert "documents.parquet" in plan_of(spark, "bm25_top_docs")
 
 
-def test_store_idents_carry_version_tokens():
-    """Every persisted-store identity string must carry a name:vN
-    version token (r10 ADVICE #3): a trainer/tokenizer semantics
-    change bumps the token instead of silently serving a stale /tmp
-    store keyed only on corpus identity. Scans the plans sources for
-    ident f-strings built from the corpus stat triple."""
+def test_store_ident_requires_version_token(tmp_path):
+    """A store identity must open with a name:vN version token (r10
+    ADVICE #3): a trainer/tokenizer semantics change bumps the token
+    instead of silently serving a stale store keyed only on corpus
+    identity."""
+    import os
+
+    from machine_downtime_monitor_on_aws_spark import fsio
+
+    src = tmp_path / "corpus.parquet"
+    src.write_bytes(b"x" * 7)
+    st = os.stat(src)
+    assert fsio.store_ident(str(src), "shx:v2:3") == (
+        f"{src}:{st.st_mtime_ns}:7:shx:v2:3"
+    )
+    assert fsio.store_ident(str(src), "pcep:v10").endswith(":pcep:v10")
+    for key in ("shx", "shx:2:v3", "shx:v", "shx:vx:3", ":v2", "shx:v2x", "v2"):
+        with pytest.raises(ValueError, match="name:vN"):
+            fsio.store_ident(str(src), key)
+
+
+def test_plans_route_stores_through_helpers():
+    """Every store a catalog query builds goes through the shared
+    protocol: identity via fsio.store_ident, staged stores via
+    fsio.build_if_absent, replays via streaming/epochs.replay_store.
+    A source guard over plans/ keeps pasted copies of the protocol
+    out, and the identity count keeps the guard from passing
+    vacuously if the call sites drift."""
     import os
     import re
 
@@ -893,20 +915,17 @@ def test_store_idents_carry_version_tokens():
         "machine_downtime_monitor_on_aws_spark",
         "plans",
     )
-    pat = re.compile(r'st\.st_size}(:[^"\n]*)"')
+    banned = ("os.stat(", "tmp_store_path(", "publish_dir(", "_REPLAY_DONE")
     bad = []
-    n = 0
+    n_idents = 0
     for fname in sorted(os.listdir(plans_dir)):
         if not fname.endswith(".py"):
             continue
         src = open(os.path.join(plans_dir, fname)).read()
-        for m in pat.finditer(src):
-            n += 1
-            suffix = m.group(1)
-            if not re.search(r":v\d+", suffix):
-                bad.append((fname, suffix))
-    assert n >= 15, f"ident scan found only {n} idents - pattern drifted?"
-    assert not bad, f"store idents missing a version token: {bad}"
+        bad += [(fname, b) for b in banned if b in src]
+        n_idents += len(re.findall(r"\bfsio\.store_ident\(", src))
+    assert not bad, f"store protocol pasted into plans/: {bad}"
+    assert n_idents >= 20, f"only {n_idents} store_ident call sites"
 
 
 def test_exactsubstr_plan_single_pass_three_exchanges(spark):
